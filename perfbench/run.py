@@ -1,6 +1,6 @@
 """Benchmark entry point.
 
-    python3 perfbench/run.py --workload serve --seed 1 --seconds 15 --trace 0
+    python3 perfbench/run.py --workload serve --seed 1 --seconds 30 --trace 0
 
 Runs one workload from the root of a checkout and prints, as its last
 stdout line, one JSON object ``{"correct", "attempted", "failed",
@@ -10,8 +10,9 @@ Every operation is checked against a DuckDB answer or, for the codecs,
 against its own input; a wrong answer counts as failed.
 
 Workloads (see serve.py and codec.py):
-  serve  Spark at local[min(4, nproc)]: an ingest stream builds the
-         store in set-up, then rounds of a fixed read mix are timed.
+  serve  Spark at local[1], the whole process tree bound to one CPU
+         (see runtime.pin_to_one_cpu): an ingest stream builds the
+         store in set-up, then point lookups are timed.
   codec  the segment codecs alone, no Spark, one thread.
 
 End-to-end metrics (``--trace 0``), the same names on every workload:
@@ -20,10 +21,6 @@ End-to-end metrics (``--trace 0``), the same names on every workload:
   p50_ms              median latency of the primary request
                       (serve: point lookup; codec: encode + decode of
                       one segment)
-  ops_per_s           operations completed per second, closed loop
-  mb_s                raw MB per second through the data path (serve:
-                      appended by the ingest stream; codec: through
-                      encode + decode)
   bytes_per_raw_byte  stored bytes per raw Arrow byte (serve: the store
                       directory; codec: encoded payloads)
   peak_rss_mb         peak summed PSS of the process tree, from /proc

@@ -23,8 +23,19 @@ WORK_ROOT = os.path.join(ROOT, ".perfbench_work")
 
 
 def cores() -> int:
-    """Spark's local[N]: the CPUs this process may use, at most 4."""
-    return max(1, min(4, len(os.sched_getaffinity(0))))
+    """Spark's local[N]: one task slot (see `pin_to_one_cpu`)."""
+    return 1
+
+
+def pin_to_one_cpu() -> None:
+    """Bind this process, and so every process it starts from now on
+    (Spark's JVM, its Python workers), to one CPU: the highest-numbered
+    one it may use. On a small VM of a shared host, a run spread over
+    several CPUs has its threads descheduled by the hypervisor (CPU
+    steal) whenever the host is busy, and Spark's many cross-thread
+    hand-offs turn each such stall into a much longer wait; on one CPU
+    it queues behind its own work only."""
+    os.sched_setaffinity(0, {max(os.sched_getaffinity(0))})
 
 
 _T0 = time.perf_counter()
@@ -129,7 +140,7 @@ class RssSampler:
     Python process, Spark's Python workers) as summed PSS, sampled from
     /proc every `interval` seconds."""
 
-    def __init__(self, interval: float = 0.2):
+    def __init__(self, interval: float = 0.5):
         self.interval = interval
         self.peak = 0
         self._stop = threading.Event()
@@ -157,6 +168,7 @@ class RssSampler:
 def start_spark(work: WorkDir, n_cores: int):
     """local[n_cores] session with every scratch path inside `work` and
     every socket on 127.0.0.1."""
+    pin_to_one_cpu()
     tmp = work.sub("tmp")
     os.environ["TMPDIR"] = tmp
     os.environ["PYTHONPATH"] = os.pathsep.join(
@@ -173,7 +185,15 @@ def start_spark(work: WorkDir, n_cores: int):
         f"--conf spark.sql.warehouse.dir={work.sub('spark-warehouse')}",
         "--conf spark.driver.extraJavaOptions="
         f"'-Djava.io.tmpdir={tmp} -XX:-UsePerfData"
-        f" -Dderby.system.home={work.sub('derby')}'",
+        f" -Dderby.system.home={work.sub('derby')}"
+        # a run's JVM lives about a minute and a half, too short for the
+        # C2 compiler to settle: with it the read paths keep speeding up
+        # through the timed region, at a pace set by how much CPU its
+        # compiler threads get. C1 alone settles within a few
+        # operations; serial GC needs no threads of its own. The heap
+        # starts at its full size (SPARK_DRIVER_MEMORY), so its peak
+        # resident size does not hinge on when the JVM decided to grow it.
+        " -XX:TieredStopAtLevel=1 -XX:+UseSerialGC -Xms2g'",
         "--conf spark.driver.host=127.0.0.1",
         "--conf spark.driver.bindAddress=127.0.0.1",
         "--conf spark.ui.showConsoleProgress=false",

@@ -1,36 +1,33 @@
 """`serve`: the store's write path in set-up, then read traffic.
 
-Set-up ingests the seeded transcript table as an ingest stream: for each
-of several `ts`-window batches (one conversation spans several batches)
-`add_range` -> one `query_by_value(conv_id, include_pending=True)` on a
-key of that batch (a cache-cold read: every write invalidates the
-store's metadata memo) -> `close`; then `compact`, so the manifest holds
-many rowgroups. The first batch warms the write path up; the rest of
-the stream is timed on its own (`mb_s`).
+Set-up builds the store from the seeded transcript table as an ingest
+stream: for each of several `ts`-window batches (one conversation spans
+several batches) `add_range` -> `close`; then `compact`, so the manifest
+holds many rowgroups. Its cost is part of `setup_s`. The traced run also
+makes one `query_by_value(conv_id, include_pending=True)` per batch, on
+a key of that batch, before its `close` (a cache-cold read: every write
+invalidates the store's metadata memo).
 
-The timed region is a closed loop with one client. After one untimed
-warm-up round it runs whole rounds of a fixed operation mix whose keys
-and parameters are drawn from the seed:
-
-* point `query_by_value("conv_id", k)`, Zipf key popularity, about one
-  in ten of them for an absent key;
-* `query_by_in` with 8 keys, a conjunctive `query_where`, `topk`,
-  `group_agg`, `quantile`, `aggregate`;
-* full and projected `rows()` exports, forced by an order-insensitive
-  checksum aggregate (the decode runs in the executors; one row
-  returns).
+The timed region is a closed loop with one client: a seeded sequence of
+point lookups `query_by_value("conv_id", k)` (Zipf key popularity,
+every tenth of them for an absent key), after a few untimed ones.
+`p50_ms` is their median latency.
 
 Every operation is checked against DuckDB over the same input.
 
-The traced run (`--trace 1`) traces the ingest stream and one round,
-runs a row-level `delete_where` and `upsert`, and probes plans,
-sources and operators directly; see `_traced_reads`.
+The traced run (`--trace 1`) traces the ingest stream and one round of
+the full read mix (point lookups, `query_by_in` with 8 keys, a
+conjunctive `query_where`, `topk`, `group_agg`, `quantile`,
+`aggregate`, full and projected exports), runs a row-level
+`delete_where` and `upsert`, and probes plans, sources and operators
+directly; see `_traced_reads`.
 """
 
 from __future__ import annotations
 
 import contextlib
 import datetime as dt
+import itertools
 import os
 import time
 
@@ -44,9 +41,11 @@ SIZES = datagen.Sizes(users=150, events=12_000, docs=600)
 N_BATCHES = 3
 NUM_ROWGROUPS = 8
 ROWS_PER_SEGMENT = 1024
-POINTS_PER_ROUND = 8
-OVERHEAD_PAIRS = 4         # traced-run lookups also run untraced
-ABSENT_SHARE = 0.1
+POINTS_PER_ROUND = 4       # point lookups in the traced run's round
+STREAM_OPS = 60            # timed lookups drawn (then they start over)
+WARM_OPS = 3               # untimed lookups before them
+OVERHEAD_PAIRS = 2         # traced-run lookups also run untraced
+ABSENT_EVERY = 10
 QUANTILES = [0.0, 0.1, 0.5, 0.9, 0.99, 1.0]
 PROJECTION = ["conv_id", "turn_idx", "ts"]
 _COLS_SQL = ", ".join(TRANSCRIPT_COLS)
@@ -171,32 +170,58 @@ class ServeSetup:
         return checksum(self.spark.createDataFrame(tbl), cols), tbl.nbytes
 
 
-def make_rounds(s: ServeSetup, n_rounds: int) -> list[list[Op]]:
-    """Seeded operation rounds; each holds the same mix of kinds."""
-    rng = s.rng
-    keys = list(s.keys)
-    rng.shuffle(keys)
-    zipf = 1.0 / np.arange(1, len(keys) + 1) ** 1.1
-    zipf /= zipf.sum()
-    lo, hi = s.ts_range
-    q = s.oracle.digest
-    exports = {"rows": s.export_expected(list(TRANSCRIPT_COLS)),
-               "rows_proj": s.export_expected(PROJECTION)}
+class OpMaker:
+    """Seeded read operations over the built store, each with the answer
+    DuckDB gives for it."""
 
-    def pick(n: int) -> list[str]:
-        return [keys[i] for i in rng.choice(len(keys), n, p=zipf)]
+    def __init__(self, s: ServeSetup):
+        self.s = s
+        self.rng = s.rng
+        self.n_points = 0
+        self.keys = list(s.keys)
+        self.rng.shuffle(self.keys)
+        zipf = 1.0 / np.arange(1, len(self.keys) + 1) ** 1.1
+        self.zipf = zipf / zipf.sum()
 
-    rounds = []
-    for _ in range(n_rounds):
-        ops: list[Op] = []
-        for k in pick(POINTS_PER_ROUND):
-            if rng.random() < ABSENT_SHARE:
-                k = f"c9{int(rng.integers(0, 10**11)):011d}"  # absent
-            ops.append(Op(
-                "point", lambda st, k=k: st.query_by_value("conv_id", k),
-                small_result, q(f"SELECT {_COLS_SQL} FROM transcripts "
-                                "WHERE conv_id = ?", [k]), probe=k))
-        in_keys = pick(8)
+    def pick(self, n: int) -> list[str]:
+        return [self.keys[i]
+                for i in self.rng.choice(len(self.keys), n, p=self.zipf)]
+
+    def point(self) -> Op:
+        """`query_by_value("conv_id", k)`: a Zipf key, or for every
+        ABSENT_EVERY-th lookup an absent one. An absent key is cheaper
+        (every rowgroup is pruned), so a fixed place rather than a
+        random draw keeps the share of them in a run the same on every
+        seed."""
+        self.n_points += 1
+        k = self.pick(1)[0]
+        if self.n_points % ABSENT_EVERY == ABSENT_EVERY // 2:
+            k = f"c9{int(self.rng.integers(0, 10**11)):011d}"  # absent
+        return Op("point", lambda st, k=k: st.query_by_value("conv_id", k),
+                  small_result, self.s.oracle.digest(
+                      f"SELECT {_COLS_SQL} FROM transcripts "
+                      "WHERE conv_id = ?", [k]), probe=k)
+
+    def export(self, kind: str) -> Op:
+        """`rows()` (full) or `rows(PROJECTION)` (rows_proj), forced by
+        an order-insensitive checksum."""
+        cols = list(TRANSCRIPT_COLS) if kind == "rows" else PROJECTION
+        expected, nbytes = self.s.export_expected(cols)
+        return Op(kind, lambda st, c=cols, full=kind == "rows":
+                  st.rows(None if full else c),
+                  lambda df, c=cols: checksum(df, c), expected, nbytes)
+
+    def stream(self, n: int) -> list[Op]:
+        """The timed sequence: `n` point lookups."""
+        return [self.point() for _ in range(n)]
+
+    def round(self) -> list[Op]:
+        """The full mix, shuffled: POINTS_PER_ROUND point lookups and one
+        op of every other kind."""
+        s, rng, q = self.s, self.rng, self.s.oracle.digest
+        lo, hi = s.ts_range
+        ops = [self.point() for _ in range(POINTS_PER_ROUND)]
+        in_keys = self.pick(8)
         ops.append(Op(
             "in", lambda st, ks=in_keys: st.query_by_in("conv_id", ks),
             small_result,
@@ -235,17 +260,8 @@ def make_rounds(s: ServeSetup, n_rounds: int) -> list[list[Op]]:
                 "col_name", "n_rows", "n_values", "n_nulls", "min_long",
                 "max_long"),
             small_result, q(_AGGREGATE_SQL)))
-        for kind, cols in (("rows", list(TRANSCRIPT_COLS)),
-                           ("rows_proj", PROJECTION)):
-            expected, nbytes = exports[kind]
-            ops.append(Op(
-                kind,
-                lambda st, c=cols, full=kind == "rows":
-                    st.rows(None if full else c),
-                lambda df, c=cols: checksum(df, c), expected, nbytes))
-        order = rng.permutation(len(ops))
-        rounds.append([ops[i] for i in order])
-    return rounds
+        ops += [self.export("rows"), self.export("rows_proj")]
+        return [ops[i] for i in rng.permutation(len(ops))]
 
 
 def _naive(v: dt.datetime) -> dt.datetime:
@@ -283,24 +299,21 @@ def run_ops(s: ServeSetup, ops, counters=None, tracer=None, written=None):
     return results
 
 
-def timed_loop(s: ServeSetup, rounds, seconds: float, counters=None,
-               tracer=None):
-    """Whole rounds until `seconds` have passed or `rounds` run out;
-    returns (results, wall)."""
+def timed_loop(s: ServeSetup, ops, seconds: float) -> list:
+    """Run `ops` in order, from the start again when they run out, until
+    `seconds` have passed."""
     results = []
     t0 = time.perf_counter()
-    for ops in rounds:
-        results += run_ops(s, ops, counters, tracer)
+    for op in itertools.cycle(ops):
+        results.append(run_op(op, s.store))
         if time.perf_counter() - t0 >= seconds:
-            break
-    return results, time.perf_counter() - t0
+            return results
 
 
-def e2e_metrics(s: ServeSetup, results, wall: float) -> dict:
+def e2e_metrics(s: ServeSetup, results) -> dict:
     return {
         "p50_ms": runtime.median(
             r.total_s for r in results if r.kind == "point") * 1e3,
-        "ops_per_s": len(results) / wall,
         "bytes_per_raw_byte": runtime.dir_bytes(s.store_root) / s.raw_bytes,
     }
 
@@ -323,8 +336,13 @@ def _run(s: ServeSetup, seconds: float, trace: bool, t_start: float):
     counters = runtime.SparkCounters(s.spark) if trace else None
     written: dict[str, int] | None = {} if trace else None
     layer: dict[str, float] = {}
-    # the first batch warms the write path up; the rest is timed
+    # the first batch warms the write path up; the rest is what the
+    # traced run times. Untraced runs leave the fresh reads out: they
+    # only build the store.
     warm, ingest = s.ingest_ops()
+    if not trace:
+        warm, ingest = ([op for op in ops if op.kind != "fresh_read"]
+                        for ops in (warm, ingest))
     results = run_ops(s, warm)
     with (layers.traced_store_stack(tracer) if trace
           else contextlib.nullcontext()):
@@ -334,29 +352,23 @@ def _run(s: ServeSetup, seconds: float, trace: bool, t_start: float):
     results += ingested
     runtime.log("serve: ingest stream done")
     appended = sum(op.raw_bytes for op in ingest)
-    rounds = make_rounds(s, 2)
-    # untimed warm-up, one op of each kind: Spark's JVM is still
-    # compiling the planning paths, and the first lookups run ~2x
-    # slower than the steady state. The traced run, which must stay
-    # well inside its time limit, warms up with one lookup and one
-    # export only.
-    kinds = (("point", "rows") if trace
-             else list(dict.fromkeys(op.kind for op in rounds[0])))
-    results += run_ops(s, [next(op for op in rounds[0] if op.kind == k)
-                           for k in kinds])
+    maker = OpMaker(s)
+    # untimed warm-up: Spark's JVM is still compiling the read paths,
+    # and the first lookups run slower than the steady state
+    results += run_ops(s, maker.stream(WARM_OPS))
     setup_s = time.perf_counter() - t_start
     runtime.log("serve: warm-up done")
     if trace:
         layer.update(layers.op_layers(ingested))
         layer.update(layers.ingest_layers(tracer, written, appended))
-        results += _traced_reads(s, rounds[1], tracer, counters, layer)
+        layer["store.ingest.mb_s"] = appended / 1e6 / ingest_wall
+        results += _traced_reads(s, maker.round(), tracer, counters, layer)
         tracer.dump(runtime.spans_path(f"serve-seed{s.seed}.jsonl"))
         return len(results), sum(not r.ok for r in results), {}, layer
-    timed, wall = timed_loop(s, rounds[1:], seconds)
-    runtime.log("serve: timed region done")
+    timed = timed_loop(s, maker.stream(STREAM_OPS), seconds)
+    runtime.log(f"serve: timed region done, {len(timed)} ops")
     results += timed
-    e2e = dict(e2e_metrics(s, timed, wall), setup_s=setup_s,
-               mb_s=appended / 1e6 / ingest_wall)
+    e2e = dict(e2e_metrics(s, timed), setup_s=setup_s)
     return len(results), sum(not r.ok for r in results), e2e, layer
 
 

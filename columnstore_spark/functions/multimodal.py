@@ -330,7 +330,7 @@ def ppm_decode_features(media: DataFrame,
     Both paths produce identical rows (pinned by a parity test)."""
     row_bytes = width * 3
 
-    def decode_one(doc_id, blob):
+    def decode_one(blob):
         h = max(len(blob) // row_bytes, 1)
         body = blob[:h * row_bytes].ljust(h * row_bytes, b"\x00")
         header = f"P6\n{width} {h}\n255\n".encode()
@@ -355,7 +355,7 @@ def ppm_decode_features(media: DataFrame,
             ids, ws, hs = [], [], []
             sums = ([], [], [])
             for doc_id, blob in zip(pdf["doc_id"], pdf["payload"]):
-                w, h, r, g, b = decode_one(doc_id, blob)
+                w, h, r, g, b = decode_one(blob)
                 ids.append(doc_id)
                 ws.append(w)
                 hs.append(h)
@@ -388,7 +388,7 @@ def ppm_decode_features(media: DataFrame,
                 flat.reshape(-1, 3).astype(np.int64),
                 offsets[:-1] // 3, axis=0)
             # the real parser anchors the batch: image 0 must agree
-            w0, h0, r0, g0, b0 = decode_one(ids[0], blobs[0])
+            w0, h0, r0, g0, b0 = decode_one(blobs[0])
             if (w0, h0) != (width, int(heights[0])) or \
                     (r0, g0, b0) != tuple(int(v) for v in sums[0]):
                 raise ValueError(

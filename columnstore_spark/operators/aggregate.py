@@ -38,6 +38,8 @@ from collections.abc import Iterator
 import numpy as np
 import pyarrow as pa
 from pyspark.sql import Column, DataFrame
+from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..plans.predicates import (
     _exact_pred_cond,
@@ -45,9 +47,6 @@ from ..plans.predicates import (
     normalize_where,
     prune_conjunctive,
 )
-from pyspark.sql import functions as F
-from pyspark.sql import types as T
-
 from ..plans.pruning import (_PLAIN_INT_LOGICALS, _ASCII_RE,
                              _with_typed_bounds)
 

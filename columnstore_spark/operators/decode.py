@@ -50,26 +50,34 @@ _OUT_BATCH_ROWS = 1 << 16
 
 
 def schema_from_segments(segments: DataFrame) -> T.StructType:
-    """Reconstruct the original Spark schema from segment metadata.
+    """Reconstruct the original Spark schema from segment (or manifest)
+    metadata — one small collect; the facade reads the same schema off
+    its driver-side manifest snapshot instead (`schema_from_manifest`)."""
+    return schema_from_manifest(
+        segments.select("column", "col_idx", "logical_type")
+        .distinct().toArrow())
+
+
+def schema_from_manifest(manifest: pa.Table) -> T.StructType:
+    """The original Spark schema from manifest rows in the driver.
 
     Deduplicated BY NAME (first col_idx wins): under schema evolution
     heterogeneous batches may assign a column different positions, and
     a duplicated field would make the decode zip ambiguous."""
-    cols = (segments.select("column", "col_idx", "logical_type")
-            .distinct().collect())
+    cols = {(r["col_idx"], r["column"], r["logical_type"]) for r in
+            manifest.select(["column", "col_idx", "logical_type"])
+            .to_pylist()}
     fields, seen = [], set()
-    for r in sorted(cols, key=lambda r: r["col_idx"]):
-        if r["column"] in seen:
+    for _idx, name, logical in sorted(cols):
+        if name in seen:
             continue
-        seen.add(r["column"])
-        fields.append(r)
-    # every field is declared nullable: the decode output is compared
-    # against external (oracle/parquet) results whose fields are
-    # nullable, and Arrow batches with zero nulls satisfy it trivially
-    return T.StructType([
-        T.StructField(r["column"], _spark_type_of(r["logical_type"]), True)
-        for r in fields
-    ])
+        seen.add(name)
+        # every field is declared nullable: the decode output is
+        # compared against external (oracle/parquet) results whose
+        # fields are nullable, and Arrow batches with zero nulls
+        # satisfy it trivially
+        fields.append(T.StructField(name, _spark_type_of(logical), True))
+    return T.StructType(fields)
 
 
 def _rowgroup_stage(segments: DataFrame, schema: T.StructType,

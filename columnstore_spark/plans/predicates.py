@@ -20,15 +20,17 @@ would be circular).
 
 NOTE for the next predicate `kind`: TWO consumers dispatch a
 kernel-safe predicate to the encoded matching-gather and must both
-learn a new kind — `store.TranscriptColumnStore.query_where` (picks
-by manifest keep-set SIZE, the most selective safe predicate, and
-always re-applies the full conjunction) and
+learn a new kind — the facade's one probe planner
+(`store.TranscriptColumnStore._probe` via `_decode_matching_pred`:
+picks by manifest keep-set SIZE, the most selective safe predicate,
+and always re-applies the full conjunction) and
 `operators.aggregate.quantiles` (no keep-set sizes at operator level:
 picks by kind preference eq > in > null > range via
 `_kernel_safe_pred`, and skips re-filtering an exact driver). The
-prune switches (`_pred_keep_ids` here, `prune_conjunctive` below) are
-shared; the gather dispatch deliberately is not — the two policies
-use different information.
+keep tests are shared (`pruning.keep_ids` over the facade's manifest
+snapshot, `prune_conjunctive` below over a segments frame); the
+gather dispatch deliberately is not — the two policies use different
+information.
 """
 
 from __future__ import annotations
@@ -37,9 +39,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .pruning import (
-    prune_rowgroup_ids,
-    prune_rowgroup_ids_in,
-    prune_rowgroup_ids_null,
     prune_rowgroups_by_null,
     prune_rowgroups_by_range,
     prune_rowgroups_by_value,
@@ -141,22 +140,6 @@ def _exact_pred_cond(norm, any_mode: bool):
     return cond
 
 
-def _pred_keep_ids(m: DataFrame, col: str, kind: str, payload, lt: str):
-    """Manifest keep-set (rowgroup id list) for one normalized
-    predicate, or None when this column/probe is unprunable in id-list
-    form. The single switch behind query_where's intersection AND
-    explain_where's truth table — one code path, no drift."""
-    if kind == "null":
-        return prune_rowgroup_ids_null(m, col)
-    if kind == "in":
-        return prune_rowgroup_ids_in(m, col, payload, logical_type=lt)
-    if kind == "range":
-        return prune_rowgroup_ids(m, col, payload[0], payload[1],
-                                  False, logical_type=lt)
-    return prune_rowgroup_ids(m, col, payload, payload, True,
-                              logical_type=lt)
-
-
 def normalize_where(segments: DataFrame, where, where_logical=None,
                     where_logicals=None):
     """Shared `where=` front door for the filtered analytics pushdowns
@@ -186,7 +169,10 @@ def normalize_where(segments: DataFrame, where, where_logical=None,
         rows = (segments.where(F.col("column").isin(missing))
                 .select("column", "logical_type").distinct().collect())
         lts.update({r["column"]: r["logical_type"] for r in rows})
-    return [_norm_one_pred(c, p, lts.get(c) or "") for c, p in pairs]
+    for c, _p in pairs:
+        if not lts.get(c):
+            raise ValueError(f"unknown column {c!r}")
+    return [_norm_one_pred(c, p, lts[c]) for c, p in pairs]
 
 
 def prune_conjunctive(segments: DataFrame, norm) -> DataFrame:

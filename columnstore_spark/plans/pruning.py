@@ -341,28 +341,22 @@ _ISIN_CAP = 10_000
 
 def prune_rowgroup_ids(manifest: DataFrame, column: str, lo, hi, eq: bool,
                        logical_type: str | None = None) -> list[int] | None:
-    """Evaluate the pruning predicate on MANIFEST rows (metadata only —
-    no payload column anywhere near the scan) and return the kept
-    rowgroup ids, or None when pruning cannot apply or the id set is
-    too large for an IN-list plan.
+    """Kept rowgroup ids for one equality/range probe over a manifest
+    (or segments) FRAME, or None when pruning cannot apply or the id
+    set is too large for an IN-list plan: the frame's metadata columns
+    come to the driver once (`toArrow`) and `keep_ids` decides there.
+    The facade never calls this — it evaluates `keep_ids` on its
+    driver-side snapshot with zero Spark jobs; this wrapper serves
+    callers holding a frame.
 
     The caller turns the ids into `WHERE rowgroup_id IN (...)` on the
     payload-bearing segments table, which reaches the parquet scan as a
     pushed filter — whole parquet row groups of non-matching segments
-    are never read, the scan-level analogue of the reference skipping
-    non-matching segments. The driver-side list is bounded by
-    `_ISIN_CAP`; larger keep-sets fall back to the semi-join form
-    (`prune_rowgroups_by_*`)."""
-    cond = _keep_cond(lo, hi, eq, logical_type)
-    if cond is None:
-        return None
-    rows = (_with_typed_bounds(manifest)
-            .where((F.col("column") == column) & cond)
-            .select("rowgroup_id").distinct().limit(_ISIN_CAP + 1)
-            .collect())
-    if len(rows) > _ISIN_CAP:
-        return None
-    return sorted(r["rowgroup_id"] for r in rows)
+    are never read. Past `_ISIN_CAP` ids callers fall back to the
+    semi-join form (`prune_rowgroups_by_*`)."""
+    return _capped(keep_ids(manifest_rows(manifest), column,
+                            "eq" if eq else "range",
+                            lo if eq else (lo, hi), logical_type))
 
 
 def prune_rowgroups_by_value(segments: DataFrame, column: str, value,
@@ -421,19 +415,11 @@ def prune_rowgroup_ids_in(manifest: DataFrame, column: str, values,
                           logical_type: str | None = None,
                           ) -> list[int] | None:
     """IN-list analogue of `prune_rowgroup_ids`: kept rowgroup ids for
-    `column IN (values)` evaluated on manifest rows (bounds + bloom
-    per probe value, OR-combined), or None when pruning can't apply or
-    the keep-set exceeds the IN-plan cap."""
-    cond = _keep_cond_in(values, logical_type)
-    if cond is None:
-        return None
-    rows = (_with_typed_bounds(manifest)
-            .where((F.col("column") == column) & cond)
-            .select("rowgroup_id").distinct().limit(_ISIN_CAP + 1)
-            .collect())
-    if len(rows) > _ISIN_CAP:
-        return None
-    return sorted(r["rowgroup_id"] for r in rows)
+    `column IN (values)` (bounds + bloom per probe value, OR-combined),
+    or None when pruning can't apply or the keep-set exceeds the
+    IN-plan cap."""
+    return _capped(keep_ids(manifest_rows(manifest), column, "in",
+                            list(values), logical_type))
 
 
 def prune_rowgroups_by_values(segments: DataFrame, column: str, values,
@@ -453,16 +439,10 @@ def prune_rowgroup_ids_null(manifest: DataFrame,
                             column: str) -> list[int] | None:
     """Kept rowgroup ids for `column IS NULL`: the manifest's exact
     per-segment `n_nulls` (every logical type carries it) makes this
-    the one predicate that is always fully prunable — a rowgroup
-    without a single null never decodes. None only when the keep-set
-    exceeds the IN-plan cap (callers fall back to the semi-join)."""
-    rows = (manifest
-            .where((F.col("column") == column) & (F.col("n_nulls") > 0))
-            .select("rowgroup_id").distinct().limit(_ISIN_CAP + 1)
-            .collect())
-    if len(rows) > _ISIN_CAP:
-        return None
-    return sorted(r["rowgroup_id"] for r in rows)
+    the one predicate that is always fully prunable. None only when
+    the keep-set exceeds the IN-plan cap."""
+    return _capped(keep_ids(manifest_rows(manifest), column, "null",
+                            None, None))
 
 
 def prune_rowgroups_by_null(segments: DataFrame, column: str) -> DataFrame:
@@ -501,21 +481,11 @@ def _keep_cond_any(preds) -> Column | None:
 
 def prune_rowgroup_ids_any(manifest: DataFrame,
                            preds) -> list[int] | None:
-    """Kept rowgroup ids for an OR of predicates (`_keep_cond_any`) —
-    the UNION of the per-predicate keep-sets, evaluated in one manifest
-    pass. None when pruning can't apply (any branch unprunable) or the
-    keep-set exceeds the IN-plan cap; callers then fall back to
-    `prune_rowgroups_any`."""
-    cond = _keep_cond_any(preds)
-    if cond is None:
-        return None
-    rows = (_with_typed_bounds(manifest)
-            .where(cond)
-            .select("rowgroup_id").distinct().limit(_ISIN_CAP + 1)
-            .collect())
-    if len(rows) > _ISIN_CAP:
-        return None
-    return sorted(r["rowgroup_id"] for r in rows)
+    """Kept rowgroup ids for an OR of predicates — the UNION of the
+    per-predicate keep-sets (`keep_ids_any`). None when pruning can't
+    apply (any branch unprunable) or the keep-set exceeds the IN-plan
+    cap; callers then fall back to `prune_rowgroups_any`."""
+    return _capped(keep_ids_any(manifest_rows(manifest), preds))
 
 
 def prune_rowgroups_any(segments: DataFrame, preds) -> DataFrame:
@@ -524,30 +494,6 @@ def prune_rowgroups_any(segments: DataFrame, preds) -> DataFrame:
     cond = _keep_cond_any(preds)
     if cond is None:
         return segments
-    keep = (_with_typed_bounds(segments)
-            .where(cond)
-            .select("rowgroup_id").distinct())
-    return segments.join(keep, on="rowgroup_id", how="left_semi")
-
-
-def prune_segments_any(manifest: DataFrame, segments: DataFrame,
-                       preds) -> DataFrame:
-    """One-shot disjunctive prune for a caller holding both tables:
-    builds the keep-condition ONCE, tries the id-list plan off the
-    manifest (pushed `rowgroup_id IN (...)` scan filter), and falls
-    back to the semi-join form past `_ISIN_CAP` — without recomputing
-    the condition tree (per-branch bloom hashes included) a second
-    time. No-ops when any branch is unprunable."""
-    cond = _keep_cond_any(preds)
-    if cond is None:
-        return segments
-    rows = (_with_typed_bounds(manifest)
-            .where(cond)
-            .select("rowgroup_id").distinct().limit(_ISIN_CAP + 1)
-            .collect())
-    if len(rows) <= _ISIN_CAP:
-        return segments.where(F.col("rowgroup_id").isin(
-            sorted(r["rowgroup_id"] for r in rows)))
     keep = (_with_typed_bounds(segments)
             .where(cond)
             .select("rowgroup_id").distinct())
@@ -593,3 +539,236 @@ def explain_prune(manifest: DataFrame, column: str, lo, hi, eq: bool,
                        opt(bloomc).alias("bloom_keep"),
                        reason.alias("reason"))
             .orderBy("rowgroup_id"))
+
+
+# -- keep-sets over driver-side manifest rows ---------------------------
+#
+# The same keep semantics as the Column conditions above, evaluated in
+# plain Python over manifest rows already in the driver (the facade's
+# Arrow snapshot, `sources/snapshot.py`): planning a probe launches no
+# Spark job. Every test is three-valued like its SQL twin — True keeps
+# the rowgroup, False or None (SQL NULL) drops it — so both evaluators
+# return the same keep-set (pinned by tests/test_keepset_differential).
+
+#: manifest columns the keep tests read
+MANIFEST_KEEP_COLS = ("rowgroup_id", "column", "logical_type", "n_rows",
+                      "n_nulls", "min_num", "max_num", "min_flt",
+                      "max_flt", "min_repr", "max_repr", "bloom")
+
+
+def manifest_rows(manifest) -> list[dict]:
+    """Manifest (or segments) rows as dicts over MANIFEST_KEEP_COLS —
+    from a pyarrow Table as is, from a Spark frame by one `toArrow` of
+    just those columns (never the payload). Missing columns (manifests
+    predating the typed bounds or blooms) read as None."""
+    if isinstance(manifest, DataFrame):
+        have = set(manifest.columns)
+        manifest = manifest.select(
+            *[c for c in MANIFEST_KEEP_COLS if c in have]).toArrow()
+    have = set(manifest.column_names)
+    cols = [c for c in MANIFEST_KEEP_COLS if c in have]
+    rows = manifest.select(cols).to_pylist()
+    for c in MANIFEST_KEEP_COLS:
+        if c not in have:
+            for r in rows:
+                r[c] = None
+    return rows
+
+
+def _and(*vals):
+    if any(v is False for v in vals):
+        return False
+    return None if any(v is None for v in vals) else True
+
+
+def _or(*vals):
+    if any(v is True for v in vals):
+        return True
+    return None if any(v is None for v in vals) else False
+
+
+def _le(a, b):
+    return None if a is None or b is None else a <= b
+
+
+def _has_values(r) -> bool:
+    """The fallback keep of a segment without bounds: not all-null."""
+    return r["n_nulls"] < r["n_rows"]
+
+
+def _never(_r) -> bool:
+    return False
+
+
+def _num_test(plo: int, phi: int):
+    def test(r):
+        if r["min_num"] is None:
+            return _has_values(r)
+        return _and(_le(r["min_num"], phi), _le(plo, r["max_num"]))
+    return test
+
+
+def _flt_test(plo: float, phi: float):
+    def test(r):
+        if r["min_flt"] is None:
+            return _has_values(r)
+        return _and(_le(r["min_flt"], phi), _le(plo, r["max_flt"]))
+    return test
+
+
+def _str_test(lo: str, hi: str):
+    """Python str order is code point order, the UTF-8 byte order Spark
+    compares strings in; ASCII is `str.isascii` (strictly ASCII, which
+    keeps at least what the Column form's regex keeps)."""
+    def test(r):
+        mn, mx = r["min_repr"], r["max_repr"]
+        if mn is None:
+            return _has_values(r)
+        if not mn.isascii() or (mx is not None and not mx.isascii()):
+            return True
+        capped = None if mx is None else len(mx) >= _REPR_CAP
+        return _and(_le(mn, hi), _or(capped, _le(lo, mx)))
+    return test
+
+
+def _typed_test(logical: str, lo, hi, eq: bool):
+    """`_typed_cond` as a row test; None = cannot prune."""
+    if logical == "string":
+        if not (isinstance(lo, str) and isinstance(hi, str)):
+            return None
+        return _str_test(lo, hi)
+    if logical in ("float32", "float64"):
+        plo, phi = _float_probe(lo), _float_probe(hi)
+        if plo is None or phi is None:
+            return None
+        return _flt_test(plo, phi)
+    side_lo, side_hi = ("eq", "eq") if eq else ("lo", "hi")
+    plo = _to_stored_num(logical, lo, side_lo)
+    phi = plo if eq else _to_stored_num(logical, hi, side_hi)
+    if plo is CANNOT_MATCH or phi is CANNOT_MATCH:
+        return _never
+    if plo is None or phi is None:
+        return None
+    return _num_test(plo, phi)
+
+
+def _dispatch(tests: dict):
+    """Row test picking by the row's own logical type; rows of any
+    other logical are kept. None when no logical has a test."""
+    if not tests:
+        return None
+
+    def test(r):
+        t = tests.get(r["logical_type"])
+        return True if t is None else t(r)
+    return test
+
+
+def _generic_test(lo, hi, eq: bool):
+    """`_generic_cond` as a row test: the column's logical is unknown,
+    so each row dispatches on its own manifest logical_type."""
+    if isinstance(lo, str) and isinstance(hi, str):
+        return _dispatch({"string": _str_test(lo, hi)})
+    tests: dict = {}
+    for logicals in (_PLAIN_INT_LOGICALS, ["date32"], ["timestamp_s"],
+                     ["timestamp_ms"], ["timestamp_us"], ["timestamp_ns"]):
+        t = _typed_test(logicals[0], lo, hi, eq)
+        if t is not None:
+            tests.update(dict.fromkeys(logicals, t))
+    flo, fhi = _float_probe(lo), _float_probe(hi)
+    if flo is not None and fhi is not None:
+        tests.update(dict.fromkeys(("float32", "float64"),
+                                   _flt_test(flo, fhi)))
+    return _dispatch(tests)
+
+
+def _bloom_test(value, logical: str):
+    """`bloom.bloom_keep_cond` as a row test: a NULL bloom keeps, a
+    present one keeps when both probe bits are set. None when the
+    probe has no canonical encoding at this logical."""
+    data = _bloom.canon_bytes(value, logical)
+    if data is None:
+        return None
+    hashes = _bloom._hash2(data)
+
+    def test(r):
+        words = r["bloom"]
+        if words is None:
+            return True
+        if not words:
+            return None  # pmod by a zero size is NULL in Spark too
+        return _and(*(None if (w := words[(h >> 6) % len(words)]) is None
+                      else bool((w >> (h & 63)) & 1) for h in hashes))
+    return test
+
+
+def _bloom_eq_test(value, logical_type: str | None):
+    if logical_type is not None:
+        return _bloom_test(value, logical_type)
+    if isinstance(value, str):
+        family = ["string"]
+    elif isinstance(value, (bytes, bytearray, memoryview)):
+        family = ["binary"]
+    elif isinstance(value, (bool, int, float, np.integer, np.floating)):
+        family = _PLAIN_INT_LOGICALS
+    else:
+        return None
+    t = _bloom_test(value, family[0])
+    return None if t is None else _dispatch(dict.fromkeys(family, t))
+
+
+def _keep_test(lo, hi, eq: bool, logical_type: str | None):
+    """Combined bounds + bloom row test (`_keep_cond`); None = cannot
+    prune."""
+    bounds = (_typed_test(logical_type, lo, hi, eq)
+              if logical_type is not None else _generic_test(lo, hi, eq))
+    bloom = _bloom_eq_test(lo, logical_type) if eq else None
+    if bounds is None or bloom is None:
+        return bounds or bloom
+    return lambda r: _and(bounds(r), bloom(r))
+
+
+def _pred_test(kind: str, payload, logical_type: str | None):
+    """Row test of one normalized predicate (kind in eq / range / in /
+    null); None = cannot prune."""
+    if kind == "null":
+        return lambda r: r["n_nulls"] > 0
+    if kind == "range":
+        return _keep_test(payload[0], payload[1], False, logical_type)
+    if kind == "eq":
+        return _keep_test(payload, payload, True, logical_type)
+    if len(payload) > _IN_PRUNE_CAP:
+        return None
+    tests = [_keep_test(v, v, True, logical_type) for v in payload]
+    if any(t is None for t in tests):
+        return None
+    return lambda r: _or(*(t(r) for t in tests))
+
+
+def keep_ids(rows: list[dict], column: str, kind: str, payload,
+             logical_type: str | None) -> list[int] | None:
+    """Sorted ids of the rowgroups whose `column` row may match one
+    normalized predicate, or None when the probe cannot prune (every
+    rowgroup is then a candidate). An empty logical type means "none
+    known" for the typed tests, as in the Column form."""
+    test = _pred_test(kind, payload, logical_type)
+    if test is None:
+        return None
+    return sorted({r["rowgroup_id"] for r in rows
+                   if r["column"] == column and test(r) is True})
+
+
+def keep_ids_any(rows: list[dict], preds) -> list[int] | None:
+    """Keep-set of an OR of normalized predicates: the union of each
+    branch's keep-set, or None when any branch cannot prune."""
+    out: set = set()
+    for col, kind, payload, lt in preds:
+        ids = keep_ids(rows, col, kind, payload, lt)
+        if ids is None:
+            return None
+        out.update(ids)
+    return sorted(out)
+
+
+def _capped(ids: list[int] | None) -> list[int] | None:
+    return None if ids is None or len(ids) > _ISIN_CAP else ids

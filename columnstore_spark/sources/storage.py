@@ -72,6 +72,27 @@ class ParquetBackend:
                 return None
             raise
 
+    def manifest_files(self) -> list[str] | None:
+        """The manifest's data files (what Spark's file index would
+        list: hidden `.`/`_` names skipped), or None before the first
+        commit."""
+        return data_files(self.manifest_path)
+
+    def segment_files(self) -> list[str]:
+        return data_files(self.segments_path) or []
+
+    def read_manifest_arrow(self, files: list[str]):
+        """The raw manifest as one pyarrow Table, read on the driver
+        with no Spark job; files written before an additive column
+        existed read it as NULL (the mergeSchema contract). None when
+        nothing is committed yet."""
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+        if not files:
+            return None
+        tables = [pq.read_table(f) for f in files]
+        return pa.concat_tables(tables, promote_options="permissive")
+
     def append_segments(self, df: DataFrame) -> None:
         df.write.mode("append").parquet(self.segments_path)
 
@@ -103,6 +124,17 @@ class ParquetBackend:
                 f"manifest staging wrote {len(parts)} files, expected 1")
         os.rename(parts[0], f"{self.manifest_path}/commit-{tag}.parquet")
         shutil.rmtree(tmp, ignore_errors=True)
+
+
+def data_files(path: str) -> list[str] | None:
+    import os
+    try:
+        names = os.listdir(path)
+    except FileNotFoundError:
+        return None
+    return sorted(os.path.join(path, n) for n in names
+                  if not n.startswith((".", "_"))
+                  and os.path.isfile(os.path.join(path, n)))
 
 
 class IcebergBackend:

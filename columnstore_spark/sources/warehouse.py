@@ -9,8 +9,9 @@ backend), parquet directories otherwise — same table shapes either way:
 
 Commit protocol: segments parquet is written first, the manifest rows
 (status='done') are appended only after that write succeeds — the
-manifest IS the commit record. Readers join segments to the manifest on
-(rowgroup_id, column, run_id, attempt_id), so torn segment writes are
+manifest IS the commit record. Readers keep only the segment rows whose
+(rowgroup_id, column, run_id, attempt_id) the manifest commits (via the
+driver-side snapshot, `snapshot.py`), so torn segment writes are
 invisible. `attempt_id` is unique per encode_resumable INVOCATION:
 callers may (and do — streaming batch replay, the facade's close
 retry) reuse a logical `run_id` after a crash, and without the attempt
@@ -27,15 +28,19 @@ the missing partitions, producing byte-identical final segments
 
 from __future__ import annotations
 
+import os
 import time
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession, Window
+import pyarrow.compute as pc
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..codecs import chooser
 from ..operators.encode import default_rowgroup_expr, encode, encode_files
-from .storage import resolve_backend
+from ..plans.pruning import _ISIN_CAP
+from .snapshot import ManifestSnapshot, SegmentFile, read_footer
+from .storage import ParquetBackend, resolve_backend
 
 
 class Warehouse:
@@ -47,6 +52,10 @@ class Warehouse:
         # kept as attributes so plan tests can scan them directly)
         self.segments_path = f"{self.root}/segments"
         self.manifest_path = f"{self.root}/manifest"
+        # (token, snapshot) of the last committed state read, and the
+        # footers of the (immutable) segment files seen so far
+        self._snap: tuple | None = None
+        self._footers: dict[str, SegmentFile] = {}
 
     def backend(self, spark: SparkSession):
         """Resolve the storage backend once per warehouse (iceberg when
@@ -57,12 +66,56 @@ class Warehouse:
 
     # -- read ---------------------------------------------------------------
 
+    def token(self, spark: SparkSession):
+        """Fingerprint of the committed state: the manifest's files with
+        their sizes and mtimes (every commit writes a new one) and the
+        segment files' names (a snapshot pins that list). Parquet
+        backend only — an Iceberg table's layout isn't ours to
+        fingerprint; None there."""
+        backend = self.backend(spark)
+        if not isinstance(backend, ParquetBackend):
+            return None
+        files = backend.manifest_files()
+        if files is None:
+            return ()
+        stats = []
+        for f in files:
+            st = os.stat(f)
+            stats.append((f, st.st_size, st.st_mtime_ns))
+        return tuple(stats), tuple(backend.segment_files())
+
+    def snapshot(self, spark: SparkSession) -> ManifestSnapshot | None:
+        """The committed state as a driver-side manifest snapshot
+        (`sources/snapshot.py`), or None before the first commit.
+        Parquet: one pyarrow read per commit, memoized on `token`;
+        Iceberg: built from the table read on every call (no test
+        covers it — the suite runs without an Iceberg runtime jar)."""
+        backend = self.backend(spark)
+        if not isinstance(backend, ParquetBackend):
+            m = backend.read_manifest(spark)
+            return None if m is None else ManifestSnapshot(m.toArrow(),
+                                                           files=None)
+        tok = self.token(spark)
+        if self._snap is not None and self._snap[0] == tok:
+            return self._snap[1]
+        raw = backend.read_manifest_arrow([f for f, _size, _mtime in
+                                           (tok[0] if tok else ())])
+        snap = None
+        if raw is not None:
+            paths = tok[1]
+            self._footers = {p: self._footers.get(p) or read_footer(p)
+                             for p in paths}
+            snap = ManifestSnapshot(raw, [self._footers[p] for p in paths])
+        self._snap = (tok, snap)
+        return snap
+
     def manifest(self, spark: SparkSession) -> DataFrame | None:
         """The RAW append-only manifest history. Most readers want
         `live_manifest` (latest run per rowgroup/column, compaction
         tombstones applied); the raw view is for lineage — e.g. "which
         run_ids ever committed" (the facade's pending-batch queue)."""
-        return self.backend(spark).read_manifest(spark)
+        snap = self.snapshot(spark)
+        return None if snap is None else snap.frame(spark, raw=True)
 
     def live_manifest(self, spark: SparkSession) -> DataFrame | None:
         """The latest committed manifest row per (rowgroup_id, column),
@@ -71,6 +124,7 @@ class Warehouse:
         aggregate pushdown, and pruning must read THIS view: after a
         `compact()` the raw history still holds the superseded
         rowgroups' rows, and rolling those up would double-count.
+        Built from the driver-side snapshot (no manifest file read).
 
         Tie-breaks: committed_at has 1-second resolution, so two
         replays of the same run_id can tie — the pick must be
@@ -81,46 +135,49 @@ class Warehouse:
         supersedes must still win, and the reverse order can't occur
         (resume treats retired rowgroups as complete, so no later
         'done' is ever written for a retired id — see compact())."""
-        m = self.manifest(spark)
-        if m is None:
-            return None
-        if "attempt_id" in m.columns:
-            # pre-attempt_id rows (older stores) carry null: coalesce
-            # to '' so they keep matching their segment rows
-            m = m.withColumn(
-                "attempt_id", F.coalesce("attempt_id", F.lit("")))
-        order_cols = [F.desc("committed_at"),
-                      F.desc((F.col("status") == "retired").cast("int")),
-                      F.desc("run_id")]
-        if "attempt_id" in m.columns:
-            order_cols.append(F.desc("attempt_id"))
-        w = Window.partitionBy("rowgroup_id", "column").orderBy(*order_cols)
-        return (m.where(F.col("status").isin("done", "retired"))
-                .withColumn("__rn", F.row_number().over(w))
-                .where(F.col("__rn") == 1)
-                .where(F.col("status") == "done")
-                .drop("__rn"))
+        snap = self.snapshot(spark)
+        return None if snap is None else snap.frame(spark)
 
-    def committed_segments(self, spark: SparkSession) -> DataFrame:
-        """Segments visible under the commit protocol, deduped to the
-        latest committed run per (rowgroup_id, column)."""
-        segs = self.backend(spark).read_segments(spark)
-        live = self.live_manifest(spark)
-        if live is None:
+    def committed_segments(self, spark: SparkSession,
+                           snapshot: ManifestSnapshot | None = None,
+                           rowgroups=None) -> DataFrame:
+        """Segments visible under the commit protocol: the live
+        (rowgroup_id, column, run_id, attempt_id) keys of `snapshot`
+        (default: the current commit), restricted to `rowgroups` when
+        given — read from the snapshot's pinned files."""
+        snap = snapshot or self.snapshot(spark)
+        if snap is None:
             raise FileNotFoundError(f"no manifest at {self.manifest_path}")
-        keys = ["rowgroup_id", "column", "run_id"]
-        if "attempt_id" in segs.columns and "attempt_id" in live.columns:
-            segs = segs.withColumn(
-                "attempt_id", F.coalesce("attempt_id", F.lit("")))
-            keys.append("attempt_id")
-        return segs.join(live.select(*keys), on=keys, how="inner")
+        return snap.segments(spark, self.backend(spark), rowgroups)
 
     def done_rowgroups(self, spark: SparkSession) -> DataFrame | None:
-        m = self.manifest(spark)
-        if m is None:
+        ids = self._done_ids(spark)
+        if ids is None:
             return None
-        return (m.where(F.col("status") == "done")
-                 .select("rowgroup_id").distinct())
+        return spark.createDataFrame([(i,) for i in sorted(ids)],
+                                     "rowgroup_id long")
+
+    def _without_done(self, spark: SparkSession,
+                      work: DataFrame) -> DataFrame:
+        """`work` minus its rows whose `__rg` rowgroup is committed:
+        the done ids come off the snapshot as a literal list (a
+        broadcast anti-join past the IN-list cap)."""
+        done = self._done_ids(spark)
+        if not done:
+            return work
+        if len(done) <= _ISIN_CAP:
+            return work.where(~F.col("__rg").isin(sorted(done)))
+        return work.join(F.broadcast(self.done_rowgroups(spark)
+                                     .withColumnRenamed("rowgroup_id",
+                                                        "__rg")),
+                         on="__rg", how="left_anti")
+
+    def _done_ids(self, spark: SparkSession) -> frozenset | None:
+        snap = self.snapshot(spark)
+        if snap is None:
+            return None
+        raw = snap.raw.filter(pc.equal(snap.raw["status"], "done"))
+        return frozenset(raw["rowgroup_id"].to_pylist())
 
     def read_unified(self, delta_df: DataFrame, num_rowgroups: int,
                      rows_per_segment: int = 1_000_000,
@@ -146,16 +203,13 @@ class Warehouse:
                                         columns=delta_df.columns)
         if rowgroup_offset:
             rg_expr = rg_expr + F.lit(int(rowgroup_offset))
-        done = self.done_rowgroups(spark)
-        if done is None:
+        if self.snapshot(spark) is None:
             return delta_df
         solid = decode(self.committed_segments(spark),
                        schema=delta_df.schema)
-        pending = (delta_df.withColumn("__rg", rg_expr.cast("long"))
-                   .join(done.withColumnRenamed("rowgroup_id", "__rg"),
-                         on="__rg", how="left_anti")
-                   .drop("__rg"))
-        return solid.unionByName(pending)
+        pending = self._without_done(
+            spark, delta_df.withColumn("__rg", rg_expr.cast("long")))
+        return solid.unionByName(pending.drop("__rg"))
 
     # -- write --------------------------------------------------------------
 
@@ -194,12 +248,7 @@ class Warehouse:
                                               columns=df.columns))
         if rowgroup_offset:
             rg_expr = rg_expr + F.lit(int(rowgroup_offset))
-        work = df.withColumn("__rg", rg_expr)
-
-        done = self.done_rowgroups(spark)
-        if done is not None:
-            work = work.join(done.withColumnRenamed("rowgroup_id", "__rg"),
-                             on="__rg", how="left_anti")
+        work = self._without_done(spark, df.withColumn("__rg", rg_expr))
 
         if fail_after_rowgroups is not None:
             keep = [r["__rg"] for r in
@@ -253,8 +302,8 @@ class Warehouse:
         rows stay in the segments table until `rebuild()` rewrites
         the generation — same reclamation contract as vacuum().
 
-        Driver-side state: one 3-scalar aggregate row (small count /
-        row sum / max id); the small-id set itself stays distributed.
+        The small-rowgroup set comes off the driver-side manifest
+        snapshot (one row count per rowgroup).
         """
         from ..operators.decode import decode
 
@@ -262,27 +311,23 @@ class Warehouse:
         run_id = run_id or f"compact-{uuid.uuid4().hex[:8]}"
         empty = {"run_id": run_id, "rowgroups_encoded": 0,
                  "rowgroups_retired": 0, "storage": backend.name}
-        live = self.live_manifest(spark)
-        if live is None:
+        snap = self.snapshot(spark)
+        if snap is None:
             return empty
-        sizes = (live.groupBy("rowgroup_id")
-                 .agg(F.max("n_rows").alias("n_rows")))
         thresh = int(min_fill * rows_per_segment)
-        small_cond = F.col("n_rows") < thresh
-        agg = sizes.agg(
-            F.sum(F.when(small_cond, F.col("n_rows"))).alias("small_rows"),
-            F.count(F.when(small_cond, True)).alias("n_small")).collect()[0]
-        n_small = int(agg["n_small"] or 0)
-        if n_small < 2:
+        small = sorted(rg for rg, n in snap.rowgroup_rows.items()
+                       if n < thresh)
+        if len(small) < 2:
             return empty
-        small = sizes.where(small_cond).select("rowgroup_id")
-        rows = decode(self.committed_segments(spark)
-                      .join(small, on="rowgroup_id", how="leftsemi"))
+        rows = decode(self.committed_segments(spark, snap, small),
+                      schema=snap.decode_schema)
         return self.replace_rowgroups(
-            spark, small, rows, victim_rows=int(agg["small_rows"]),
+            spark, spark.createDataFrame([(i,) for i in small],
+                                         "rowgroup_id long"),
+            rows, victim_rows=sum(snap.rowgroup_rows[i] for i in small),
             rows_per_segment=rows_per_segment, mode=mode,
             run_id=run_id, bloom_columns=bloom_columns,
-            expected_victims=n_small)
+            expected_victims=len(small))
 
     def replace_rowgroups(self, spark: SparkSession, victims: DataFrame,
                           rows: DataFrame, victim_rows: int | None = None,
@@ -305,37 +350,16 @@ class Warehouse:
         it is summed off the live manifest."""
         backend = self.backend(spark)
         run_id = run_id or f"rewrite-{uuid.uuid4().hex[:8]}"
-        live = self.live_manifest(spark)
-        if live is None:
+        snap = self.snapshot(spark)
+        if snap is None:
             return {"run_id": run_id, "rowgroups_encoded": 0,
                     "rowgroups_retired": 0, "storage": backend.name}
-        # materialize the live view ONCE: the full-manifest scan +
-        # row_number window otherwise replays for the victim agg AND
-        # the retire join below (and, being checkpointed, the retire
-        # frame no longer reads the manifest files the commit appends)
-        live = live.localCheckpoint()
-        # one manifest scan collects victim rows/count (the
-        # live_manifest window replays per scan — don't pay it three
-        # times per mutation)
-        marked = (live.join(victims.select("rowgroup_id")
-                            .withColumn("__v", F.lit(1)),
-                            on="rowgroup_id", how="left")
-                  .groupBy("rowgroup_id")
-                  .agg(F.max("n_rows").alias("n"),
-                       F.max("__v").alias("v")))
-        agg = marked.agg(
-            F.sum(F.when(F.col("v") == 1, F.col("n"))).alias("rows"),
-            F.count(F.when(F.col("v") == 1, True)).alias("n_victims")
-        ).collect()[0]
-        # the id high-water mark must come from the RAW manifest, not
-        # the live view: a tombstone-only commit (delete_where erasing
-        # every row of a rowgroup writes 'retired' rows and zero 'done'
-        # rows) removes the id from live, and reusing it would write a
-        # later 'done' for a retired id — which live_manifest's
-        # same-second tie-break (retired outranks done) then hides
-        raw_max = self.manifest(spark).agg(
-            F.max("rowgroup_id").alias("m")).collect()[0]["m"]
-        n_victims = int(agg["n_victims"] or 0)
+        # the victim ids come to the driver (one per rowgroup); their
+        # row counts and manifest rows are already in the snapshot
+        ids = sorted({r["rowgroup_id"] for r in
+                      victims.select("rowgroup_id").collect()}
+                     & snap.rowgroup_rows.keys())
+        n_victims = len(ids)
         if expected_victims is not None and n_victims != expected_victims:
             # validated BEFORE anything commits: a mismatch means the
             # victim set changed between the caller's scan and ours —
@@ -345,9 +369,15 @@ class Warehouse:
                 f"caller ({n_victims} != expected {expected_victims}); "
                 "nothing was committed")
         if victim_rows is None:
-            victim_rows = int(agg["rows"] or 0)
-        # an empty manifest (zero-row commits only) has no max id
-        max_id = int(raw_max or 0)
+            victim_rows = sum(snap.rowgroup_rows[i] for i in ids)
+        # the id high-water mark must come from the RAW manifest, not
+        # the live view: a tombstone-only commit (delete_where erasing
+        # every row of a rowgroup writes 'retired' rows and zero 'done'
+        # rows) removes the id from live, and reusing it would write a
+        # later 'done' for a retired id — which live_manifest's
+        # same-second tie-break (retired outranks done) then hides.
+        # An empty manifest (zero-row commits only) has no max id.
+        max_id = int(snap.max_rowgroup_id or 0)
         n_new = max(1, -(-victim_rows // rows_per_segment))
         # rewritten ids live in their own namespace at 2^62+: ingest
         # ids are `batch_idx << 40 + bucket expr`, so they stay below
@@ -361,12 +391,10 @@ class Warehouse:
         segs = encode(rows, rowgroup_expr=rg_expr,
                       rows_per_segment=rows_per_segment, mode=mode,
                       bloom_columns=bloom_columns)
-        # tombstones: the live manifest rows being superseded, eagerly
-        # materialized so nothing here (in particular a caller-supplied
-        # victims frame derived from the manifest) evaluates after the
-        # commit starts mutating state; cheap — live is checkpointed
-        retire = (live.join(victims, on="rowgroup_id", how="leftsemi")
-                  .localCheckpoint())
+        # tombstones: the live manifest rows being superseded, taken
+        # from the snapshot — nothing here evaluates after the commit
+        # starts mutating state
+        retire = snap.frame(spark, rowgroups=ids)
         attempt = uuid.uuid4().hex[:12]
         out = self._commit(spark, backend, segs, run_id, attempt,
                            retire=retire)
@@ -451,9 +479,7 @@ class Warehouse:
         re-reads completed data. Same commit protocol as
         `encode_resumable` (manifest append = commit point)."""
         run_id = run_id or uuid.uuid4().hex[:12]
-        done = self.done_rowgroups(spark)
-        skip = (frozenset(r["rowgroup_id"] for r in done.collect())
-                if done is not None else frozenset())
+        skip = self._done_ids(spark) or frozenset()
         backend = self.backend(spark)
         attempt = uuid.uuid4().hex[:12]
         segs = encode_files(spark, paths, rowgroup_col=rowgroup_col,

@@ -45,27 +45,17 @@ from .operators import (
     decode_matching_range,
     decode_window,
 )
-from .operators.decode import decode_with_rowgroup, schema_from_segments
-from .plans.pruning import (
-    _with_typed_bounds,
-    prune_rowgroup_ids,
-    prune_rowgroup_ids_in,
-    prune_rowgroup_ids_null,
-    prune_rowgroups_by_null,
-    prune_segments_any,
-    prune_rowgroups_by_range,
-    prune_rowgroups_by_value,
-    prune_rowgroups_by_values,
-)
+from .operators.decode import decode_with_rowgroup
 from .plans.predicates import (
     _dedup_probes,
-    _exact_in_cond,
     _exact_pred_cond,
+    _kernel_safe_pred,
     _kernel_safe_probe,
     _naive_utc,
     _norm_one_pred,
-    _pred_keep_ids,
 )
+from .plans.pruning import _with_typed_bounds
+from .sources.snapshot import ManifestSnapshot
 from .sources.warehouse import Warehouse
 
 _BATCH_SHIFT = 40  # rowgroup namespace per delta batch (as streaming)
@@ -83,6 +73,27 @@ def _inner_columns(columns: list[str] | None,
     if columns is None:
         return None
     return list(dict.fromkeys([*columns, *probe_cols]))
+
+
+def _norm_preds(items) -> list[tuple]:
+    """(column, probe) pairs -> normalized (column, kind, payload)."""
+    return [_norm_one_pred(c, p, "")[:3] for c, p in items]
+
+
+def _decode_matching_pred(segs: DataFrame, pred, columns, schema):
+    """The encoded-form gather driven by one kernel-safe normalized
+    predicate (`plans/predicates._kernel_safe_pred`)."""
+    col, kind, payload, _lt = pred
+    if kind == "eq":
+        return decode_matching(segs, col, payload, columns=columns,
+                               schema=schema)
+    if kind == "in":
+        return decode_matching_in(segs, col, payload, columns=columns,
+                                  schema=schema)
+    if kind == "range":
+        return decode_matching_range(segs, col, *payload,
+                                     columns=columns, schema=schema)
+    return decode_matching_null(segs, col, columns=columns, schema=schema)
 
 
 def _prefix_upper(prefix: str) -> str | None:
@@ -175,8 +186,6 @@ class TranscriptColumnStore:
             if self.cluster_split < 1:
                 raise ValueError("cluster_split must be >= 1")
         self._format = format
-        # driver-side metadata memos, invalidated by _meta_token
-        self._meta_cache: dict[str, tuple] = {}
         # `generation` pins a historical generation (time travel — the
         # Iceberg snapshot-read analogue over our generation dirs),
         # read-only. A generation is immutable once SUPERSEDED (the
@@ -263,9 +272,8 @@ class TranscriptColumnStore:
         # inherits the isolation, not just rows()
         if self._pinned:
             return []
-        m = self.warehouse.manifest(self.spark)
-        done = (set() if m is None else
-                {r["run_id"] for r in m.select("run_id").distinct().collect()})
+        snap = self.warehouse.snapshot(self.spark)
+        done = set() if snap is None else set(snap.run_ids)
         done |= self._retired_batches()
         return [b for b in self._batches() if b not in done]
 
@@ -349,7 +357,7 @@ class TranscriptColumnStore:
                 self._retire_batches([name])
                 compacted += 1
                 continue
-            df = self.spark.read.parquet(f"{self._delta_root()}/{name}")
+            df = self._read_batches([name], merge=False)
             rg_expr, order = self._cluster_exprs(df)
             self.warehouse.encode_resumable(
                 df, num_rowgroups=self.num_rowgroups,
@@ -479,33 +487,21 @@ class TranscriptColumnStore:
         lt = self._logical_type(m, column)
         if lt is None:
             raise ValueError(f"unknown column {column!r}")
-        col, kind, payload, _ = _norm_one_pred(column, probe, lt)
-        segs = self.warehouse.committed_segments(self.spark)
-        if kind == "eq":
-            cand = prune_rowgroups_by_value(segs, column, payload,
-                                            logical_type=lt)
-        elif kind == "range":
-            cand = prune_rowgroups_by_range(segs, column, payload[0],
-                                            payload[1], logical_type=lt)
-        elif kind == "in":
-            if not payload:
-                return noop
-            cand = prune_rowgroups_by_values(segs, column, payload,
-                                             logical_type=lt)
-        else:
-            cand = prune_rowgroups_by_null(segs, column)
-        cond = _exact_pred_cond([(col, kind, payload, lt)],
-                                any_mode=False)
-        # schema from the MANIFEST (metadata-only; a fully-pruned
-        # candidate set would otherwise infer an empty schema and the
-        # predicate column wouldn't resolve). The decode keeps each
-        # row's source rowgroup id so the victim set tightens to
-        # rowgroups that ACTUALLY hold matches — a bounds/bloom
-        # false-positive candidate decodes but is never rewritten or
-        # tombstoned (needless rewrites double a rowgroup's stored
-        # bytes until rebuild()).
+        pred = _norm_one_pred(column, probe, lt)
+        if pred[1] == "in" and not pred[2]:
+            return noop
+        cand = self.warehouse.committed_segments(
+            self.spark, m, m.keep_ids(*pred))
+        cond = _exact_pred_cond([pred], any_mode=False)
+        # schema from the MANIFEST (a fully-pruned candidate set has
+        # no segment to infer it from). The decode keeps each row's
+        # source rowgroup id so the victim set tightens to rowgroups
+        # that ACTUALLY hold matches — a bounds/bloom false-positive
+        # candidate decodes but is never rewritten or tombstoned
+        # (needless rewrites double a rowgroup's stored bytes until
+        # rebuild()).
         decoded = decode_with_rowgroup(
-            cand, schema=schema_from_segments(m)).persist()
+            cand, schema=m.decode_schema).persist()
         victims = None
         try:
             victims = (decoded.where(cond).select(
@@ -553,7 +549,8 @@ class TranscriptColumnStore:
         else:
             lo = hi = _naive_utc(probe)
             eq = True
-        return _explain(m, column, lo, hi, eq, logical_type=lt)
+        return _explain(m.frame(self.spark), column, lo, hi, eq,
+                        logical_type=lt)
 
     def explain_where(self, predicates: dict[str, object]) -> DataFrame:
         """EXPLAIN for a `query_where` conjunction: one metadata row
@@ -561,45 +558,15 @@ class TranscriptColumnStore:
         that column/probe is unprunable in manifest form — the
         conjunction then keeps the rowgroup conservatively on that
         predicate's account) and the combined ``kept``. Built on the
-        SAME `_pred_keep_ids` switch `query_where` intersects, so the
+        SAME snapshot keep-sets `query_where` intersects, so the
         table shows exactly what the query will decode. Metadata-only
         at any store size — the answer to "why does this conjunction
         touch N rowgroups?"."""
         if not predicates:
             raise ValueError("explain_where needs at least one predicate")
-        m = self._manifest_or_raise()
-        if self._needs_fallback(m, *predicates.keys()):
-            # pending schema evolution: query_where routes through the
-            # decode-everything fallback, so the honest truth table is
-            # "all kept, nothing prunable" — NOT manifest keep-sets
-            # that would claim rowgroups the real query still decodes
-            base = (m.select("rowgroup_id", "n_rows").distinct()
-                     .orderBy("rowgroup_id"))
-            null_b = F.lit(None).cast("boolean")
-            return base.select(
-                "rowgroup_id", "n_rows",
-                *[null_b.alias(f"keep_{c}") for c in predicates],
-                F.lit(True).alias("kept"))
-        lts = self._logical_types(m, predicates.keys())
-        norm = [_norm_one_pred(c, p, lts.get(c) or "")
-                for c, p in predicates.items()]
-        keep_sets = {col: (None if (s := _pred_keep_ids(
-            m, col, kind, payload, lt)) is None else set(s))
-            for col, kind, payload, lt in norm}
-        base = (m.select("rowgroup_id", "n_rows").distinct()
-                 .orderBy("rowgroup_id"))
-        cols = [F.col("rowgroup_id"), F.col("n_rows")]
-        kept = F.lit(True)
-        for col, s in keep_sets.items():
-            if s is None:
-                verdict = F.lit(None).cast("boolean")
-            else:
-                verdict = F.col("rowgroup_id").isin(sorted(s)) \
-                    if s else F.lit(False)
-                kept = kept & verdict
-            cols.append(verdict.alias(f"keep_{col}"))
-        cols.append(kept.alias("kept"))
-        return base.select(*cols)
+        return self._truth_table(list(predicates.items()),
+                                 [f"keep_{c}" for c in predicates],
+                                 any_mode=False)
 
     def explain_any(self, predicates) -> DataFrame:
         """EXPLAIN for a `query_any` disjunction: per-branch keep
@@ -614,40 +581,47 @@ class TranscriptColumnStore:
                  if isinstance(predicates, dict) else list(predicates))
         if not items:
             raise ValueError("explain_any needs at least one predicate")
-        m = self._manifest_or_raise()
-        base = (m.select("rowgroup_id", "n_rows").distinct()
-                 .orderBy("rowgroup_id"))
-        labels = []
+        labels: list[str] = []
         for c, _p in items:
             lbl = f"keep_{c}"
             while lbl in labels:
                 lbl += "_"
             labels.append(lbl)
+        return self._truth_table(items, labels, any_mode=True)
+
+    def _truth_table(self, items, labels, any_mode: bool) -> DataFrame:
+        """explain_where / explain_any: one row per rowgroup with each
+        predicate's verdict from the snapshot keep-sets the queries
+        use (NULL = unprunable) and the combined ``kept``. Under
+        pending schema evolution on a probed column the query decodes
+        everything through the fallback, so the honest table is "all
+        kept, nothing prunable"."""
+        m = self._manifest_or_raise()
+        base = (m.frame(self.spark).select("rowgroup_id", "n_rows")
+                .distinct().orderBy("rowgroup_id"))
         null_b = F.lit(None).cast("boolean")
-        if self._needs_fallback(m, *{c for c, _p in items}):
+        cols = [c for c, _p in items]
+        if self._needs_fallback(m, *cols):
             return base.select(
                 "rowgroup_id", "n_rows",
                 *[null_b.alias(lbl) for lbl in labels],
                 F.lit(True).alias("kept"))
-        lts = self._logical_types(m, {c for c, _p in items})
-        norm = [_norm_one_pred(c, p, lts.get(c) or "")
-                for c, p in items]
-        cols = [F.col("rowgroup_id"), F.col("n_rows")]
-        kept = F.lit(False)
-        any_unprunable = False
-        for (col, kind, payload, lt), lbl in zip(norm, labels):
-            s = _pred_keep_ids(m, col, kind, payload, lt)
+        lts = self._logical_types(m, cols)
+        verdicts, kept, unprunable = [], F.lit(not any_mode), False
+        for (c, p), lbl in zip(items, labels):
+            if c not in lts:
+                raise ValueError(f"unknown column {c!r}")
+            s = m.keep_ids(*_norm_one_pred(c, p, lts[c]))
             if s is None:
-                any_unprunable = True
-                verdict = null_b
+                unprunable, v = True, null_b
             else:
-                verdict = (F.col("rowgroup_id").isin(sorted(set(s)))
-                           if s else F.lit(False))
-                kept = kept | verdict
-            cols.append(verdict.alias(lbl))
-        cols.append((F.lit(True) if any_unprunable else kept)
-                    .alias("kept"))
-        return base.select(*cols)
+                v = F.col("rowgroup_id").isin(s) if s else F.lit(False)
+                kept = (kept | v) if any_mode else (kept & v)
+            verdicts.append(v.alias(lbl))
+        if any_mode and unprunable:
+            kept = F.lit(True)
+        return base.select("rowgroup_id", "n_rows", *verdicts,
+                           kept.alias("kept"))
 
     def delete_keys(self, keys: DataFrame, on: str = "conv_id",
                     key_col: str | None = None) -> dict:
@@ -679,12 +653,11 @@ class TranscriptColumnStore:
         decoded = victims = None
         try:
             from .operators.semijoin import semi_join_segments
-            segs = self.warehouse.committed_segments(self.spark)
-            cand = semi_join_segments(segs, m, on, keys, lt)
-            # schema off the manifest (metadata-only), not a second
-            # pass over the committed-segments join
+            segs = self.warehouse.committed_segments(self.spark, m)
+            cand = semi_join_segments(segs, m.frame(self.spark), on,
+                                      keys, lt)
             decoded = decode_with_rowgroup(
-                cand, schema=schema_from_segments(m)).persist()
+                cand, schema=m.decode_schema).persist()
             matches = decoded.join(keys, on=on, how="leftsemi")
             victims = (matches.select(F.col("__rg").alias("rowgroup_id"))
                        .distinct().persist())
@@ -734,7 +707,7 @@ class TranscriptColumnStore:
         lt = self._logical_type(m, key)
         if lt is None:
             raise ValueError(f"unknown column {key!r}")
-        schema = schema_from_segments(m)
+        schema = m.decode_schema
         if self._schema_log():
             # a dropped-but-still-physical column stays in the rewrite
             # schema until rebuild(); incoming frames naturally omit
@@ -776,8 +749,9 @@ class TranscriptColumnStore:
         decoded = incoming = victims = None
         try:
             from .operators.semijoin import semi_join_segments
-            segs = self.warehouse.committed_segments(self.spark)
-            cand = semi_join_segments(segs, m, key, keys, lt)
+            segs = self.warehouse.committed_segments(self.spark, m)
+            cand = semi_join_segments(segs, m.frame(self.spark), key,
+                                      keys, lt)
             decoded = decode_with_rowgroup(cand, schema=schema).persist()
             # persisted: counted once here and consumed again by the
             # replace encode — an unpersisted nondeterministic source
@@ -798,12 +772,9 @@ class TranscriptColumnStore:
                              how="leftsemi")
                          .join(keys, on=key, how="left_anti")
                          .drop("__rg"))
-            # m IS the live view — no second manifest window replay
-            victim_rows = (m
-                           .join(victims, on="rowgroup_id", how="leftsemi")
-                           .groupBy("rowgroup_id")
-                           .agg(F.max("n_rows").alias("n"))
-                           .agg(F.sum("n")).collect()[0][0] or 0)
+            victim_rows = sum(
+                m.rowgroup_rows.get(r["rowgroup_id"], 0)
+                for r in victims.collect())
             out = self.warehouse.replace_rowgroups(
                 self.spark, victims, survivors.unionByName(incoming),
                 victim_rows=int(victim_rows) + n_ins,
@@ -828,9 +799,10 @@ class TranscriptColumnStore:
     # -- read (GetEnumerator) ------------------------------------------------
 
     def solid_rows(self, columns: list[str] | None = None) -> DataFrame:
-        segs = self.warehouse.committed_segments(self.spark)
+        m = self._manifest_or_raise()
+        segs = self.warehouse.committed_segments(self.spark, m)
         if not self._schema_log():
-            return decode(segs, columns=columns)
+            return decode(segs, schema=m.decode_schema, columns=columns)
         # schema evolution active: decode under the EFFECTIVE schema —
         # adds null-fill, drops project away. The physical decode set
         # must keep one FULLY-covered anchor column so rowgroups that
@@ -843,8 +815,7 @@ class TranscriptColumnStore:
         if unknown:
             raise ValueError(f"unknown column(s) {unknown}; "
                              f"store schema: {sorted(eff_names)}")
-        m = self._manifest_or_raise()
-        cov, total = self._column_coverage(m)
+        cov, total = m.coverage
         phys_want = [c for c in want if c in cov]
         dec_cols = list(phys_want)
         if not phys_want or any(cov[c] < total for c in phys_want):
@@ -853,7 +824,7 @@ class TranscriptColumnStore:
                 dec_cols = sorted(cov)
             elif anchor not in dec_cols:
                 dec_cols.append(anchor)
-        out = decode(segs, columns=dec_cols)
+        out = decode(segs, schema=m.decode_schema, columns=dec_cols)
         eff_types = {f.name: f.dataType for f in eff.fields}
         for c in want:
             if c not in cov:
@@ -880,8 +851,7 @@ class TranscriptColumnStore:
                 delta = self._align_delta(delta, want)
             elif columns is not None:
                 delta = delta.select(*columns)
-        m = self.warehouse.manifest(self.spark)
-        if m is None:
+        if self.warehouse.snapshot(self.spark) is None:
             if delta is None:
                 raise ValueError("empty store")
             return delta
@@ -891,13 +861,27 @@ class TranscriptColumnStore:
     def _read_pending(self, pending: list[str]) -> DataFrame:
         """Pending delta batches as one frame. Under schema evolution
         batches may carry different columns (added after earlier
-        appends) — mergeSchema unions them; without evolution the
-        plain single-schema read stays the fast path."""
-        paths = [f"{self._delta_root()}/{b}" for b in pending]
-        if self._schema_log():
-            return (self.spark.read.option("mergeSchema", "true")
-                    .parquet(*paths))
-        return self.spark.read.parquet(*paths)
+        appends): their schemas merge by name."""
+        return self._read_batches(pending, merge=bool(self._schema_log()))
+
+    def _read_batches(self, names: list[str], merge: bool) -> DataFrame:
+        """Delta batches read with the schema their parquet footers
+        record — read on the driver, so no schema-inference job
+        runs."""
+        paths = [f"{self._delta_root()}/{b}" for b in names]
+        return (self.spark.read.schema(self._batch_schema(names, merge))
+                .parquet(*paths))
+
+    def _batch_schema(self, names: list[str], merge: bool) -> T.StructType:
+        """Spark schema of delta batches from their parquet footers:
+        merged by name over every file with `merge`, else the first
+        file's (what Spark infers without mergeSchema)."""
+        from .sources.snapshot import merged_schema, read_footer
+        from .sources.storage import data_files
+        files = [f for b in names
+                 for f in data_files(f"{self._delta_root()}/{b}") or []]
+        return merged_schema(read_footer(f).schema
+                             for f in (files if merge else files[:1]))
 
     def _align_delta(self, delta: DataFrame, want: list[str]) -> DataFrame:
         """Project raw delta rows to the effective schema: late-added
@@ -984,7 +968,6 @@ class TranscriptColumnStore:
         had_pending_evolution = bool(self._schema_log())
         self._generation = gen
         self.warehouse = Warehouse(final_root, format=self._format)
-        self._meta_cache.clear()  # token paths changed with the root
         if had_pending_evolution:
             # this generation physically carries every prior add/drop:
             # mark them materialized so readers stop replaying the log
@@ -997,13 +980,8 @@ class TranscriptColumnStore:
         """Store row count from METADATA alone: live-manifest n_rows
         per committed rowgroup + parquet footer counts of pending delta
         batches — never a table scan."""
-        total = 0
-        m = self.warehouse.live_manifest(self.spark)
-        if m is not None:
-            r = (m.groupBy("rowgroup_id")
-                 .agg(F.max("n_rows").alias("n"))
-                 .agg(F.sum("n")).collect()[0][0])
-            total += int(r or 0)
+        snap = self.warehouse.snapshot(self.spark)
+        total = 0 if snap is None else sum(snap.rowgroup_rows.values())
         for b in self._pending_batches():
             total += self._batch_rows(b)
         return total
@@ -1035,7 +1013,6 @@ class TranscriptColumnStore:
         # manifest commit: invisible to reads, pure scan overhead
         removed["segment_files"] = (
             self.warehouse.vacuum_orphan_segments(self.spark))
-        self._meta_cache.clear()
         return removed
 
     # -- schema evolution (metadata-only, the Iceberg analogue) ---------------
@@ -1083,68 +1060,15 @@ class TranscriptColumnStore:
         with open(self._schema_log_path(), "a") as f:
             f.write(json.dumps(dict(entry, gen=self._generation)) + "\n")
 
-    def _meta_token(self):
-        """Invalidation token for driver-side metadata memos (physical
-        schema, column coverage): the manifest dir's file listing —
-        every commit writes new files — plus the schema log's stat and
-        the generation. Parquet backend only (an Iceberg table's file
-        layout isn't ours to fingerprint); None disables the memo."""
-        from .sources.storage import ParquetBackend
-        if not isinstance(self.warehouse.backend(self.spark),
-                          ParquetBackend):
-            return None
-        try:
-            st = os.stat(self._schema_log_path())
-            log_tok = (st.st_mtime_ns, st.st_size)
-        except FileNotFoundError:
-            log_tok = None
-        listing = []
-        for dirpath, _dirs, files in os.walk(self.warehouse.manifest_path):
-            for fn in files:
-                s = os.stat(os.path.join(dirpath, fn))
-                listing.append((dirpath, fn, s.st_size, s.st_mtime_ns))
-        # delta state matters too: a manifest-less store derives its
-        # physical schema from the first pending batch, and folding /
-        # vacuuming batches changes what's pending. Batch dirs are
-        # write-once (errorifexists), so their NAMES are the state.
-        try:
-            delta = tuple(sorted(os.listdir(self._delta_root())))
-        except FileNotFoundError:
-            delta = ()
-        try:
-            rs = os.stat(f"{self._gen_root()}/retired_batches.txt")
-            retired_tok = (rs.st_mtime_ns, rs.st_size)
-        except FileNotFoundError:
-            retired_tok = None
-        return (self._generation, log_tok, tuple(sorted(listing)),
-                delta, retired_tok)
-
-    def _cached_meta(self, key: str, compute):
-        """Memoize a pure-metadata computation under `_meta_token` —
-        while schema evolution is pending every probe query re-derives
-        the same (schema, coverage) several times per call; this keeps
-        it at one Spark job per commit instead of several per query."""
-        tok = self._meta_token()
-        if tok is None:
-            return compute()
-        hit = self._meta_cache.get(key)
-        if hit is not None and hit[0] == tok:
-            return hit[1]
-        val = compute()
-        self._meta_cache[key] = (tok, val)
-        return val
-
     def _physical_fields(self) -> list[T.StructField]:
-        return self._cached_meta("phys", self._physical_fields_impl)
-
-    def _physical_fields_impl(self) -> list[T.StructField]:
-        m = self.warehouse.live_manifest(self.spark)
+        """The stored columns: the committed manifest's, else the first
+        pending batch's (read off its parquet footer)."""
+        m = self.warehouse.snapshot(self.spark)
         if m is not None:
-            return list(schema_from_segments(m).fields)
+            return list(m.decode_schema.fields)
         pending = self._pending_batches()
         if pending:
-            return list(self.spark.read.parquet(
-                f"{self._delta_root()}/{pending[0]}").schema.fields)
+            return list(self._batch_schema(pending[:1], merge=False).fields)
         return []
 
     def schema(self) -> T.StructType:
@@ -1221,21 +1145,7 @@ class TranscriptColumnStore:
                                       format="parquet").schema.names)
         return names
 
-    def _column_coverage(self, m: DataFrame) -> tuple[dict, int]:
-        """({column: rowgroups holding it}, total rowgroups) — one
-        metadata aggregation on the live manifest (memoized: every
-        call site passes the live manifest)."""
-        def compute():
-            rows = (m.groupBy("column")
-                    .agg(F.countDistinct("rowgroup_id").alias("n"))
-                    .collect())
-            total_row = m.select(
-                F.countDistinct("rowgroup_id").alias("n")).first()
-            return ({r["column"]: r["n"] for r in rows},
-                    total_row["n"] if total_row else 0)
-        return self._cached_meta("coverage", compute)
-
-    def _needs_fallback(self, m: DataFrame, *cols: str) -> bool:
+    def _needs_fallback(self, m: ManifestSnapshot, *cols: str) -> bool:
         """True when schema evolution is active and any probed column
         lacks full physical coverage. The encoded fast paths stay
         sound for equality-family probes (a rowgroup without the
@@ -1249,7 +1159,7 @@ class TranscriptColumnStore:
         if unknown:
             raise ValueError(
                 f"unknown column(s) {unknown}; store schema: {sorted(eff)}")
-        cov, total = self._column_coverage(m)
+        cov, total = m.coverage
         return any(cov.get(c, 0) < total for c in cols)
 
     def _fallback_query(self, cond, columns, include_pending,
@@ -1270,7 +1180,8 @@ class TranscriptColumnStore:
             out = self.solid_rows(inner).where(cond)
         return self._finish_query(out, cond, columns, include_pending)
 
-    def _guard_materialized(self, m: DataFrame, cols, op: str) -> None:
+    def _guard_materialized(self, m: ManifestSnapshot, cols,
+                            op: str) -> None:
         """The encoded-domain analytics (aggregate/group/distinct/
         top-k) answer from manifest stats and dictionaries, which do
         not exist for rowgroups that predate an add_column() — their
@@ -1294,9 +1205,8 @@ class TranscriptColumnStore:
         `min_str`/`max_str` only for string columns (where the
         lexicographic rollup is meaningful); other logicals report
         nulls rather than a lexicographically-wrong answer."""
-        m = self.warehouse.live_manifest(self.spark)
-        if m is None:
-            raise ValueError("empty store (no committed segments)")
+        snap = self._manifest_or_raise()
+        m = snap.frame(self.spark)
         # schema evolution: dropped columns never resurface here, and
         # a late-added column's rows in pre-add rowgroups ARE null —
         # report store-total n_rows with the shortfall folded into
@@ -1304,13 +1214,9 @@ class TranscriptColumnStore:
         total_rows = None
         if self._schema_log():
             eff = {f.name for f in self.schema().fields}
-            # per-rowgroup rows = max over columns of (sum over that
-            # column's segments) — mirrors count_null's accounting
-            total_rows = (m.groupBy("rowgroup_id", "column")
-                          .agg(F.sum("n_rows").alias("nr"))
-                          .groupBy("rowgroup_id")
-                          .agg(F.max("nr").alias("n"))
-                          .agg(F.sum("n")).first()[0]) or 0
+            # per-rowgroup rows = max over columns of that column's
+            # rows — mirrors count_null's accounting
+            total_rows = sum(snap.rowgroup_rows.values())
             m = m.where(F.col("column").isin(sorted(eff)))
         # pre-typed-bounds manifests roll up NULL min/max, not an error
         m = _with_typed_bounds(m)
@@ -1355,10 +1261,9 @@ class TranscriptColumnStore:
         if total_rows is not None:
             # an add_column with zero physical coverage has no manifest
             # rows at all — synthesize its all-null row (n_nulls=total).
-            # The memoized coverage map already knows which columns
-            # have manifest rows — no extra aggregation job here.
-            cov, _ = self._column_coverage(
-                self.warehouse.live_manifest(self.spark))
+            # The snapshot's coverage map knows which columns have
+            # manifest rows.
+            cov, _ = snap.coverage
             missing = sorted(eff - set(cov))
             if missing:
                 pad = self.spark.createDataFrame(
@@ -1369,8 +1274,8 @@ class TranscriptColumnStore:
         return out
 
     def aggregate(self, columns: list[str] | None = None) -> DataFrame:
-        """COUNT/MIN/MAX/SUM per column answered from the manifest
-        alone (`operators/aggregate.py`): at warehouse scale the query
+        """COUNT/MIN/MAX/SUM per column answered from the per-segment
+        stats alone (`operators/aggregate.py`): at warehouse scale the query
         reads kilobytes of stats instead of the payload. Unknown beats
         wrong — any non-empty segment missing a stat nulls that
         aggregate. Integer-family bounds/sums are in the STORED domain
@@ -1383,7 +1288,11 @@ class TranscriptColumnStore:
             want = list(columns) if columns is not None else eff_names
             self._guard_materialized(m, want, "aggregate")
             columns = want  # dropped columns never report
-        return aggregate_segments(m, columns=columns)
+        # the committed segments' stats columns: a column-pruned scan
+        # that never reads a payload byte
+        return aggregate_segments(
+            self.warehouse.committed_segments(self.spark, m),
+            columns=columns)
 
     def group_count(self, column: str) -> DataFrame:
         """GROUP BY `column` -> (value, cnt) in the encoded domain:
@@ -1422,14 +1331,12 @@ class TranscriptColumnStore:
         need = {*keys, agg_col} | ({where[0]} if where else set())
         if self._schema_log():
             self._guard_materialized(m, sorted(need), "group_agg")
-        # logical types come off the MANIFEST (tiny metadata parquet),
-        # not the segments table — the operator skips its own job
-        lts = {r["column"]: r["logical_type"]
-               for r in m.where(F.col("column").isin(sorted(need)))
-               .select("column", "logical_type").distinct().collect()}
+        # logical types come off the manifest snapshot, not the
+        # segments table — the operator skips its own job
+        lts = self._logical_types(m, sorted(need))
         if where is None:
             return group_agg(
-                self.warehouse.committed_segments(self.spark),
+                self.warehouse.committed_segments(self.spark, m),
                 group_col, agg_col, logical_types=lts)
         wcol, wval = where
         wval = _naive_utc(wval)
@@ -1469,7 +1376,7 @@ class TranscriptColumnStore:
                     else [F.col(c) for c in group_col])
             inner = sorted({*([group_col] if isinstance(group_col, str)
                               else group_col), agg_col, wcol})
-            return (decode(pruned, schema=schema_from_segments(m),
+            return (decode(pruned, schema=m.decode_schema,
                            columns=inner)
                     .where(F.col(wcol) == F.lit(wval))
                     .groupBy(*keys)
@@ -1496,7 +1403,7 @@ class TranscriptColumnStore:
         pruned, lt = self._pruned_segments(m, column, value, value,
                                            eq=True)
         if not _kernel_safe_probe(lt or "", value):
-            return (decode(pruned, schema=schema_from_segments(m),
+            return (decode(pruned, schema=m.decode_schema,
                            columns=[column])
                     .where(F.col(column) == F.lit(value))
                     .agg(F.count(F.lit(1)).alias("cnt")))
@@ -1596,35 +1503,19 @@ class TranscriptColumnStore:
         kernel work, at any store size. Raises for a column the store
         doesn't hold (a typo must not count 0)."""
         m = self._manifest_or_raise()
-        sub = m.where(F.col("column") == column)
+        rows = [r for r in m.rows if r["column"] == column]
+        cnt = sum(r["n_nulls"] for r in rows)
         if self._schema_log():
-            eff = {f.name for f in self.schema().fields}
-            if column not in eff:
+            if column not in {f.name for f in self.schema().fields}:
                 raise ValueError(f"unknown column {column!r}")
-            cov, total = self._column_coverage(m)
-            if cov.get(column, 0) < total:
-                # still exact, still metadata-only: every row of a
-                # rowgroup that predates the add IS null for the
-                # column — add those rowgroups' row counts (max of the
-                # per-column n_rows sums = the rowgroup's row count)
-                per_rg = (m.groupBy("rowgroup_id", "column")
-                          .agg(F.sum("n_rows").alias("nr"))
-                          .groupBy("rowgroup_id")
-                          .agg(F.max("nr").alias("nr"),
-                               F.max(F.when(F.col("column") == column, 1)
-                                     .otherwise(0)).alias("has")))
-                extra = per_rg.where(F.col("has") == 0).agg(
-                    F.coalesce(F.sum("nr"), F.lit(0)).alias("x"))
-                base = sub.agg(
-                    F.coalesce(F.sum("n_nulls"), F.lit(0)).alias("b"))
-                return (base.crossJoin(extra)
-                        .select((F.col("b") + F.col("x")).cast("long")
-                                .alias("cnt")))
-        elif self._logical_type(m, column) is None:
+            # still exact, still metadata-only: every row of a
+            # rowgroup that predates the add IS null for the column
+            has = {r["rowgroup_id"] for r in rows}
+            cnt += sum(n for rg, n in m.rowgroup_rows.items()
+                       if rg not in has)
+        elif not rows:
             raise ValueError(f"unknown column {column!r}")
-        return sub.agg(
-            F.coalesce(F.sum("n_nulls"), F.lit(0)).cast("long")
-            .alias("cnt"))
+        return self.spark.createDataFrame([(int(cnt),)], "cnt long")
 
     def topk(self, column: str, k: int, descending: bool = True,
              columns: list[str] | None = None,
@@ -1669,53 +1560,38 @@ class TranscriptColumnStore:
 
     # -- queries (S3/S4) -----------------------------------------------------
 
-    def _manifest_or_raise(self) -> DataFrame:
-        # the LIVE view (latest run per rowgroup/column, compaction
-        # tombstones applied): pruning keep-sets and manifest-only
-        # aggregates over the raw history would double-count rowgroups
-        # superseded by compact()
-        m = self.warehouse.live_manifest(self.spark)
+    def _manifest_or_raise(self) -> ManifestSnapshot:
+        # the driver-side snapshot of the current commit; its LIVE view
+        # (latest run per rowgroup/column, compaction tombstones
+        # applied) drives pruning and the manifest-only aggregates —
+        # the raw history would double-count rowgroups superseded by
+        # compact()
+        m = self.warehouse.snapshot(self.spark)
         if m is None:
             raise ValueError("empty store (no committed segments)")
         return m
 
-    def _logical_type(self, m: DataFrame, column: str) -> str | None:
-        row = (m.where(F.col("column") == column)
-               .select("logical_type").first())
-        return row["logical_type"] if row is not None else None
+    def _logical_type(self, m: ManifestSnapshot, column: str) -> str | None:
+        return m.logical_types.get(column)
 
-    def _logical_types(self, m: DataFrame, cols) -> dict[str, str]:
-        """Logical types for ALL of `cols` in one manifest job — a
-        multi-predicate query must not pay one driver round-trip per
-        column just for type lookup."""
-        want = list(dict.fromkeys(cols))
-        rows = (m.where(F.col("column").isin(want))
-                .select("column", "logical_type").distinct().collect())
-        return {r["column"]: r["logical_type"] for r in rows}
+    def _logical_types(self, m: ManifestSnapshot, cols) -> dict[str, str]:
+        return {c: m.logical_types[c] for c in dict.fromkeys(cols)
+                if c in m.logical_types}
 
-    def _pruned_segments(self, m: DataFrame, column: str, lo, hi,
+    def _pruned_segments(self, m: ManifestSnapshot, column: str, lo, hi,
                          eq: bool,
                          logical_type: str | None = None) -> DataFrame:
         """Segments restricted to rowgroups that may match the probe.
 
-        The predicate is evaluated on the MANIFEST (metadata table —
-        payload never scanned), and the kept ids come back as a
-        `rowgroup_id IN (...)` filter on the segments table, which the
-        parquet scan uses to skip whole row groups (PushedFilters —
-        gated in tests/test_plans.py). Oversized keep-sets fall back to
-        the left-semi join, which scales to any id count. Pass
-        `logical_type` when the caller already resolved it (one
-        metadata job for a multi-column query, not one per column)."""
+        The keep-set comes off the driver-side manifest snapshot (no
+        Spark job), and the segments read filters to it with a
+        `rowgroup_id IN (...)` the parquet scan uses to skip whole row
+        groups (PushedFilters — gated in tests/test_plans.py)."""
         lt = (logical_type if logical_type is not None
               else self._logical_type(m, column))
-        segs = self.warehouse.committed_segments(self.spark)
-        ids = prune_rowgroup_ids(m, column, lo, hi, eq, logical_type=lt)
-        if ids is not None:
-            return segs.where(F.col("rowgroup_id").isin(ids)), lt
-        prune = (prune_rowgroups_by_value if eq
-                 else prune_rowgroups_by_range)
-        args = (lo,) if eq else (lo, hi)
-        return prune(segs, column, *args, logical_type=lt), lt
+        kind, payload = ("eq", lo) if eq else ("range", (lo, hi))
+        ids = m.keep_ids(column, kind, payload, lt)
+        return self.warehouse.committed_segments(self.spark, m, ids), lt
 
     def _finish_query(self, out: DataFrame, cond,
                       columns: list[str] | None,
@@ -1746,6 +1622,80 @@ class TranscriptColumnStore:
                     delta.where(cond).select(*out.columns))
         return out if columns is None else out.select(*columns)
 
+    def _empty_result(self, m: ManifestSnapshot, columns, *probe_cols):
+        """The answer to a probe that matches nothing (an empty
+        IN-list): an empty frame with the result schema — under
+        pending evolution the EFFECTIVE one (drops away, adds present,
+        unknown names raise), so it unions with any non-empty result."""
+        if self._schema_log():
+            self._needs_fallback(m, *probe_cols, *(columns or []))
+            out = self.solid_rows().where(F.lit(False))
+        else:
+            out = decode(self.warehouse.committed_segments(self.spark, m,
+                                                           []),
+                         schema=m.decode_schema,
+                         columns=_inner_columns(columns, *probe_cols))
+        return out if columns is None else out.select(*columns)
+
+    def _probe(self, preds, columns: list[str] | None,
+               include_pending: bool, any_mode: bool = False) -> DataFrame:
+        """The one plan behind every predicate query. `preds` are
+        normalized `(column, kind, payload)` triples (kind eq / range /
+        in / null) combined by AND, or by OR with `any_mode`.
+
+        Planning reads only the driver-side manifest snapshot — no
+        Spark job: each predicate's keep-set (typed bounds, Bloom,
+        n_nulls) is evaluated there and the sets intersect (AND) or
+        unite (OR) before any payload is read. Under AND the most
+        selective kernel-safe predicate (smallest keep-set) drives the
+        encoded-form gather (`decode_matching[_in/_range/_null]`);
+        under OR no single branch may drive it (a row matching only
+        another branch would be lost), so the kept rowgroups decode
+        with encoded-level projection. Spark's own predicate then
+        re-applies, so result semantics are exactly the DataFrame
+        filter's."""
+        m = self._manifest_or_raise()
+        cols = [c for c, _k, _p in preds]
+        if self._needs_fallback(m, *cols, *(columns or [])):
+            norm = [(c, k, p, "") for c, k, p in preds
+                    if not (any_mode and k == "in" and not p)]
+            cond = _exact_pred_cond(norm, any_mode) if norm else F.lit(False)
+            return self._fallback_query(cond, columns, include_pending,
+                                        probe_cols=tuple(cols))
+        lts = self._logical_types(m, cols)
+        for c in cols:
+            # (a store whose every row was deleted has no live
+            # rowgroup left to type any column by)
+            if c not in lts and m.rowgroup_rows:
+                raise ValueError(f"unknown column {c!r}")
+        norm = [(c, k, p, lts.get(c) or "") for c, k, p in preds]
+        if any_mode:
+            # IN () matches nothing: drop the branch under OR
+            norm = [n for n in norm if not (n[1] == "in" and not n[2])]
+        if not norm or any(k == "in" and not p for _c, k, p, _lt in norm):
+            return self._empty_result(m, columns, *cols)
+        keep = [m.keep_ids(c, k, p, lt) for c, k, p, lt in norm]
+        if any_mode:
+            ids = None if None in keep else set().union(*keep)
+        else:
+            known = [set(s) for s in keep if s is not None]
+            ids = set.intersection(*known) if known else None
+        segs = self.warehouse.committed_segments(self.spark, m, ids)
+        inner = _inner_columns(columns, *cols)
+        # the most selective kernel-safe predicate drives the gather
+        order = sorted(range(len(norm)), key=lambda i: (
+            float("inf") if keep[i] is None else len(keep[i])))
+        best = None if any_mode else next(
+            (norm[i] for i in order if _kernel_safe_pred(*norm[i][1:])),
+            None)
+        if best is None:
+            out = decode(segs, schema=m.decode_schema, columns=inner)
+        else:
+            out = _decode_matching_pred(segs, best, inner, m.decode_schema)
+        cond = _exact_pred_cond(norm, any_mode)
+        return self._finish_query(out.where(cond), cond, columns,
+                                  include_pending)
+
     def query_by_value(self, column: str, value,
                        columns: list[str] | None = None,
                        include_pending: bool = False) -> DataFrame:
@@ -1771,23 +1721,8 @@ class TranscriptColumnStore:
         `columns` projects at the ENCODED level: only the named
         columns (plus the probe column) are gathered; a wide text
         column the caller didn't ask for never leaves storage."""
-        value = _naive_utc(value)
-        m = self._manifest_or_raise()
-        inner = _inner_columns(columns, column)
-        cond = F.col(column) == F.lit(value)
-        if self._needs_fallback(m, column, *(columns or [])):
-            return self._fallback_query(cond, columns, include_pending,
-                                        probe_cols=(column,))
-        pruned, lt = self._pruned_segments(m, column, value, value,
-                                           eq=True)
-        if not _kernel_safe_probe(lt or "", value):
-            out = decode(pruned, schema=schema_from_segments(m),
-                         columns=inner).where(cond)
-        else:
-            out = decode_matching(pruned, column, value, columns=inner,
-                                  schema=schema_from_segments(m)
-                                  ).where(cond)
-        return self._finish_query(out, cond, columns, include_pending)
+        return self._probe([(column, "eq", _naive_utc(value))], columns,
+                           include_pending)
 
     def query_by_range(self, column: str, lo, hi,
                        columns: list[str] | None = None,
@@ -1800,24 +1735,9 @@ class TranscriptColumnStore:
         so only nested/binary columns need the decode fallback.
         `columns` projects at the encoded level (probe column always
         gathered for the exact re-filter, then dropped)."""
-        lo, hi = _naive_utc(lo), _naive_utc(hi)
-        m = self._manifest_or_raise()
-        inner = _inner_columns(columns, column)
-        cond = F.col(column).between(F.lit(lo), F.lit(hi))
-        if self._needs_fallback(m, column, *(columns or [])):
-            return self._fallback_query(cond, columns, include_pending,
-                                        probe_cols=(column,))
-        pruned, lt = self._pruned_segments(m, column, lo, hi, eq=False)
-        lt = lt or ""
-        if lt.startswith("nested:") or lt == "binary":
-            out = decode(pruned, schema=schema_from_segments(m),
-                         columns=inner).where(cond)
-        else:
-            out = decode_matching_range(pruned, column, lo, hi,
-                                        columns=inner,
-                                        schema=schema_from_segments(m)
-                                        ).where(cond)
-        return self._finish_query(out, cond, columns, include_pending)
+        return self._probe(
+            [(column, "range", (_naive_utc(lo), _naive_utc(hi)))],
+            columns, include_pending)
 
     def query_by_in(self, column: str, values,
                     columns: list[str] | None = None,
@@ -1834,42 +1754,8 @@ class TranscriptColumnStore:
         pairs the exact-typed kernels can't reproduce fall back to
         decode + Spark's own `isin` over the pruned segments.
         `columns` projects at the encoded level."""
-        m = self._manifest_or_raise()
-        probes = _dedup_probes(values)
-        schema = schema_from_segments(m)
-        inner = _inner_columns(columns, column)
-        segs = self.warehouse.committed_segments(self.spark)
-        if not probes:
-            if self._schema_log():
-                # evolution-aware even for the empty frame: unknown /
-                # dropped names raise (inside _needs_fallback) and the
-                # result schema is the EFFECTIVE one, matching every
-                # non-empty result
-                self._needs_fallback(m, column, *(columns or []))
-                out = self.solid_rows().where(F.lit(False))
-                return out if columns is None else out.select(*columns)
-            out = decode(segs.where(F.lit(False)), schema=schema,
-                         columns=inner)
-            return out if columns is None else out.select(*columns)
-        if self._needs_fallback(m, column, *(columns or [])):
-            return self._fallback_query(_exact_in_cond(column, probes),
-                                        columns, include_pending,
-                                        probe_cols=(column,))
-        lt = self._logical_type(m, column)
-        ids = prune_rowgroup_ids_in(m, column, probes, logical_type=lt)
-        if ids is not None:
-            pruned = segs.where(F.col("rowgroup_id").isin(ids))
-        else:
-            pruned = prune_rowgroups_by_values(segs, column, probes,
-                                               logical_type=lt)
-        cond = _exact_in_cond(column, probes)
-        if not all(_kernel_safe_probe(lt or "", v) for v in probes):
-            out = decode(pruned, schema=schema, columns=inner).where(cond)
-        else:
-            out = decode_matching_in(pruned, column, probes,
-                                     columns=inner, schema=schema
-                                     ).where(cond)
-        return self._finish_query(out, cond, columns, include_pending)
+        return self._probe([(column, "in", _dedup_probes(values))],
+                           columns, include_pending)
 
     def semi_join(self, keys: DataFrame, on: str,
                   key_col: str | None = None,
@@ -1907,11 +1793,10 @@ class TranscriptColumnStore:
         kdf = (keys.select(key_col)
                .where(F.col(key_col).isNotNull()).distinct())
         lt = self._logical_type(m, on)
-        segs = self.warehouse.committed_segments(self.spark)
-        pruned = semi_join_segments(segs, m, on, kdf, lt)
+        segs = self.warehouse.committed_segments(self.spark, m)
+        pruned = semi_join_segments(segs, m.frame(self.spark), on, kdf, lt)
         inner = _inner_columns(columns, on)
-        out = decode(pruned, schema=schema_from_segments(m),
-                     columns=inner)
+        out = decode(pruned, schema=m.decode_schema, columns=inner)
         out = out.join(kdf, out[on] == kdf[key_col], "leftsemi")
         if columns is None:
             out = self._align_effective(out)
@@ -1935,28 +1820,13 @@ class TranscriptColumnStore:
         rowgroup without a single null before any payload is read, and
         the survivors probe the frame validity bitmap alone
         (`decode_matching_null` — zero body bytes on the probe column
-        for every scalar codec). `columns` projects at the encoded
+        for every scalar codec). Under pending schema evolution a
+        rowgroup that predates add_column() holds NO manifest row for
+        the column, yet every one of its rows matches: the decode
+        fallback null-fills them. `columns` projects at the encoded
         level."""
-        m = self._manifest_or_raise()
-        cond = F.col(column).isNull()
-        if self._needs_fallback(m, column, *(columns or [])):
-            # a rowgroup that predates add_column() holds NO manifest
-            # row for it — the n_nulls prune would wrongly drop it,
-            # yet every one of its rows matches IS NULL. The decode
-            # fallback null-fills, so the predicate sees them.
-            return self._fallback_query(cond, columns, include_pending,
-                                        probe_cols=(column,))
-        schema = schema_from_segments(m)
-        inner = _inner_columns(columns, column)
-        segs = self.warehouse.committed_segments(self.spark)
-        ids = prune_rowgroup_ids_null(m, column)
-        if ids is not None:
-            pruned = segs.where(F.col("rowgroup_id").isin(ids))
-        else:
-            pruned = prune_rowgroups_by_null(segs, column)
-        out = decode_matching_null(pruned, column, columns=inner,
-                                   schema=schema).where(cond)
-        return self._finish_query(out, cond, columns, include_pending)
+        return self._probe([(column, "null", None)], columns,
+                           include_pending)
 
     def query_by_prefix(self, column: str, prefix: str,
                         columns: list[str] | None = None,
@@ -1972,36 +1842,11 @@ class TranscriptColumnStore:
         superset. Non-ASCII prefixes (where the two orders can
         disagree) fall back to decode + filter — same rows, no skip.
         `columns` projects at the encoded level."""
-        m = self._manifest_or_raise()
         if not isinstance(prefix, str):
             raise ValueError("prefix must be a str")
-        if self._needs_fallback(m, column, *(columns or [])):
-            if not isinstance(self.schema()[column].dataType,
-                              T.StringType):
-                raise ValueError(f"query_by_prefix needs a string "
-                                 f"column; {column!r} is not")
-            return self._fallback_query(F.col(column).startswith(prefix),
-                                        columns, include_pending,
-                                        probe_cols=(column,))
-        lt = self._logical_type(m, column)
-        if lt != "string":
-            raise ValueError(
-                f"query_by_prefix needs a string column; {column!r} "
-                f"is {lt!r}")
-        schema = schema_from_segments(m)
-        inner = _inner_columns(columns, column)
-        cond = F.col(column).startswith(prefix)
-        upper = _prefix_upper(prefix) if prefix.isascii() else None
-        if not prefix or upper is None:
-            segs = self.warehouse.committed_segments(self.spark)
-            out = decode(segs, schema=schema, columns=inner).where(cond)
-        else:
-            pruned, _lt = self._pruned_segments(m, column, prefix, upper,
-                                                eq=False)
-            out = decode_matching_range(pruned, column, prefix, upper,
-                                        columns=inner, schema=schema
-                                        ).where(cond)
-        return self._finish_query(out, cond, columns, include_pending)
+        return self._string_probe(
+            column, F.col(column).startswith(prefix), "query_by_prefix",
+            columns, include_pending, prefix=prefix)
 
     def query_by_contains(self, column: str, needle: str,
                           columns: list[str] | None = None,
@@ -2018,29 +1863,47 @@ class TranscriptColumnStore:
         containment, so the kernel is already exact — the trailing
         filter is belt-and-braces, evaluated on matching rows only).
         `columns` projects at the encoded level."""
-        m = self._manifest_or_raise()
         if not isinstance(needle, str):
             raise ValueError("needle must be a str")
+        return self._string_probe(
+            column, F.col(column).contains(needle), "query_by_contains",
+            columns, include_pending, needle=needle)
+
+    def _string_probe(self, column: str, cond, op: str, columns,
+                      include_pending: bool, prefix: str | None = None,
+                      needle: str | None = None) -> DataFrame:
+        """Plan of the string-only probes: a prefix rides the range
+        machinery, a substring the contains kernel."""
+        m = self._manifest_or_raise()
         if self._needs_fallback(m, column, *(columns or [])):
             if not isinstance(self.schema()[column].dataType,
                               T.StringType):
-                raise ValueError(f"query_by_contains needs a string "
-                                 f"column; {column!r} is not")
-            return self._fallback_query(F.col(column).contains(needle),
-                                        columns, include_pending,
+                raise ValueError(f"{op} needs a string column; "
+                                 f"{column!r} is not")
+            return self._fallback_query(cond, columns, include_pending,
                                         probe_cols=(column,))
         lt = self._logical_type(m, column)
         if lt != "string":
             raise ValueError(
-                f"query_by_contains needs a string column; {column!r} "
-                f"is {lt!r}")
+                f"{op} needs a string column; {column!r} is {lt!r}")
         inner = _inner_columns(columns, column)
-        cond = F.col(column).contains(needle)
-        segs = self.warehouse.committed_segments(self.spark)
-        out = decode_matching_contains(
-            segs, column, needle, columns=inner,
-            schema=schema_from_segments(m)).where(cond)
-        return self._finish_query(out, cond, columns, include_pending)
+        schema = m.decode_schema
+        upper = (_prefix_upper(prefix) if prefix and prefix.isascii()
+                 else None)
+        if needle is not None:
+            out = decode_matching_contains(
+                self.warehouse.committed_segments(self.spark, m), column,
+                needle, columns=inner, schema=schema)
+        elif upper is None:
+            out = decode(self.warehouse.committed_segments(self.spark, m),
+                         schema=schema, columns=inner)
+        else:
+            pruned, _lt = self._pruned_segments(m, column, prefix, upper,
+                                                eq=False, logical_type=lt)
+            out = decode_matching_range(pruned, column, prefix, upper,
+                                        columns=inner, schema=schema)
+        return self._finish_query(out.where(cond), cond, columns,
+                                  include_pending)
 
     def query_where(self, predicates: dict[str, object],
                     columns: list[str] | None = None,
@@ -2065,91 +1928,8 @@ class TranscriptColumnStore:
         exactly the DataFrame conjunction's."""
         if not predicates:
             raise ValueError("query_where needs at least one predicate")
-        m = self._manifest_or_raise()
-        if self._needs_fallback(m, *predicates.keys(),
-                                *(columns or [])):
-            norm = [_norm_one_pred(c, p, "") for c, p in predicates.items()]
-            return self._fallback_query(
-                _exact_pred_cond(norm, any_mode=False),
-                columns, include_pending,
-                probe_cols=tuple(predicates.keys()))
-        schema = schema_from_segments(m)
-        segs = self.warehouse.committed_segments(self.spark)
-        lts = self._logical_types(m, predicates.keys())
-        norm = [_norm_one_pred(col, probe, lts.get(col) or "")
-                for col, probe in predicates.items()]
-        if any(kind == "in" and not payload
-               for _c, kind, payload, _lt in norm):
-            # IN () is false for every row -> the conjunction is empty.
-            # Under pending evolution the empty frame must still carry
-            # the EFFECTIVE schema (drops away, adds present) so it
-            # unions with any non-empty result
-            if self._schema_log():
-                out = self.solid_rows().where(F.lit(False))
-                return out if columns is None else out.select(*columns)
-            out = decode(segs.where(F.lit(False)), schema=schema,
-                         columns=_inner_columns(columns))
-            return out if columns is None else out.select(*columns)
-
-        # intersect manifest keep-sets; columns whose id-list form is
-        # unavailable (unprunable, or keep-set beyond the IN-list cap)
-        # chain the semi-join form instead — same predicate, any scale
-        ids: set[int] | None = None
-        sizes: dict[str, float] = {}
-        for col, kind, payload, lt in norm:
-            s = _pred_keep_ids(m, col, kind, payload, lt)
-            if s is None:
-                sizes[col] = float("inf")
-                if kind == "null":
-                    segs = prune_rowgroups_by_null(segs, col)
-                elif kind == "in":
-                    segs = prune_rowgroups_by_values(segs, col, payload,
-                                                     logical_type=lt)
-                elif kind == "range":
-                    segs = prune_rowgroups_by_range(segs, col, *payload,
-                                                    logical_type=lt)
-                else:
-                    segs = prune_rowgroups_by_value(segs, col, payload,
-                                                    logical_type=lt)
-            else:
-                sizes[col] = len(s)
-                ids = set(s) if ids is None else ids & set(s)
-        if ids is not None:
-            segs = segs.where(F.col("rowgroup_id").isin(sorted(ids)))
-
-        best = None  # most selective kernel-safe predicate
-        for col, kind, payload, lt in sorted(norm, key=lambda p: sizes[p[0]]):
-            if kind == "eq":
-                safe = _kernel_safe_probe(lt, payload)
-            elif kind == "in":
-                safe = all(_kernel_safe_probe(lt, v) for v in payload)
-            elif kind == "range":
-                safe = not (lt.startswith("nested:") or lt == "binary")
-            else:  # null: the validity probe covers every codec
-                safe = True
-            if safe:
-                best = (col, kind, payload)
-                break
-        # every predicate column must survive projection until the
-        # trailing exact filters run; the user's list selects at the end
-        inner = _inner_columns(columns, *[p[0] for p in norm])
-        if best is None:
-            out = decode(segs, schema=schema, columns=inner)
-        elif best[1] == "eq":
-            out = decode_matching(segs, best[0], best[2], columns=inner,
-                                  schema=schema)
-        elif best[1] == "in":
-            out = decode_matching_in(segs, best[0], best[2],
-                                     columns=inner, schema=schema)
-        elif best[1] == "range":
-            out = decode_matching_range(segs, best[0], *best[2],
-                                        columns=inner, schema=schema)
-        else:
-            out = decode_matching_null(segs, best[0], columns=inner,
-                                       schema=schema)
-        cond = _exact_pred_cond(norm, any_mode=False)
-        return self._finish_query(out.where(cond), cond, columns,
-                                  include_pending)
+        return self._probe(_norm_preds(predicates.items()), columns,
+                           include_pending)
 
     def query_any(self, predicates, columns: list[str] | None = None,
                   include_pending: bool = False) -> DataFrame:
@@ -2160,54 +1940,23 @@ class TranscriptColumnStore:
         several probes on one column, a list of `(column, probe)`
         pairs.
 
-        Pruning under OR is the keep-set UNION, evaluated in one
-        manifest pass (`plans/pruning.prune_rowgroup_ids_any` — bounds
-        AND bloom AND n_nulls per branch, OR across branches): a
-        rowgroup is skipped only when EVERY branch excludes it. One
-        unprunable branch makes the whole prune a conservative no-op —
-        under OR that branch alone could match anywhere. Unlike the
-        conjunctive path there is no single-predicate encoded probe
-        (a row matching only another branch would be lost), so the
-        surviving rowgroups decode with encoded-level projection to
-        the needed columns and Spark's own OR filter runs on top —
-        results are exactly the DataFrame disjunction's."""
+        Pruning under OR is the keep-set UNION, evaluated on the
+        manifest snapshot (bounds AND bloom AND n_nulls per branch, OR
+        across branches): a rowgroup is skipped only when EVERY branch
+        excludes it. One unprunable branch makes the whole prune a
+        conservative no-op — under OR that branch alone could match
+        anywhere. Unlike the conjunctive path there is no
+        single-predicate encoded probe (a row matching only another
+        branch would be lost), so the surviving rowgroups decode with
+        encoded-level projection to the needed columns and Spark's own
+        OR filter runs on top — results are exactly the DataFrame
+        disjunction's."""
         items = (list(predicates.items())
                  if isinstance(predicates, dict) else list(predicates))
         if not items:
             raise ValueError("query_any needs at least one predicate")
-        m = self._manifest_or_raise()
-        if self._needs_fallback(m, *[c for c, _p in items],
-                                *(columns or [])):
-            norm = [p for p in (_norm_one_pred(c, pr, "")
-                                for c, pr in items)
-                    if not (p[1] == "in" and not p[2])]
-            cond = (_exact_pred_cond(norm, any_mode=True) if norm
-                    else F.lit(False))
-            return self._fallback_query(
-                cond, columns, include_pending,
-                probe_cols=tuple(c for c, _p in items))
-        schema = schema_from_segments(m)
-        segs = self.warehouse.committed_segments(self.spark)
-        lts = self._logical_types(m, [c for c, _p in items])
-        norm = [p for p in
-                (_norm_one_pred(col, probe, lts.get(col) or "")
-                 for col, probe in items)
-                # IN () matches nothing: drop the branch under OR
-                if not (p[1] == "in" and not p[2])]
-        inner = _inner_columns(columns, *[p[0] for p in norm])
-        if not norm:  # every branch was an empty IN-list
-            if self._schema_log():
-                out = self.solid_rows().where(F.lit(False))
-                return out if columns is None else out.select(*columns)
-            out = decode(segs.where(F.lit(False)), schema=schema,
-                         columns=inner)
-            return out if columns is None else out.select(*columns)
-
-        pruned = prune_segments_any(m, segs, norm)
-        out = decode(pruned, schema=schema, columns=inner)
-        cond = _exact_pred_cond(norm, any_mode=True)
-        return self._finish_query(out.where(cond), cond, columns,
-                                  include_pending)
+        return self._probe(_norm_preds(items), columns, include_pending,
+                           any_mode=True)
 
     def _align_effective(self, out: DataFrame) -> DataFrame:
         """Project a decoded frame to the effective schema (no-op
@@ -2242,4 +1991,4 @@ class TranscriptColumnStore:
         segs = self.warehouse.committed_segments(self.spark)
         return self._align_effective(
             decode_window_global(segs, start, length,
-                                 schema=schema_from_segments(m)))
+                                 schema=m.decode_schema))

@@ -146,6 +146,7 @@ def _pred_dicts():
          "v": [3, 7, 11, 19]},                           # tz range + IN
         {"cat": "a", "v": (5, 20), "x": (0.1, 4.9),
          "ts": (base, base + dt.timedelta(minutes=9000))},  # 4-way AND
+        {"v": ("1", "9")},                   # range bounds of wrong type
     ]
 
 
@@ -196,3 +197,18 @@ def test_operator_quantiles_unsafe_probe_direct(spark, wstore):
                   .where(F.col("id").isNotNull()).select("id").collect())
     assert vals, "fixture must hold v=7 rows"
     assert got == {0.0: vals[0], 1.0: vals[-1]}
+
+
+def test_operator_where_unknown_column_raises(spark, wstore):
+    """A direct operator call whose where-column the store doesn't hold
+    fails on the driver with a ValueError naming it, not with an
+    opaque Spark analysis error after typed pruning was skipped."""
+    from columnstore_spark.operators.aggregate import quantiles
+    from columnstore_spark.operators.topk import topk
+
+    store, _df = wstore
+    segs = store.warehouse.committed_segments(spark)
+    with pytest.raises(ValueError, match="unknown column 'nope'"):
+        topk(segs, "id", 3, where={"nope": 1})
+    with pytest.raises(ValueError, match="unknown column 'nope'"):
+        quantiles(segs, "v", [0.5], where=("nope", 1))

@@ -223,35 +223,6 @@ class ManifestSnapshot:
             out[rg].append((col, run, att))
         return out
 
-    @cached_property
-    def _committed(self) -> dict[tuple[str, str], dict[int, set]]:
-        """(run_id, attempt_id) -> {rowgroup: columns} of every 'done'
-        row in the history: by the commit protocol, exactly the segment
-        rows that attempt wrote."""
-        done = self.raw.filter(pc.equal(self.raw["status"], "done"))
-        out: dict = defaultdict(lambda: defaultdict(set))
-        for rg, col, run, att in _key_rows(done):
-            out[(run, att)][rg].add(col)
-        return out
-
-    @cached_property
-    def _whole(self) -> set[int]:
-        """Live rowgroups whose live rows are ALL the rows one attempt
-        committed for them, and no other attempt committed them: in
-        that attempt's files, rowgroup_id alone picks out live rows."""
-        owners: dict[int, list] = defaultdict(list)
-        for attempt, rgs in self._committed.items():
-            for rg, cols in rgs.items():
-                owners[rg].append((attempt, cols))
-        out = set()
-        for rg, keys in self._keys.items():
-            live = {(run, att) for _c, run, att in keys}
-            if len(owners[rg]) == 1 and len(live) == 1:
-                attempt, cols = owners[rg][0]
-                if attempt in live and cols == {c for c, _r, _a in keys}:
-                    out.add(rg)
-        return out
-
     def segment_schema(self, spark: SparkSession, backend) -> T.StructType:
         """The segments table's schema: merged from the pinned files'
         footers; for a store without segment rows, the manifest's
@@ -274,36 +245,25 @@ class ManifestSnapshot:
         """The committed segment rows of `rowgroups` (None = every live
         rowgroup): the pinned files that can hold them, read with an
         explicit schema, filtered to this commit's live keys. Small
-        keep-sets filter by literal lists (the rowgroup_id IN list
+        keep-sets filter by one SQL condition (its rowgroup_id IN list
         reaches the parquet scan as a pushed filter); larger ones
         semi-join a broadcast key frame."""
         ids = (sorted(self._keys) if rowgroups is None
                else sorted(set(rowgroups) & self._keys.keys()))
         schema = self.segment_schema(spark, backend)
         keys = [(rg, *k) for rg in ids for k in self._keys[rg]]
-        attempts = {(run, att) for _rg, _c, run, att in keys}
         if self.files is None:
             segs = backend.read_segments(spark)
         else:
-            files = [(f, self._attempt(f)) for f in self.files
-                     if f.n_rows and _overlaps(ids, f.rowgroups)]
-            files = [(f, a) for f, a in files if a is None or a in attempts]
-            if not files:
+            # a file one attempt wrote holds live rows only if that
+            # attempt is live (None: attempt unknown, keep the file)
+            live = {(run, att) for _rg, _c, run, att in keys} | {None}
+            paths = [f.path for f in self.files
+                     if f.n_rows and _overlaps(ids, f.rowgroups)
+                     and self._attempt(f) in live]
+            if not paths:
                 return spark.createDataFrame([], schema)
-            segs = spark.read.schema(schema).parquet(
-                *[f.path for f, _a in files])
-            if (all(a is not None for _f, a in files)
-                    and self._whole.issuperset(ids)):
-                # each file holds one live attempt's rows: a rowgroup
-                # filter is exact, and none is needed when those
-                # attempts wrote no rowgroup outside the keep-set
-                wrote = {rg for a in attempts for rg in self._committed[a]}
-                if wrote <= set(ids):
-                    return segs
-                if len(ids) <= _ISIN_CAP:
-                    return segs.where(F.col("rowgroup_id").isin(ids))
-                return _semi_join(spark, segs, [(i,) for i in ids],
-                                  ["rowgroup_id"])
+            segs = spark.read.schema(schema).parquet(*paths)
         if not keys:
             return segs.where(F.lit(False))
         with_att = self.has_attempt and "attempt_id" in segs.columns

@@ -1844,9 +1844,27 @@ class TranscriptColumnStore:
         `columns` projects at the encoded level."""
         if not isinstance(prefix, str):
             raise ValueError("prefix must be a str")
-        return self._string_probe(
-            column, F.col(column).startswith(prefix), "query_by_prefix",
-            columns, include_pending, prefix=prefix)
+        m = self._manifest_or_raise()
+        cond = F.col(column).startswith(prefix)
+        fallback = self._string_fallback(m, column, "query_by_prefix",
+                                         cond, columns, include_pending)
+        if fallback is not None:
+            return fallback
+        inner = _inner_columns(columns, column)
+        upper = (_prefix_upper(prefix) if prefix and prefix.isascii()
+                 else None)
+        if upper is None:
+            out = decode(self.warehouse.committed_segments(self.spark, m),
+                         schema=m.decode_schema, columns=inner)
+        else:
+            pruned, _lt = self._pruned_segments(m, column, prefix, upper,
+                                                eq=False,
+                                                logical_type="string")
+            out = decode_matching_range(pruned, column, prefix, upper,
+                                        columns=inner,
+                                        schema=m.decode_schema)
+        return self._finish_query(out.where(cond), cond, columns,
+                                  include_pending)
 
     def query_by_contains(self, column: str, needle: str,
                           columns: list[str] | None = None,
@@ -1865,16 +1883,24 @@ class TranscriptColumnStore:
         `columns` projects at the encoded level."""
         if not isinstance(needle, str):
             raise ValueError("needle must be a str")
-        return self._string_probe(
-            column, F.col(column).contains(needle), "query_by_contains",
-            columns, include_pending, needle=needle)
-
-    def _string_probe(self, column: str, cond, op: str, columns,
-                      include_pending: bool, prefix: str | None = None,
-                      needle: str | None = None) -> DataFrame:
-        """Plan of the string-only probes: a prefix rides the range
-        machinery, a substring the contains kernel."""
         m = self._manifest_or_raise()
+        cond = F.col(column).contains(needle)
+        fallback = self._string_fallback(m, column, "query_by_contains",
+                                         cond, columns, include_pending)
+        if fallback is not None:
+            return fallback
+        out = decode_matching_contains(
+            self.warehouse.committed_segments(self.spark, m), column,
+            needle, columns=_inner_columns(columns, column),
+            schema=m.decode_schema)
+        return self._finish_query(out.where(cond), cond, columns,
+                                  include_pending)
+
+    def _string_fallback(self, m, column: str, op: str, cond, columns,
+                         include_pending: bool) -> DataFrame | None:
+        """The decode-and-filter plan of a string-only probe when the
+        encoded path cannot serve it (`_needs_fallback`), else None;
+        raises ValueError unless `column` is a string column."""
         if self._needs_fallback(m, column, *(columns or [])):
             if not isinstance(self.schema()[column].dataType,
                               T.StringType):
@@ -1886,24 +1912,7 @@ class TranscriptColumnStore:
         if lt != "string":
             raise ValueError(
                 f"{op} needs a string column; {column!r} is {lt!r}")
-        inner = _inner_columns(columns, column)
-        schema = m.decode_schema
-        upper = (_prefix_upper(prefix) if prefix and prefix.isascii()
-                 else None)
-        if needle is not None:
-            out = decode_matching_contains(
-                self.warehouse.committed_segments(self.spark, m), column,
-                needle, columns=inner, schema=schema)
-        elif upper is None:
-            out = decode(self.warehouse.committed_segments(self.spark, m),
-                         schema=schema, columns=inner)
-        else:
-            pruned, _lt = self._pruned_segments(m, column, prefix, upper,
-                                                eq=False, logical_type=lt)
-            out = decode_matching_range(pruned, column, prefix, upper,
-                                        columns=inner, schema=schema)
-        return self._finish_query(out.where(cond), cond, columns,
-                                  include_pending)
+        return None
 
     def query_where(self, predicates: dict[str, object],
                     columns: list[str] | None = None,

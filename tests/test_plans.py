@@ -165,7 +165,14 @@ def test_group_agg_plan_shape(spark, warehouse):
 
     segs = warehouse.committed_segments(spark)
     df = group_agg(segs, "tool", "turn_idx", where=("role", "tool"))
-    plan = _executed_plan(df)
+    # the scan also carries the live-key filter: print pushed filters
+    # past Spark's default 100-character cut
+    old = spark.conf.get("spark.sql.maxMetadataStringLength", "100")
+    spark.conf.set("spark.sql.maxMetadataStringLength", "10000")
+    try:
+        plan = _executed_plan(df)
+    finally:
+        spark.conf.set("spark.sql.maxMetadataStringLength", old)
     # AQE prints Final + Initial sections; gate on the final plan only
     plan = plan.split("== Initial Plan ==")[0]
     flat = plan.replace(" ", "")

@@ -88,32 +88,31 @@ def test_plan_sees_one_snapshot_across_compact_and_vacuum(
 @pytest.fixture(scope="module")
 def compacted(spark, tmp_path_factory, batches):
     """A store mixing compacted and freshly closed rowgroups, with the
-    answers of an IN lookup and a full read."""
+    answers of an IN lookup and a full read (checked against the
+    source rows)."""
     t, keys = batches
     root = str(tmp_path_factory.mktemp("filters"))
     store = _batched_store(spark, root, t)
     store.compact()
-    store.add_range(t.where(F.col("turn_idx") < 5))
+    extra = t.where(F.col("turn_idx") < 5)
+    store.add_range(extra)
     store.close()
-    return root, (_rows(store.query_by_in("conv_id", keys)),
-                  _rows(store.rows()))
+    rows = store.rows()
+    want = _rows(rows)
+    assert want == _rows(t.unionAll(extra).select(*rows.columns))
+    return root, (_rows(store.query_by_in("conv_id", keys)), want)
 
 
-@pytest.mark.parametrize("whole", [True, False])
 @pytest.mark.parametrize("cap", [None, 0])
 def test_segment_read_filters_agree(spark, batches, compacted, monkeypatch,
-                                    whole, cap):
-    """Every way the snapshot restricts the pinned files to live rows —
-    a rowgroup filter when each kept rowgroup is one attempt's whole
-    commit, else the exact live-key filter; literal lists, or a
-    broadcast semi-join past the IN-list cap — gives the same rows."""
+                                    cap):
+    """Both ways the snapshot restricts the pinned files to live rows —
+    the literal live-key filter, or a broadcast semi-join past the
+    IN-list cap — give the same rows."""
     from columnstore_spark.sources import snapshot
 
     _t, keys = batches
     root, want = compacted
-    if not whole:
-        monkeypatch.setattr(snapshot.ManifestSnapshot, "_whole",
-                            property(lambda _self: set()))
     if cap is not None:
         monkeypatch.setattr(snapshot, "_ISIN_CAP", cap)
     store = TranscriptColumnStore(spark, root, num_rowgroups=2)

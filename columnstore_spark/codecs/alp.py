@@ -127,31 +127,11 @@ def _analyze(vals: np.ndarray) -> tuple[int, np.ndarray, np.ndarray] | None:
     return k, d, exc
 
 
-# consume-once cache: the chooser always estimate_size()s immediately
-# before encoding the SAME array, so the full-array analysis is reused
-# instead of recomputed (the FSST trial-cache pattern, fsst.py:156).
-# Unlike FSST — where any merge table is VALID for any input and a
-# stale hit only costs ratio — ALP's analysis (d, exceptions) is
-# input-specific, so a stale hit would corrupt data. The cache
-# therefore holds a strong reference to the analyzed array itself and
-# matches on object IDENTITY: id() can't be recycled while we hold
-# the reference, so a hit is provably the same array.
-_last_analysis: tuple[np.ndarray, tuple] | None = None
-
-
-def clear_cache() -> None:
-    """Drop the trial analysis (chooser calls this on rejection)."""
-    global _last_analysis
-    _last_analysis = None
-
-
-def encode(vals: np.ndarray, logical: str) -> bytes:
-    global _last_analysis
-    if _last_analysis is not None and _last_analysis[0] is vals:
-        res = _last_analysis[1]
-        _last_analysis = None
-    else:
-        res = _analyze(vals)
+def encode(vals: np.ndarray, logical: str, trained=None) -> bytes:
+    """`trained`: the analysis `estimate` made of THIS array (the
+    chooser passes it on, so an array is analyzed once); else analyze
+    here. Unlike FSST's merges it is input-specific."""
+    res = trained if trained is not None else _analyze(vals)
     if res is None:
         raise ValueError("ALP not applicable; chooser must not pick it")
     k, d, exc = res
@@ -187,21 +167,23 @@ def decode(body: memoryview, n: int, logical: str) -> np.ndarray:
     return out
 
 
-def estimate_size(vals: np.ndarray, logical: str) -> int | None:
-    """Exact encoded size (the chooser's candidate arithmetic), or None
-    when ALP can't beat half-exact on the sample. The full-array
-    analysis is cached consume-once for the encode() that follows a
-    winning estimate."""
-    global _last_analysis
+def estimate(vals: np.ndarray, logical: str) -> tuple[int, tuple] | None:
+    """-> (exact encoded size, the analysis to `encode` with), or None
+    when ALP can't beat half-exact on the sample."""
     res = _analyze(vals)
     if res is None:
-        _last_analysis = None
         return None
-    _last_analysis = (vals, res)
     k, d, exc = res
     n_exc = int(exc.sum())
     itemsize = np.dtype(V.FIXED_LOGICAL[logical]).itemsize
     lo, hi = int(d.min()), int(d.max())
     # varints: k (<=3 B), n_exc (<=5 B), pos_len (<=5 B); positions ~2 B/exc
     return (13 + 2 * n_exc + n_exc * itemsize
-            + forpack.estimate_for_size(int(d.size), lo, hi))
+            + forpack.estimate_for_size(int(d.size), lo, hi)), res
+
+
+def estimate_size(vals: np.ndarray, logical: str) -> int | None:
+    """The exact encoded size alone (the chooser's candidate
+    arithmetic), or None when ALP does not apply."""
+    est = estimate(vals, logical)
+    return None if est is None else est[0]

@@ -33,12 +33,16 @@ _FSST_MIN_AVG_LEN = 12.0
 _FSST_MIN_BLOB = 4096
 
 
-def choose(st: SegmentStats, logical: str, vals, mode: str = MODE_SIZE) -> int:
-    """Return the codec id to use for this segment."""
+def choose(st: SegmentStats, logical: str, vals,
+           mode: str = MODE_SIZE) -> tuple[int, object]:
+    """Return (codec id, trained state) for this segment. The state is
+    what the winner's trial estimate learned on `vals` — FSST's merges,
+    ALP's analysis — for its `encode(..., trained=)`, so a chunk is
+    trained once; None for every other codec."""
     if mode == MODE_NONE or st.n_rows == st.n_nulls or st.n_distinct == 0:
-        return plain.CODEC_ID
+        return plain.CODEC_ID, None
     if st.n_distinct == 1:
-        return constant.CODEC_ID
+        return constant.CODEC_ID, None
 
     # plain's candidate must be its EXACT written size: for var columns
     # write_var spends ~1 B/value on varint lengths, not the 4 B/value
@@ -49,6 +53,7 @@ def choose(st: SegmentStats, logical: str, vals, mode: str = MODE_SIZE) -> int:
     else:
         plain_size = st.raw_bytes  # fixed width: write_fixed == raw
     candidates: dict[int, int] = {plain.CODEC_ID: plain_size}
+    trained: dict[int, object] = {}
     candidates[dictrle.CODEC_ID] = dictrle.estimate_size(
         st.n_rows - st.n_nulls, st.n_distinct, st.n_runs,
         st.dict_raw_bytes, st.max_run_len)
@@ -68,9 +73,9 @@ def choose(st: SegmentStats, logical: str, vals, mode: str = MODE_SIZE) -> int:
         # size arithmetic arbitrates ALP vs dict (a 10k-distinct
         # 4-decimal column packs to ~14 bits/value under ALP, beating
         # the dictionary)
-        est = alp.estimate_size(vals, logical)
+        est = alp.estimate(vals, logical)
         if est is not None:
-            candidates[alp.CODEC_ID] = est
+            candidates[alp.CODEC_ID], trained[alp.CODEC_ID] = est
 
     if (mode == MODE_SIZE and logical in V.VAR_LOGICAL
             and isinstance(vals, V.VarChunk)
@@ -78,11 +83,8 @@ def choose(st: SegmentStats, logical: str, vals, mode: str = MODE_SIZE) -> int:
             and len(vals.blob) >= _FSST_MIN_BLOB
             # high-cardinality text only: low-cardinality is dict's job
             and st.n_distinct > (st.n_rows - st.n_nulls) // 4):
-        candidates[fsst.CODEC_ID] = fsst.estimate_size(vals)
+        candidates[fsst.CODEC_ID], trained[fsst.CODEC_ID] = (
+            fsst.estimate(vals))
 
     winner = min(candidates.items(), key=lambda kv: (kv[1], kv[0]))[0]
-    if fsst.CODEC_ID in candidates and winner != fsst.CODEC_ID:
-        fsst.clear_cache()  # never let a recycled id() reuse this table
-    if alp.CODEC_ID in candidates and winner != alp.CODEC_ID:
-        alp.clear_cache()
-    return winner
+    return winner, trained.get(winner)

@@ -61,7 +61,7 @@ def train(sample: bytes, max_merges: int = MAX_MERGES) -> list[tuple[int, int]]:
     The trainer's own replace residual is deliberately NOT exposed as
     a size estimate: its exhaustive sequential replaces compress
     repetitive data 20-50% better than the rounds-based encoder
-    achieves, so `estimate_size` trial-applies the REAL encoder
+    achieves, so `estimate` trial-applies the REAL encoder
     instead — do not wire the residual back into the chooser.
     """
     merges: list[tuple[int, int]] = []
@@ -207,38 +207,15 @@ def _merge_high(low: bytes, high_pos: np.ndarray, high: bytes) -> bytes:
     return out.tobytes()
 
 
-# (chunk key, merges) from the most recent estimate_size call: the
-# chooser always trial-estimates immediately before encoding the same
-# chunk, so the trained table is reused instead of retrained (~30% of
-# the text kernel). Any merge table is VALID for any input — worst case
-# a stale hit costs ratio, never correctness. The key is
-# (id, blob length, first 32 bytes) so a recycled id() on a different
-# chunk cannot silently match (consume-once + clear-on-reject already
-# make that window tiny; the fingerprint closes it).
-_last_trained: tuple[tuple, list[tuple[int, int]]] | None = None
-
-
-def _chunk_key(vals: "V.VarChunk") -> tuple:
-    blob = vals.blob
-    return (id(vals), len(blob), bytes(blob[:32]))
-
-
-def clear_cache() -> None:
-    """Drop the trial-trained table. The chooser calls this whenever it
-    rejects FSST for a chunk: a stale entry keyed by a recycled id()
-    could otherwise silently encode a later chunk with a merge table
-    trained on unrelated data (correct but ratio-degrading)."""
-    global _last_trained
-    _last_trained = None
-
-
 def encode(vals: "V.VarChunk", logical: str,
-           max_merges: int = MAX_MERGES) -> bytes:
-    global _last_trained
+           max_merges: int = MAX_MERGES,
+           trained: list[tuple[int, int]] | None = None) -> bytes:
+    """`trained`: the merges `estimate` learned on this chunk (the
+    chooser passes them on, so a chunk trains once); else train here.
+    Any merge table is valid for any input."""
     low, high_pos, high = _split_high(vals.blob)
-    if _last_trained is not None and _last_trained[0] == _chunk_key(vals):
-        merges = _last_trained[1]
-        _last_trained = None
+    if trained is not None:
+        merges = trained
     else:
         merges = train(low[:TRAIN_SAMPLE_BYTES], max_merges)
     enc = _apply_merges(low, merges)
@@ -285,10 +262,13 @@ def decode(body: memoryview, n: int, logical: str) -> "V.VarChunk":
     return V.VarChunk(lengths=lengths, blob=blob)
 
 
-def estimate_size(vals: "V.VarChunk",
-                  sample_bytes: int = ESTIMATE_SAMPLE_BYTES,
-                  max_merges: int = MAX_MERGES) -> int:
-    """Trial-encode with the REAL encoder over the full estimate
+def estimate(vals: "V.VarChunk",
+             sample_bytes: int = ESTIMATE_SAMPLE_BYTES,
+             max_merges: int = MAX_MERGES
+             ) -> tuple[int, list[tuple[int, int]]]:
+    """-> (estimated encoded size, the trained merges to `encode` with).
+
+    Trial-encode with the REAL encoder over the full estimate
     sample and extrapolate the ratio to the blob. Training still reads
     only its 16 KiB slice (the cheap half); the trial apply covers the
     whole 64 KiB sample because merges trained on a head slice
@@ -299,8 +279,7 @@ def estimate_size(vals: "V.VarChunk",
     the high bytes."""
     blob = vals.blob
     if len(blob) == 0:
-        return 16
-    global _last_trained
+        return 16, []
     if len(blob) > sample_bytes:
         # two-region sample: a pure prefix over-represents the blob's
         # head (sorted id-like columns compress their first 64 KiB far
@@ -317,7 +296,6 @@ def estimate_size(vals: "V.VarChunk",
     mask = arr < 0x80
     low = arr[mask].tobytes() if not mask.all() else bytes(sample)
     merges = train(low[:TRAIN_SAMPLE_BYTES], max_merges)
-    _last_trained = (_chunk_key(vals), merges)
     # trial-apply over the sample's FULL low stream (not just the
     # train slice): merges trained on a 16 KiB head compress that
     # head better than the rest of the data, so a train-slice-only
@@ -331,4 +309,4 @@ def estimate_size(vals: "V.VarChunk",
     low_ratio = len(enc) / max(len(trial_low), 1)
     ratio = low_frac * low_ratio + (1.0 - low_frac) * 2.0
     lens_bytes = int(bitpack.varint_nbytes(vals.lengths.astype(np.uint64)).sum())
-    return int(len(blob) * ratio) + lens_bytes + 2 * len(merges) + 16
+    return int(len(blob) * ratio) + lens_bytes + 2 * len(merges) + 16, merges

@@ -261,7 +261,7 @@ _DECODERS = {
 
 def _encode_word(w: np.ndarray, mode: str) -> bytes:
     st = collect(w, "int64", int(w.size), 0)
-    codec = chooser.choose(st, "int64", w, mode)
+    codec, _ = chooser.choose(st, "int64", w, mode)
     if codec == dictrle.CODEC_ID:
         body = dictrle.encode(w, "int64", codes=st.codes, uniques=st.uniques)
     else:
@@ -454,11 +454,14 @@ def encode_segment(arr: pa.Array, mode: str = chooser.MODE_SIZE,
         body = _encode_split128(vals, logical, mode)
     else:
         st = collect(vals, logical, n, n_nulls)
+        trained = None
         if codec is None:
-            codec = chooser.choose(st, logical, vals, mode)
+            codec, trained = chooser.choose(st, logical, vals, mode)
         if codec == dictrle.CODEC_ID:
             body = dictrle.encode(vals, logical,
                                   codes=st.codes, uniques=st.uniques)
+        elif trained is not None:
+            body = _ENCODERS[codec](vals, logical, trained=trained)
         else:
             body = _ENCODERS[codec](vals, logical)
     flags = FLAG_HAS_NULLS if validity is not None else 0

@@ -1,19 +1,23 @@
 """Arrow-side plumbing shared by the encode/decode stages.
 
-Both stages run as ``mapInArrow`` over partitions that were hash-
-partitioned and sorted by rowgroup id, so each rowgroup arrives as a
-contiguous block of record batches. Streaming the group boundary
-detection (instead of ``groupBy().applyInPandas``) keeps peak memory at
-one rowgroup and — critically — never materializes per-row Python
+Both stages run as ``mapInArrow`` over rowgroup-sorted input, so each
+rowgroup arrives as a contiguous block of record batches: either a
+partition hash-partitioned and sorted by rowgroup id, or the sorted
+table a task reads itself from a snapshot's pinned segment files
+(`PinnedRead`). Streaming the group boundary detection (instead of
+``groupBy().applyInPandas``) never materializes per-row Python
 objects: strings stay inside Arrow buffers end-to-end
 (BASELINE.json input_hint: "no per-row Python").
 """
 
 from __future__ import annotations
 
+import bisect
+import dataclasses
 from collections.abc import Iterator
 
 import pyarrow as pa
+from pyspark.sql import SparkSession
 from pyspark.sql import types as T
 
 try:
@@ -74,3 +78,101 @@ def iter_groups(batches: Iterator[pa.RecordBatch],
             pending.append(batch.slice(s, e - s))
     if pending:
         yield current, pa.Table.from_batches(pending)
+
+
+def overlaps(ids: list[int], rng: tuple[int, int] | None) -> bool:
+    """Whether sorted `ids` hit the inclusive range `rng` (None: the
+    range is unknown, assume a hit)."""
+    if rng is None:
+        return True
+    i = bisect.bisect_left(ids, rng[0])
+    return i < len(ids) and ids[i] <= rng[1]
+
+
+# the segment columns a decode-shaped read needs, plus its key columns
+READ_COLS = ("rowgroup_id", "column", "col_idx", "logical_type", "payload",
+             "run_id", "attempt_id")
+
+
+@dataclasses.dataclass(frozen=True)
+class PinnedRead:
+    """A snapshot's kept segments, read by the decode stage itself.
+
+    `files` are the snapshot's pinned segment files as (path, rowgroup
+    id range, commit attempt) — range and attempt None when unknown;
+    `keys` maps each kept rowgroup id to its live (column, run_id,
+    attempt_id) keys; `columns` optionally projects by column name.
+    `read_schema` is the Arrow schema the files are read with (the
+    `READ_COLS` they hold, merged); keys compare on attempt_id only
+    when it has one. `schema` is the snapshot's decode schema. Built by
+    `ManifestSnapshot.pinned`; consumed by `decode._rowgroup_stage`,
+    whose tasks each read a contiguous slice of the ids with
+    `read_task`."""
+    spark: SparkSession
+    files: tuple
+    keys: dict
+    read_schema: pa.Schema
+    schema: T.StructType
+    columns: frozenset | None = None
+
+    @property
+    def ids(self) -> list[int]:
+        return sorted(self.keys)
+
+    def project(self, columns) -> PinnedRead:
+        """Only the segments of `columns`."""
+        cols = frozenset(columns)
+        if self.columns is not None:
+            cols &= self.columns
+        return dataclasses.replace(self, columns=cols)
+
+    def only(self, rowgroups) -> PinnedRead:
+        """Only the segments of `rowgroups`."""
+        keep = set(rowgroups)
+        return dataclasses.replace(
+            self, keys={rg: k for rg, k in self.keys.items() if rg in keep})
+
+    def tasks(self, n: int) -> list[tuple]:
+        """At most `n` `read_task` argument tuples, one per contiguous
+        slice of the kept ids: the files that can hold the slice
+        (rowgroup range overlaps it, and the attempt that wrote the
+        file is live in it), the slice, and its exact key set."""
+        ids = self.ids
+        n = min(n, len(ids))
+        out = []
+        for i in range(n):
+            part = ids[i * len(ids) // n:(i + 1) * len(ids) // n]
+            keys = {(rg, col, run, att) for rg in part
+                    for col, run, att in self.keys[rg]
+                    if self.columns is None or col in self.columns}
+            live = {(run, att) for _rg, _c, run, att in keys} | {None}
+            paths = [p for p, rng, attempt in self.files
+                     if overlaps(part, rng) and attempt in live]
+            if "attempt_id" not in self.read_schema.names:
+                keys = {(rg, col, run, "") for rg, col, run, _a in keys}
+            if keys and paths:
+                out.append((paths, self.read_schema, part, keys))
+        return out
+
+
+def read_task(paths: list[str], schema: pa.Schema, ids: list[int],
+              keys: set) -> pa.Table:
+    """One `PinnedRead` work item on an executor: the segment rows of
+    `paths`, read with `schema` (a file without one of its columns
+    reads it as NULL), whose rowgroup is in `ids` (a pushed parquet
+    filter) and whose (rowgroup_id, column, run_id, attempt_id) is a
+    live key, sorted by (rowgroup_id, col_idx). A NULL or absent
+    attempt_id compares as '' (rows from before attempt_id existed)."""
+    import pyarrow.compute as pc
+    import pyarrow.dataset as ds
+
+    t = ds.dataset(paths, schema=schema, format="parquet").to_table(
+        filter=ds.field("rowgroup_id").isin(ids))
+    att = (pc.fill_null(t["attempt_id"], "").to_pylist()
+           if "attempt_id" in schema.names else [""] * t.num_rows)
+    mask = [k in keys for k in zip(t["rowgroup_id"].to_pylist(),
+                                   t["column"].to_pylist(),
+                                   t["run_id"].to_pylist(), att)]
+    return (t.filter(pa.array(mask, pa.bool_()))
+            .sort_by([("rowgroup_id", "ascending"),
+                      ("col_idx", "ascending")]))

@@ -3,10 +3,19 @@
 Reference analogue: solid row-group enumeration — one enumerator per
 column segment advanced in lockstep to rebuild rows
 (`/root/reference/Outcompute.ColumnStore.CodeGenerator/SolidRowGroupGenerator.cs:29-40`,
-full-scan S5 `Segments/ColumnSegment.cs:163-188`). Here: hash-partition
-the segments table by rowgroup, stream each rowgroup's segment rows,
-decode every column payload vectorized, and emit the reassembled Arrow
-batches with the original schema — no pandas materialization anywhere.
+full-scan S5 `Segments/ColumnSegment.cs:163-188`). Here: stream each
+rowgroup's segment rows, decode every column payload vectorized, and
+emit the reassembled Arrow batches with the original schema — no
+pandas materialization anywhere.
+
+Every operator takes its segments in one of two forms. A snapshot's
+`PinnedRead` (what the store facade passes) runs as one shuffle-free
+stage: `spark.range(n).mapInArrow`, where task i reads its contiguous
+slice of the kept rowgroup ids from the pinned files with pyarrow,
+keeps the live-key rows and decodes them — no JVM parquet scan, no
+exchange, so a point lookup is one job of one task. A segments
+`DataFrame` (operator-level callers, the Iceberg backend) is
+hash-partitioned by rowgroup and sorted within partitions first.
 """
 
 from __future__ import annotations
@@ -19,7 +28,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..codecs.segment import decode_segment
-from .arrow_io import arrow_schema_for, iter_groups
+from .arrow_io import PinnedRead, arrow_schema_for, iter_groups, read_task
 
 _LOGICAL_TO_SPARK = {
     "int8": T.ByteType(), "int16": T.ShortType(), "int32": T.IntegerType(),
@@ -49,10 +58,13 @@ def _spark_type_of(logical: str) -> T.DataType:
 _OUT_BATCH_ROWS = 1 << 16
 
 
-def schema_from_segments(segments: DataFrame) -> T.StructType:
+def schema_from_segments(segments) -> T.StructType:
     """Reconstruct the original Spark schema from segment (or manifest)
     metadata — one small collect; the facade reads the same schema off
-    its driver-side manifest snapshot instead (`schema_from_manifest`)."""
+    its driver-side manifest snapshot instead (`schema_from_manifest`),
+    and a `PinnedRead` carries it."""
+    if isinstance(segments, PinnedRead):
+        return segments.schema
     return schema_from_manifest(
         segments.select("column", "col_idx", "logical_type")
         .distinct().toArrow())
@@ -80,26 +92,34 @@ def schema_from_manifest(manifest: pa.Table) -> T.StructType:
     return T.StructType(fields)
 
 
-def _rowgroup_stage(segments: DataFrame, schema: T.StructType,
+def _rowgroup_stage(segments, schema: T.StructType,
                     num_partitions: int | None, group_fn,
                     pass_rowgroup: bool = False) -> DataFrame:
-    """The one decode-shaped stage every read path shares:
-    hash-partition the segments table by rowgroup, stream each
-    rowgroup's segment rows as one Arrow table through
-    `group_fn(payloads, logicals, colnames) -> {column: pa.Array} | None`
-    (None = the rowgroup contributes no rows), and zip the returned
-    columns back into `schema`. With `pass_rowgroup` the callback
-    receives the rowgroup id as its first argument (per-rowgroup
-    parameterized reads, e.g. the global window's routing table)."""
+    """The one decode-shaped stage every read path shares: stream each
+    rowgroup's segment rows, ordered by col_idx, as one Arrow table
+    through `group_fn(payloads, logicals, colnames) -> {column:
+    pa.Array} | None` (None = the rowgroup contributes no rows), and
+    zip the returned columns back into `schema`. With `pass_rowgroup`
+    the callback receives the rowgroup id as its first argument
+    (per-rowgroup parameterized reads, e.g. the global window's
+    routing table).
+
+    `segments` picks the input side. A `PinnedRead` runs as
+    `spark.range(0, n, 1, n).mapInArrow(...)` with n = min(kept
+    rowgroups, `num_partitions`): the work plan travels in the
+    closure, task `id` reads its slice with `read_task`, and nothing
+    shuffles. A segments DataFrame is hash-partitioned by rowgroup
+    into `num_partitions` and sorted within partitions.
+    `num_partitions` defaults to spark.sql.shuffle.partitions."""
     names = [f.name for f in schema.fields]
     out_pa_schema = arrow_schema_for(schema)
+    pinned = isinstance(segments, PinnedRead)
+    spark = segments.spark if pinned else segments.sparkSession
     if num_partitions is None:
-        num_partitions = int(segments.sparkSession.conf.get(
-            "spark.sql.shuffle.partitions"))
+        num_partitions = int(spark.conf.get("spark.sql.shuffle.partitions"))
 
-    def run_partition(
-            batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for _rg, tbl in iter_groups(batches, "rowgroup_id"):
+    def emit(groups) -> Iterator[pa.RecordBatch]:
+        for _rg, tbl in groups:
             args = (tbl.column("payload").combine_chunks(),
                     tbl.column("logical_type").to_pylist(),
                     tbl.column("column").to_pylist())
@@ -117,16 +137,49 @@ def _rowgroup_stage(segments: DataFrame, schema: T.StructType,
             out = pa.Table.from_arrays(cols, schema=out_pa_schema)
             yield from out.to_batches(max_chunksize=_OUT_BATCH_ROWS)
 
-    work = (
-        segments.select("rowgroup_id", "column", "col_idx", "logical_type",
-                        "payload")
-        .repartition(num_partitions, F.col("rowgroup_id"))
-        .sortWithinPartitions("rowgroup_id", "col_idx")
-    )
-    return work.mapInArrow(run_partition, schema)
+    if not pinned:
+        work = (
+            segments.select("rowgroup_id", "column", "col_idx",
+                            "logical_type", "payload")
+            .repartition(num_partitions, F.col("rowgroup_id"))
+            .sortWithinPartitions("rowgroup_id", "col_idx")
+        )
+        return work.mapInArrow(
+            lambda batches: emit(iter_groups(batches, "rowgroup_id")),
+            schema)
+
+    tasks = segments.tasks(num_partitions)
+    if not tasks:
+        return spark.createDataFrame([], schema)
+
+    def run_tasks(batches: Iterator[pa.RecordBatch]
+                  ) -> Iterator[pa.RecordBatch]:
+        # drain the (one-row) input before reading: the task's id
+        # selects its work item
+        ids = [i for b in batches for i in b.column(0).to_pylist()]
+        for i in ids:
+            yield from emit(iter_groups(
+                read_task(*tasks[i]).to_batches(), "rowgroup_id"))
+
+    n = len(tasks)
+    return spark.range(0, n, 1, n).mapInArrow(run_tasks, schema)
 
 
-def _decode_stage(segments: DataFrame, schema: T.StructType | None,
+def _project(segments, columns):
+    """Only the segments of `columns`."""
+    if isinstance(segments, PinnedRead):
+        return segments.project(columns)
+    return segments.where(F.col("column").isin(sorted(columns)))
+
+
+def _only(segments, rowgroups):
+    """Only the segments of `rowgroups`."""
+    if isinstance(segments, PinnedRead):
+        return segments.only(rowgroups)
+    return segments.where(F.col("rowgroup_id").isin(sorted(rowgroups)))
+
+
+def _decode_stage(segments, schema: T.StructType | None,
                   num_partitions: int | None, kernel) -> DataFrame:
     """Per-segment decode: `kernel(payload, logical) -> pa.Array` on
     every column segment of each rowgroup."""
@@ -140,7 +193,7 @@ def _decode_stage(segments: DataFrame, schema: T.StructType | None,
     return _rowgroup_stage(segments, schema, num_partitions, decode_group)
 
 
-def decode_with_rowgroup(segments: DataFrame,
+def decode_with_rowgroup(segments,
                          schema: T.StructType | None = None,
                          num_partitions: int | None = None,
                          rg_col: str = "__rg") -> DataFrame:
@@ -165,18 +218,20 @@ def decode_with_rowgroup(segments: DataFrame,
                            decode_group, pass_rowgroup=True)
 
 
-def decode(segments: DataFrame, schema: T.StructType | None = None,
+def decode(segments, schema: T.StructType | None = None,
            num_partitions: int | None = None,
            columns: list[str] | None = None) -> DataFrame:
-    """segments table -> DataFrame with the original schema.
+    """segments (a DataFrame or a `PinnedRead`) -> DataFrame with the
+    original schema.
 
     Row order inside each rowgroup is the encode order; global order is
     restored by the verifier's (conv_id, turn_idx) sort (SURVEY.md §3.2).
 
     `columns` projects at the ENCODED level: only the named columns'
-    segment rows are read (the filter reaches the segments parquet
-    scan) and decoded — a wide text column whose bytes aren't wanted
-    never leaves storage.
+    segment rows are read (a pinned read drops the others in its
+    tasks; on a DataFrame the filter reaches the segments parquet
+    scan) and decoded — a wide text column's payloads are never
+    decoded or shipped to the JVM.
     """
     if columns is not None:
         if schema is None:
@@ -184,7 +239,7 @@ def decode(segments: DataFrame, schema: T.StructType | None = None,
         _check_known(columns, schema)
         schema = T.StructType([f for f in schema.fields
                                if f.name in set(columns)])
-        segments = segments.where(F.col("column").isin(list(columns)))
+        segments = _project(segments, columns)
     return _decode_stage(segments, schema, num_partitions, decode_segment)
 
 
@@ -202,7 +257,7 @@ def _check_known(names, schema: T.StructType) -> None:
             f"unknown column(s) {unknown}; stored: {sorted(stored)}")
 
 
-def decode_matching(segments: DataFrame, column: str, value,
+def decode_matching(segments, column: str, value,
                     columns: list[str] | None = None,
                     schema: T.StructType | None = None,
                     num_partitions: int | None = None) -> DataFrame:
@@ -229,7 +284,7 @@ def decode_matching(segments: DataFrame, column: str, value,
         columns, schema, num_partitions)
 
 
-def decode_matching_in(segments: DataFrame, column: str, values,
+def decode_matching_in(segments, column: str, values,
                        columns: list[str] | None = None,
                        schema: T.StructType | None = None,
                        num_partitions: int | None = None) -> DataFrame:
@@ -249,7 +304,7 @@ def decode_matching_in(segments: DataFrame, column: str, values,
         columns, schema, num_partitions)
 
 
-def decode_matching_contains(segments: DataFrame, column: str,
+def decode_matching_contains(segments, column: str,
                              needle: str,
                              columns: list[str] | None = None,
                              schema: T.StructType | None = None,
@@ -269,7 +324,7 @@ def decode_matching_contains(segments: DataFrame, column: str,
         columns, schema, num_partitions)
 
 
-def decode_matching_null(segments: DataFrame, column: str,
+def decode_matching_null(segments, column: str,
                          columns: list[str] | None = None,
                          schema: T.StructType | None = None,
                          num_partitions: int | None = None) -> DataFrame:
@@ -285,7 +340,7 @@ def decode_matching_null(segments: DataFrame, column: str,
                            columns, schema, num_partitions)
 
 
-def decode_matching_range(segments: DataFrame, column: str, lo, hi,
+def decode_matching_range(segments, column: str, lo, hi,
                           columns: list[str] | None = None,
                           schema: T.StructType | None = None,
                           num_partitions: int | None = None) -> DataFrame:
@@ -308,7 +363,7 @@ def decode_matching_range(segments: DataFrame, column: str, lo, hi,
         columns, schema, num_partitions)
 
 
-def _matching_stage(segments: DataFrame, column: str, probe_fn,
+def _matching_stage(segments, column: str, probe_fn,
                     columns: list[str] | None,
                     schema: T.StructType | None,
                     num_partitions: int | None) -> DataFrame:
@@ -325,8 +380,7 @@ def _matching_stage(segments: DataFrame, column: str, probe_fn,
         schema = T.StructType([f for f in schema.fields if f.name in want])
         # the probed column's segment must still travel even when it
         # isn't projected — the ranges come off it
-        segments = segments.where(
-            F.col("column").isin(sorted(want | {column})))
+        segments = _project(segments, want | {column})
     from ..codecs.query import gather_ranges
 
     names = set(f.name for f in schema.fields)
@@ -358,54 +412,52 @@ def _matching_stage(segments: DataFrame, column: str, probe_fn,
     return _rowgroup_stage(segments, schema, num_partitions, match_group)
 
 
-def decode_window_global(segments: DataFrame, start: int, length: int,
+def decode_window_global(segments, start: int, length: int,
                          schema: T.StructType | None = None,
-                         num_partitions: int | None = None) -> DataFrame:
+                         num_partitions: int | None = None,
+                         rowgroup_rows: dict[int, int] | None = None
+                         ) -> DataFrame:
     """GLOBAL row window [start, start+length) over the store's stable
     enumeration order — rowgroup_id ascending, encode order within
     each rowgroup: the reference enumerator's paging
     (`ColumnStore.GetEnumerator`, `ColumnStore.cs:76-87`) at warehouse
-    scale. The page is ROUTED through the manifest's per-rowgroup row
-    counts (one driver-side read of a row per rowgroup — metadata
-    only), each touched rowgroup gets its local [start, len) slice,
-    and ONE distributed stage run-clips exactly those windows —
-    rowgroups outside the page are excluded from the scan by a pushed
-    rowgroup_id filter and never read. A page costs payload
-    proportional to `length`, not to the store."""
+    scale. The page is ROUTED through the per-rowgroup row counts
+    (`rowgroup_rows`, which the facade takes off its manifest snapshot
+    and a `PinnedRead` requires; else one metadata-only collect over
+    the segments frame), each touched rowgroup gets its local
+    [start, len) slice, and ONE distributed stage run-clips exactly
+    those windows — rowgroups outside the page are never read. A page
+    costs payload proportional to `length`, not to the store."""
     from ..codecs.query import query_window
 
     if schema is None:
         schema = schema_from_segments(segments)
     start, length = max(0, int(start)), max(0, int(length))
     if length == 0 or not schema.fields:
-        return decode(segments.where(F.lit(False)), schema=schema)
+        return decode(_only(segments, []), schema=schema)
 
-    # per-rowgroup row count = max over columns of that column's total:
-    # robust under schema evolution, where a rowgroup may physically
-    # lack ANY given column (late add_column / post-drop ingest) — a
-    # single-column routing table would silently drop such rowgroups
-    # from the global page. Metadata-only (column-pruned manifest scan).
-    counts = (segments.groupBy("rowgroup_id", "column")
-              .agg(F.sum("n_rows").alias("nr"))
-              .groupBy("rowgroup_id")
-              .agg(F.max("nr").alias("n_rows"))
-              .orderBy("rowgroup_id").collect())
+    if rowgroup_rows is None:
+        # per-rowgroup row count = max over columns of that column's
+        # total: robust under schema evolution, where a rowgroup may
+        # physically lack ANY given column (late add_column / post-drop
+        # ingest) — a single-column routing table would silently drop
+        # such rowgroups from the global page
+        rowgroup_rows = {r["rowgroup_id"]: r["n_rows"] for r in (
+            segments.groupBy("rowgroup_id", "column")
+            .agg(F.sum("n_rows").alias("nr"))
+            .groupBy("rowgroup_id")
+            .agg(F.max("nr").alias("n_rows")).collect())}
     end = start + length
     windows: dict[int, tuple[int, int]] = {}
     cum = 0
-    for r in counts:
-        lo, hi = cum, cum + r["n_rows"]
+    for rg, n in sorted(rowgroup_rows.items()):
+        lo, hi = cum, cum + n
         cum = hi
         if hi <= start:
             continue
         if lo >= end:
             break
-        windows[r["rowgroup_id"]] = (max(0, start - lo),
-                                     min(hi, end) - max(lo, start))
-    if not windows:
-        return decode(segments.where(F.lit(False)), schema=schema)
-
-    segs = segments.where(F.col("rowgroup_id").isin(sorted(windows)))
+        windows[rg] = (max(0, start - lo), min(hi, end) - max(lo, start))
 
     def win_group(rg, payloads, logicals, colnames):
         ls, ll = windows[rg]
@@ -413,11 +465,11 @@ def decode_window_global(segments: DataFrame, start: int, length: int,
                                    ls, ll)
                 for i, name in enumerate(colnames)}
 
-    return _rowgroup_stage(segs, schema, num_partitions, win_group,
-                           pass_rowgroup=True)
+    return _rowgroup_stage(_only(segments, windows), schema,
+                           num_partitions, win_group, pass_rowgroup=True)
 
 
-def decode_window(segments: DataFrame, rowgroup_id: int, start: int,
+def decode_window(segments, rowgroup_id: int, start: int,
                   length: int, schema: T.StructType | None = None) -> DataFrame:
     """Row-window selection on the encoded form — E4/E8/S4
     (`DefaultEncoding.Decode(start,len)` `DefaultEncoding.cs:160-231`,
@@ -426,11 +478,12 @@ def decode_window(segments: DataFrame, rowgroup_id: int, start: int,
     `ColumnSegment.cs:95-157`) lifted to the DataFrame level: decode
     only rows [start, start+length) of one rowgroup under its stable
     encode order, clipping runs on the compressed body instead of
-    expanding whole segments. Scale path: the rowgroup filter prunes at
-    the parquet scan, so exactly one rowgroup's payloads move."""
+    expanding whole segments. Scale path: exactly one rowgroup's
+    payloads move (a pinned read keeps only its id; on a DataFrame
+    the rowgroup filter prunes at the parquet scan)."""
     from ..codecs.query import query_window
 
-    segs = segments.where(F.col("rowgroup_id") == int(rowgroup_id))
+    segs = _only(segments, [int(rowgroup_id)])
 
     def kernel(payload, logical):
         return query_window(payload, logical, start, length)

@@ -11,7 +11,10 @@ no Spark job; only reading the kept segments does.
 A snapshot also pins what a query reads: the segment files listed when
 it was taken and the live `(rowgroup_id, column, run_id, attempt_id)`
 keys of its commit. A plan built on it returns that commit's answer
-even if a `compact()` or `vacuum()` commits before the plan runs.
+even if a `compact()` or `vacuum()` commits before the plan runs. The
+facade's decode-shaped reads take those segments as a `pinned` read,
+which the decode stage's tasks read with pyarrow themselves (no JVM
+scan, no shuffle); `segments` gives the same rows as a DataFrame.
 
 The parquet backend memoizes one snapshot per committed state
 (`Warehouse.snapshot`); the Iceberg backend builds one per call from
@@ -21,7 +24,6 @@ Iceberg runtime jar).
 
 from __future__ import annotations
 
-import bisect
 import json
 from collections import defaultdict
 from functools import cached_property
@@ -36,6 +38,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.pandas.types import from_arrow_schema
 
+from ..operators.arrow_io import (READ_COLS, PinnedRead, arrow_schema_for,
+                                  overlaps)
 from ..plans.pruning import _ISIN_CAP, keep_ids, manifest_rows
 
 _SPARK_ROW_METADATA = b"org.apache.spark.sql.parquet.row.metadata"
@@ -259,7 +263,7 @@ class ManifestSnapshot:
             # attempt is live (None: attempt unknown, keep the file)
             live = {(run, att) for _rg, _c, run, att in keys} | {None}
             paths = [f.path for f in self.files
-                     if f.n_rows and _overlaps(ids, f.rowgroups)
+                     if f.n_rows and overlaps(ids, f.rowgroups)
                      and self._attempt(f) in live]
             if not paths:
                 return spark.createDataFrame([], schema)
@@ -275,6 +279,23 @@ class ManifestSnapshot:
         segs = segs.withColumn("attempt_id",
                                F.coalesce("attempt_id", F.lit("")))
         return _semi_join(spark, segs, keys, list(_KEY_TYPES))
+
+    def pinned(self, spark: SparkSession, rowgroups=None) -> PinnedRead:
+        """The committed segments of `rowgroups` (None = every live
+        rowgroup) as a read the decode stage runs itself: the same
+        pinned files, file pruning and live-key filter as `segments`,
+        applied by pyarrow in the tasks. Parquet backend only."""
+        keys = dict(self._keys)
+        if rowgroups is not None:
+            keys = {rg: keys[rg] for rg in set(rowgroups) & keys.keys()}
+        files = [f for f in self.files if f.n_rows]
+        read = [f for f in merged_schema(f.schema for f in files).fields
+                if f.name in READ_COLS
+                and (f.name != "attempt_id" or self.has_attempt)]
+        return PinnedRead(
+            spark, tuple((f.path, f.rowgroups, self._attempt(f))
+                         for f in files),
+            keys, arrow_schema_for(T.StructType(read)), self.decode_schema)
 
     def _attempt(self, f: SegmentFile) -> tuple[str, str] | None:
         """A file's commit attempt as the manifest keys it (a manifest
@@ -297,13 +318,6 @@ def _semi_join(spark: SparkSession, segs: DataFrame, rows,
     kdf = spark.createDataFrame(
         rows, ", ".join(f"`{c}` {_KEY_TYPES[c]}" for c in on))
     return segs.join(F.broadcast(kdf), on=on, how="left_semi")
-
-
-def _overlaps(ids: list[int], rng: tuple[int, int] | None) -> bool:
-    if rng is None:
-        return True
-    i = bisect.bisect_left(ids, rng[0])
-    return i < len(ids) and ids[i] <= rng[1]
 
 
 def _key_cond(keys, with_att: bool) -> str:

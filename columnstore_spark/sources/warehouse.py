@@ -150,6 +150,17 @@ class Warehouse:
             raise FileNotFoundError(f"no manifest at {self.manifest_path}")
         return snap.segments(spark, self.backend(spark), rowgroups)
 
+    def pinned_read(self, spark: SparkSession, snapshot: ManifestSnapshot,
+                    rowgroups=None):
+        """The committed segments of `snapshot` restricted to
+        `rowgroups` (None = every live one) as the decode operators'
+        input: a `PinnedRead` their tasks read with pyarrow — no JVM
+        scan, no shuffle — or, on the Iceberg backend (no pinned file
+        list), the `committed_segments` DataFrame."""
+        if snapshot.files is None:
+            return self.committed_segments(spark, snapshot, rowgroups)
+        return snapshot.pinned(spark, rowgroups)
+
     def done_rowgroups(self, spark: SparkSession) -> DataFrame | None:
         ids = self._done_ids(spark)
         if ids is None:

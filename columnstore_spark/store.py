@@ -490,8 +490,7 @@ class TranscriptColumnStore:
         pred = _norm_one_pred(column, probe, lt)
         if pred[1] == "in" and not pred[2]:
             return noop
-        cand = self.warehouse.committed_segments(
-            self.spark, m, m.keep_ids(*pred))
+        cand = self.warehouse.pinned_read(self.spark, m, m.keep_ids(*pred))
         cond = _exact_pred_cond([pred], any_mode=False)
         # schema from the MANIFEST (a fully-pruned candidate set has
         # no segment to infer it from). The decode keeps each row's
@@ -800,7 +799,7 @@ class TranscriptColumnStore:
 
     def solid_rows(self, columns: list[str] | None = None) -> DataFrame:
         m = self._manifest_or_raise()
-        segs = self.warehouse.committed_segments(self.spark, m)
+        segs = self.warehouse.pinned_read(self.spark, m)
         if not self._schema_log():
             return decode(segs, schema=m.decode_schema, columns=columns)
         # schema evolution active: decode under the EFFECTIVE schema —
@@ -1631,8 +1630,7 @@ class TranscriptColumnStore:
             self._needs_fallback(m, *probe_cols, *(columns or []))
             out = self.solid_rows().where(F.lit(False))
         else:
-            out = decode(self.warehouse.committed_segments(self.spark, m,
-                                                           []),
+            out = decode(self.warehouse.pinned_read(self.spark, m, []),
                          schema=m.decode_schema,
                          columns=_inner_columns(columns, *probe_cols))
         return out if columns is None else out.select(*columns)
@@ -1680,7 +1678,7 @@ class TranscriptColumnStore:
         else:
             known = [set(s) for s in keep if s is not None]
             ids = set.intersection(*known) if known else None
-        segs = self.warehouse.committed_segments(self.spark, m, ids)
+        segs = self.warehouse.pinned_read(self.spark, m, ids)
         inner = _inner_columns(columns, *cols)
         # the most selective kernel-safe predicate drives the gather
         order = sorted(range(len(norm)), key=lambda i: (
@@ -1854,15 +1852,13 @@ class TranscriptColumnStore:
         upper = (_prefix_upper(prefix) if prefix and prefix.isascii()
                  else None)
         if upper is None:
-            out = decode(self.warehouse.committed_segments(self.spark, m),
+            out = decode(self.warehouse.pinned_read(self.spark, m),
                          schema=m.decode_schema, columns=inner)
         else:
-            pruned, _lt = self._pruned_segments(m, column, prefix, upper,
-                                                eq=False,
-                                                logical_type="string")
-            out = decode_matching_range(pruned, column, prefix, upper,
-                                        columns=inner,
-                                        schema=m.decode_schema)
+            ids = m.keep_ids(column, "range", (prefix, upper), "string")
+            out = decode_matching_range(
+                self.warehouse.pinned_read(self.spark, m, ids), column,
+                prefix, upper, columns=inner, schema=m.decode_schema)
         return self._finish_query(out.where(cond), cond, columns,
                                   include_pending)
 
@@ -1890,7 +1886,7 @@ class TranscriptColumnStore:
         if fallback is not None:
             return fallback
         out = decode_matching_contains(
-            self.warehouse.committed_segments(self.spark, m), column,
+            self.warehouse.pinned_read(self.spark, m), column,
             needle, columns=_inner_columns(columns, column),
             schema=m.decode_schema)
         return self._finish_query(out.where(cond), cond, columns,
@@ -1982,9 +1978,10 @@ class TranscriptColumnStore:
     def query_by_window(self, rowgroup_id: int, start: int,
                         length: int) -> DataFrame:
         """Row window of one rowgroup via the run-clipping kernels."""
-        segs = self.warehouse.committed_segments(self.spark)
-        return self._align_effective(
-            decode_window(segs, rowgroup_id, start, length))
+        m = self._manifest_or_raise()
+        return self._align_effective(decode_window(
+            self.warehouse.pinned_read(self.spark, m), rowgroup_id, start,
+            length, schema=m.decode_schema))
 
     def rows_window(self, start: int, length: int) -> DataFrame:
         """GLOBAL page [start, start+length) of the committed store
@@ -1997,7 +1994,6 @@ class TranscriptColumnStore:
         Out-of-range windows clamp; a page past the end is empty."""
         from .operators import decode_window_global
         m = self._manifest_or_raise()
-        segs = self.warehouse.committed_segments(self.spark)
-        return self._align_effective(
-            decode_window_global(segs, start, length,
-                                 schema=m.decode_schema))
+        return self._align_effective(decode_window_global(
+            self.warehouse.pinned_read(self.spark, m), start, length,
+            schema=m.decode_schema, rowgroup_rows=m.rowgroup_rows))

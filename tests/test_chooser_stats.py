@@ -6,6 +6,8 @@ Mirrors the reference's stats asserts (`ColumnSegmentBuilderTests.cs:69-95`,
 `Encoding.cs:61-67`; see FIXTURES.md F2/F4).
 """
 
+import random
+
 import numpy as np
 import pyarrow as pa
 import pytest
@@ -109,5 +111,51 @@ def test_chooser_scores_plain_at_exact_written_size():
         pa.array(strs, type=pa.large_utf8()))
     assert V.var_encoded_size(chunk) == len(plain.encode(chunk, "string"))
     st = collect(chunk, "string", n_total=2000, n_nulls=0)
-    cid = chooser.choose(st, "string", chunk, mode=chooser.MODE_SIZE)
+    cid, _ = chooser.choose(st, "string", chunk, mode=chooser.MODE_SIZE)
     assert cid == plain.CODEC_ID  # incompressible text: plain wins
+
+
+def _texts(seed: int, n: int = 3000) -> pa.Array:
+    rng = random.Random(seed)
+    words = ["the", "assistant", "replied", "with", "tool", "output",
+             "error", "result", "message", "function", "returned"]
+    return pa.array([" ".join(rng.choices(words, k=6)) + f" #{i}"
+                     for i in range(n)], type=pa.large_utf8())
+
+
+def _decimals(seed: int, n: int = 3000) -> pa.Array:
+    rng = np.random.default_rng(seed)
+    return pa.array(np.round(rng.uniform(0, 500, n), 2))
+
+
+def test_trained_state_travels_with_the_chunk(monkeypatch):
+    """choose() hands the winner's trial state (FSST merges, ALP
+    analysis) to its encode: a chunk trains exactly once, and
+    estimating one chunk before encoding another leaves the output
+    byte-identical to a fresh encode."""
+    from columnstore_spark.codecs import alp, chooser, fsst
+    from columnstore_spark.codecs import values as V
+    from columnstore_spark.codecs.segment import encode_segment
+    from columnstore_spark.codecs.stats import collect
+
+    b_text, b_flt = _texts(2), _decimals(2)
+    fresh = [encode_segment(b_text), encode_segment(b_flt)]
+    assert [s.codec_id for s in fresh] == [fsst.CODEC_ID, alp.CODEC_ID]
+
+    a_text = V.var_chunk_from_arrow(_texts(1))
+    a_flt = _decimals(1).to_numpy()
+    assert fsst.estimate(a_text)[1]
+    assert alp.estimate(a_flt, "float64") is not None
+    assert chooser.choose(collect(a_text, "string", 3000, 0), "string",
+                          a_text)[0] == fsst.CODEC_ID
+    assert [encode_segment(b_text).payload,
+            encode_segment(b_flt).payload] == [s.payload for s in fresh]
+
+    calls = []
+    for mod, name in ((fsst, "train"), (alp, "_analyze")):
+        orig = getattr(mod, name)
+        monkeypatch.setattr(mod, name, lambda *a, _o=orig, _n=name, **k: (
+            calls.append(_n), _o(*a, **k))[1])
+    assert encode_segment(b_text).payload == fresh[0].payload
+    assert encode_segment(b_flt).payload == fresh[1].payload
+    assert calls == ["train", "_analyze"]

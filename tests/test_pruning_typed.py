@@ -103,22 +103,30 @@ def test_string_pruning_still_exact(spark, store, frame):
     assert got == frame.where(F.col("role") == "tool").count() > 0
 
 
-def test_facade_prune_pushes_rowgroup_filter_to_scan(spark, store):
+def test_facade_prune_pushes_rowgroup_filter_to_scan(spark, store,
+                                                    monkeypatch):
     """The facade evaluates pruning on the manifest (metadata) and
-    pushes the kept ids into the segments parquet scan as an IN filter
-    — non-matching rowgroups' payload row groups are never read."""
-    old = spark.conf.get("spark.sql.maxMetadataStringLength", "100")
-    spark.conf.set("spark.sql.maxMetadataStringLength", "10000")
-    try:
-        df = store.query_by_value("turn_idx", 207)
-        df.collect()
-        plan = df._jdf.queryExecution().executedPlan().toString()
-    finally:
-        spark.conf.set("spark.sql.maxMetadataStringLength", old)
-    flat = plan.replace(" ", "")
-    assert "PushedFilters:[" in flat
-    # a single surviving id collapses In(...) to EqualTo(...)
-    assert ("In(rowgroup_id" in flat) or ("EqualTo(rowgroup_id," in flat)
+    hands the decode stage a pinned read of exactly the kept ids, over
+    only the pinned files whose rowgroup range overlaps them —
+    non-matching rowgroups' payloads are never read."""
+    from columnstore_spark.operators.arrow_io import overlaps
+
+    wh = store.warehouse
+    reads = []
+    orig = wh.pinned_read
+    monkeypatch.setattr(wh, "pinned_read", lambda *a, **k: (
+        reads.append(orig(*a, **k)), reads[-1])[1])
+    df = store.query_by_value("turn_idx", 207)
+    m = wh.snapshot(spark)
+    kept = m.keep_ids("turn_idx", "eq", 207, m.logical_types["turn_idx"])
+    assert 0 < len(kept) < len(m.rowgroup_rows)
+    [read] = reads
+    assert read.ids == sorted(kept)
+    tasks = read.tasks(8)
+    assert sorted(i for _p, _s, ids, _k in tasks for i in ids) == sorted(kept)
+    assert {p for paths, _s, _i, _k in tasks for p in paths} == {
+        f.path for f in m.files
+        if f.n_rows and overlaps(sorted(kept), f.rowgroups)}
     assert [r["turn_idx"] for r in df.collect()] == [207]
 
 

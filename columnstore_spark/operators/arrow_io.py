@@ -102,22 +102,33 @@ class PinnedRead:
     id range, commit attempt) — range and attempt None when unknown;
     `keys` maps each kept rowgroup id to its live (column, run_id,
     attempt_id) keys; `columns` optionally projects by column name.
-    `read_schema` is the Arrow schema the files are read with (the
-    `READ_COLS` they hold, merged); keys compare on attempt_id only
-    when it has one. `schema` is the snapshot's decode schema. Built by
-    `ManifestSnapshot.pinned`; consumed by `decode._rowgroup_stage`,
-    whose tasks each read a contiguous slice of the ids with
-    `read_task`."""
+    `sizes` maps each live (rowgroup_id, column) to its manifest
+    `raw_bytes`, so `raw_bytes` is the decoded size of exactly the
+    kept, projected segments. `read_schema` is the Arrow schema the
+    files are read with (the `READ_COLS` they hold, merged); keys
+    compare on attempt_id only when it has one. `schema` is the
+    snapshot's decode schema. Built by `ManifestSnapshot.pinned`;
+    consumed by `decode._rowgroup_stage`, which reads it with
+    `read_task` — in the driver when `raw_bytes` is small, else in
+    tasks that each read a contiguous slice of the ids."""
     spark: SparkSession
     files: tuple
     keys: dict
     read_schema: pa.Schema
     schema: T.StructType
+    sizes: dict
     columns: frozenset | None = None
 
     @property
     def ids(self) -> list[int]:
         return sorted(self.keys)
+
+    @property
+    def raw_bytes(self) -> int:
+        """Manifest `raw_bytes` of the kept segments, after projection."""
+        return sum(self.sizes[rg, col]
+                   for rg, ks in self.keys.items() for col, _r, _a in ks
+                   if self.columns is None or col in self.columns)
 
     def project(self, columns) -> PinnedRead:
         """Only the segments of `columns`."""
@@ -157,7 +168,7 @@ class PinnedRead:
 
 def read_task(paths: list[str], schema: pa.Schema, ids: list[int],
               keys: set) -> pa.Table:
-    """One `PinnedRead` work item on an executor: the segment rows of
+    """One `PinnedRead` work item: the segment rows of
     `paths`, read with `schema` (a file without one of its columns
     reads it as NULL), whose rowgroup is in `ids` (a pushed parquet
     filter) and whose (rowgroup_id, column, run_id, attempt_id) is a

@@ -9,13 +9,17 @@ emit the reassembled Arrow batches with the original schema — no
 pandas materialization anywhere.
 
 Every operator takes its segments in one of two forms. A snapshot's
-`PinnedRead` (what the store facade passes) runs as one shuffle-free
-stage: `spark.range(n).mapInArrow`, where task i reads its contiguous
-slice of the kept rowgroup ids from the pinned files with pyarrow,
-keeps the live-key rows and decodes them — no JVM parquet scan, no
-exchange, so a point lookup is one job of one task. A segments
-`DataFrame` (operator-level callers, the Iceberg backend) is
-hash-partitioned by rowgroup and sorted within partitions first.
+`PinnedRead` (what the store facade passes) is read with pyarrow from
+the pinned files, live-key rows only, and decoded by one per-task body
+placed by the read's decoded size. A small read (a point or IN
+lookup) runs that body in the driver while the frame is built and
+returns a local frame: no Python worker starts, and its `collect()`
+runs no job. A read over `_DRIVER_READ_BYTES` runs it as one shuffle-free
+stage, `spark.range(n).mapInArrow`, where task i reads its contiguous
+slice of the kept rowgroup ids — no JVM parquet scan, no exchange. A
+segments `DataFrame` (operator-level callers, `aggregate`, the Iceberg
+backend) is hash-partitioned by rowgroup and sorted within partitions
+first.
 """
 
 from __future__ import annotations
@@ -56,6 +60,19 @@ def _spark_type_of(logical: str) -> T.DataType:
     return _LOGICAL_TO_SPARK[logical]
 
 _OUT_BATCH_ROWS = 1 << 16
+# A `PinnedRead` whose kept, projected segments decode to at most this
+# many bytes (manifest raw_bytes) is decoded in the driver. The value
+# is where driver decode time reaches the fixed cost of one Python
+# stage. `scripts/python_stage_cost.py` (local[1] on one CPU of a
+# shared 4-vCPU VM, serve store of seed 1) measured an identity
+# mapInArrow over one row at 373 ms against 63 ms for a JVM-only job,
+# and driver vs executor decode of 0.25 MiB in 85 vs 362 ms, 1.4 MiB
+# in 170 vs 389 ms, 2.8 MiB in 218 vs 495 ms and the whole 5.7 MiB
+# store in 446 vs 610 ms: driver decode reaches one stage's cost near
+# 4.7 MiB. Point and IN lookups (0.3-0.5 MiB) fit, and so does a
+# where lookup that prunes most rowgroups; a full export does not, and
+# keeps its executor parallelism on a cluster.
+_DRIVER_READ_BYTES = 4 << 20
 
 
 def schema_from_segments(segments) -> T.StructType:
@@ -104,12 +121,19 @@ def _rowgroup_stage(segments, schema: T.StructType,
     (per-rowgroup parameterized reads, e.g. the global window's
     routing table).
 
-    `segments` picks the input side. A `PinnedRead` runs as
+    `segments` picks the input side. A `PinnedRead` is split into
+    `read_task` work items, each decoded by the same body
+    (`run_tasks`); where that body runs depends on the read's
+    `raw_bytes`. Up to `_DRIVER_READ_BYTES` it runs in the driver over
+    one work item, EAGERLY — the segments are read and decoded when
+    this frame is built, not when it is forced — and the result comes
+    back as `spark.createDataFrame(table, schema)`, a local relation
+    that forcing runs with no job. A larger read runs as
     `spark.range(0, n, 1, n).mapInArrow(...)` with n = min(kept
     rowgroups, `num_partitions`): the work plan travels in the
-    closure, task `id` reads its slice with `read_task`, and nothing
-    shuffles. A segments DataFrame is hash-partitioned by rowgroup
-    into `num_partitions` and sorted within partitions.
+    closure, task `id` decodes work item `id`, and nothing shuffles.
+    A segments DataFrame is hash-partitioned by rowgroup into
+    `num_partitions` and sorted within partitions.
     `num_partitions` defaults to spark.sql.shuffle.partitions."""
     names = [f.name for f in schema.fields]
     out_pa_schema = arrow_schema_for(schema)
@@ -148,21 +172,29 @@ def _rowgroup_stage(segments, schema: T.StructType,
             lambda batches: emit(iter_groups(batches, "rowgroup_id")),
             schema)
 
-    tasks = segments.tasks(num_partitions)
+    in_driver = segments.raw_bytes <= _DRIVER_READ_BYTES
+    tasks = segments.tasks(1 if in_driver else num_partitions)
     if not tasks:
         return spark.createDataFrame([], schema)
 
-    def run_tasks(batches: Iterator[pa.RecordBatch]
-                  ) -> Iterator[pa.RecordBatch]:
-        # drain the (one-row) input before reading: the task's id
-        # selects its work item
-        ids = [i for b in batches for i in b.column(0).to_pylist()]
+    def run_tasks(ids) -> Iterator[pa.RecordBatch]:
         for i in ids:
             yield from emit(iter_groups(
                 read_task(*tasks[i]).to_batches(), "rowgroup_id"))
 
+    if in_driver:
+        return spark.createDataFrame(pa.Table.from_batches(
+            list(run_tasks(range(len(tasks)))), out_pa_schema), schema)
+
+    def run_partition(batches: Iterator[pa.RecordBatch]
+                      ) -> Iterator[pa.RecordBatch]:
+        # drain the (one-row) input before reading: the task's id
+        # selects its work item
+        return run_tasks([i for b in batches
+                          for i in b.column(0).to_pylist()])
+
     n = len(tasks)
-    return spark.range(0, n, 1, n).mapInArrow(run_tasks, schema)
+    return spark.range(0, n, 1, n).mapInArrow(run_partition, schema)
 
 
 def _project(segments, columns):
@@ -222,7 +254,8 @@ def decode(segments, schema: T.StructType | None = None,
            num_partitions: int | None = None,
            columns: list[str] | None = None) -> DataFrame:
     """segments (a DataFrame or a `PinnedRead`) -> DataFrame with the
-    original schema.
+    original schema. A `PinnedRead` within the driver budget is
+    decoded here, when the frame is built (see `_rowgroup_stage`).
 
     Row order inside each rowgroup is the encode order; global order is
     restored by the verifier's (conv_id, turn_idx) sort (SURVEY.md §3.2).

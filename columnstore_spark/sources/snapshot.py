@@ -6,15 +6,17 @@ driver as a pyarrow Table turns every plan-time question into plain
 Python: the live view, logical types, the decode schema, column
 coverage, the pending-batch queue and the pruning keep-sets
 (`plans/pruning.keep_ids`). Planning a probe query therefore launches
-no Spark job; only reading the kept segments does.
+no Spark job; only a read over the budget does (a small read is
+decoded in the driver while the plan is built — `operators/decode`).
 
 A snapshot also pins what a query reads: the segment files listed when
 it was taken and the live `(rowgroup_id, column, run_id, attempt_id)`
 keys of its commit. A plan built on it returns that commit's answer
 even if a `compact()` or `vacuum()` commits before the plan runs. The
 facade's decode-shaped reads take those segments as a `pinned` read,
-which the decode stage's tasks read with pyarrow themselves (no JVM
-scan, no shuffle); `segments` gives the same rows as a DataFrame.
+which the decode stage reads with pyarrow itself — in the driver, or
+in its tasks (no JVM scan, no shuffle); `segments` gives the same rows
+as a DataFrame.
 
 The parquet backend memoizes one snapshot per committed state
 (`Warehouse.snapshot`); the Iceberg backend builds one per call from
@@ -227,6 +229,13 @@ class ManifestSnapshot:
             out[rg].append((col, run, att))
         return out
 
+    @cached_property
+    def _sizes(self) -> dict[tuple[int, str], int]:
+        """Live (rowgroup_id, column) -> the segment's raw_bytes."""
+        return dict(zip(zip(self.live["rowgroup_id"].to_pylist(),
+                            self.live["column"].to_pylist()),
+                        self.live["raw_bytes"].to_pylist()))
+
     def segment_schema(self, spark: SparkSession, backend) -> T.StructType:
         """The segments table's schema: merged from the pinned files'
         footers; for a store without segment rows, the manifest's
@@ -284,7 +293,8 @@ class ManifestSnapshot:
         """The committed segments of `rowgroups` (None = every live
         rowgroup) as a read the decode stage runs itself: the same
         pinned files, file pruning and live-key filter as `segments`,
-        applied by pyarrow in the tasks. Parquet backend only."""
+        applied by pyarrow in the driver or in the stage's tasks.
+        Parquet backend only."""
         keys = dict(self._keys)
         if rowgroups is not None:
             keys = {rg: keys[rg] for rg in set(rowgroups) & keys.keys()}
@@ -295,7 +305,8 @@ class ManifestSnapshot:
         return PinnedRead(
             spark, tuple((f.path, f.rowgroups, self._attempt(f))
                          for f in files),
-            keys, arrow_schema_for(T.StructType(read)), self.decode_schema)
+            keys, arrow_schema_for(T.StructType(read)), self.decode_schema,
+            self._sizes)
 
     def _attempt(self, f: SegmentFile) -> tuple[str, str] | None:
         """A file's commit attempt as the manifest keys it (a manifest

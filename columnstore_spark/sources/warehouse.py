@@ -154,9 +154,10 @@ class Warehouse:
                     rowgroups=None):
         """The committed segments of `snapshot` restricted to
         `rowgroups` (None = every live one) as the decode operators'
-        input: a `PinnedRead` their tasks read with pyarrow — no JVM
-        scan, no shuffle — or, on the Iceberg backend (no pinned file
-        list), the `committed_segments` DataFrame."""
+        input: a `PinnedRead` they read with pyarrow, in the driver
+        when small, else in their tasks — no JVM scan, no shuffle — or,
+        on the Iceberg backend (no pinned file list), the
+        `committed_segments` DataFrame."""
         if snapshot.files is None:
             return self.committed_segments(spark, snapshot, rowgroups)
         return snapshot.pinned(spark, rowgroups)

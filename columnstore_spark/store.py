@@ -836,7 +836,9 @@ class TranscriptColumnStore:
         reference's enumeration order (`ColumnStore.cs:76-87`).
         `columns` projects the solid side at the ENCODED level (only
         the named columns' segments are read) and the delta side at
-        the parquet scan."""
+        the parquet scan. A solid side within the decode stage's
+        driver budget is read and decoded by this call, not when the
+        frame is forced (`operators/decode._rowgroup_stage`)."""
         # _pending_batches is empty on a pinned (time-travel) store:
         # delta batches on disk postdate the snapshot
         pending = self._pending_batches()
@@ -1625,10 +1627,15 @@ class TranscriptColumnStore:
         """The answer to a probe that matches nothing (an empty
         IN-list): an empty frame with the result schema — under
         pending evolution the EFFECTIVE one (drops away, adds present,
-        unknown names raise), so it unions with any non-empty result."""
+        unknown names raise), so it unions with any non-empty result.
+        Nothing is read: the frame is built from the schema alone."""
         if self._schema_log():
             self._needs_fallback(m, *probe_cols, *(columns or []))
-            out = self.solid_rows().where(F.lit(False))
+            # the types `solid_rows` decodes to: physical columns keep
+            # their stored type, unphysical adds take the logged one
+            stored = {f.name: f for f in m.decode_schema.fields}
+            out = self.spark.createDataFrame([], T.StructType(
+                [stored.get(f.name, f) for f in self.schema().fields]))
         else:
             out = decode(self.warehouse.pinned_read(self.spark, m, []),
                          schema=m.decode_schema,
@@ -1651,20 +1658,22 @@ class TranscriptColumnStore:
         another branch would be lost), so the kept rowgroups decode
         with encoded-level projection. Spark's own predicate then
         re-applies, so result semantics are exactly the DataFrame
-        filter's."""
+        filter's.
+
+        The kept segments reach the decode stage as a pinned read. One
+        within the stage's driver budget (a point or IN lookup) is
+        read and decoded in the driver while this plan is built —
+        eagerly, from this plan's commit — so the returned frame is a
+        local relation whose `collect()` runs no Spark job; a larger
+        one runs as one mapInArrow stage when forced."""
         m = self._manifest_or_raise()
         cols = [c for c, _k, _p in preds]
-        if self._needs_fallback(m, *cols, *(columns or [])):
-            norm = [(c, k, p, "") for c, k, p in preds
-                    if not (any_mode and k == "in" and not p)]
-            cond = _exact_pred_cond(norm, any_mode) if norm else F.lit(False)
-            return self._fallback_query(cond, columns, include_pending,
-                                        probe_cols=tuple(cols))
-        lts = self._logical_types(m, cols)
+        fallback = self._needs_fallback(m, *cols, *(columns or []))
+        lts = {} if fallback else self._logical_types(m, cols)
         for c in cols:
             # (a store whose every row was deleted has no live
             # rowgroup left to type any column by)
-            if c not in lts and m.rowgroup_rows:
+            if not fallback and c not in lts and m.rowgroup_rows:
                 raise ValueError(f"unknown column {c!r}")
         norm = [(c, k, p, lts.get(c) or "") for c, k, p in preds]
         if any_mode:
@@ -1672,6 +1681,10 @@ class TranscriptColumnStore:
             norm = [n for n in norm if not (n[1] == "in" and not n[2])]
         if not norm or any(k == "in" and not p for _c, k, p, _lt in norm):
             return self._empty_result(m, columns, *cols)
+        if fallback:
+            return self._fallback_query(_exact_pred_cond(norm, any_mode),
+                                        columns, include_pending,
+                                        probe_cols=tuple(cols))
         keep = [m.keep_ids(c, k, p, lt) for c, k, p, lt in norm]
         if any_mode:
             ids = None if None in keep else set().union(*keep)

@@ -471,3 +471,31 @@ def test_empty_in_branches_follow_effective_schema(spark, base):
     out = store.query_any({"conv_id": []})
     assert "tool" not in out.columns and "score" in out.columns
     assert out.count() == 0
+
+
+def test_empty_in_reads_nothing_under_evolution(spark, base, monkeypatch):
+    """An empty IN-list answer is built from the effective schema: no
+    segment is read, and the schema is the one an empty decode of the
+    whole store gives."""
+    import importlib
+
+    store, t = base
+    store.add_column("score", "bigint")
+    store.drop_column("tool")
+    want = store.solid_rows().where(F.lit(False)).schema
+    decode_mod = importlib.import_module("columnstore_spark.operators.decode")
+    reads = []
+    real = decode_mod.read_task
+    monkeypatch.setattr(decode_mod, "read_task",
+                        lambda *a: (reads.append(a), real(*a))[1])
+    out = store.query_by_in("conv_id", [])
+    proj = store.query_by_in("conv_id", [], columns=["score", "conv_id"])
+    with pytest.raises(ValueError, match="unknown column"):
+        store.query_by_in("conv_id", [], columns=["tool"])
+    assert reads == []
+    assert out.schema == want and out.count() == 0
+    assert proj.schema == T.StructType([want["score"], want["conv_id"]])
+    # the store's own (small) reads run in the driver, through the
+    # patched read_task
+    assert store.query_by_in("conv_id", [t.first()["conv_id"]]).count()
+    assert reads

@@ -1,9 +1,10 @@
 """The driver-side manifest snapshot behind the facade's probe queries:
-planning launches no Spark job, a forced point lookup is one job with
-no exchange, a plan answers from the commit it was built on even when
-a compact() and a vacuum() commit before it runs, and the pinned read
-the decode stage runs itself gives exactly the rows of the snapshot's
-segments DataFrame."""
+planning launches no Spark job, a forced point lookup runs no job (a
+read over the driver budget: one job with no exchange), a plan answers
+from the commit it was built on even when a compact() and a vacuum()
+commit before it runs, and the pinned read the decode stage runs
+itself gives exactly the rows of the snapshot's segments DataFrame,
+decoded in the driver or in a stage."""
 
 import contextlib
 import uuid
@@ -34,27 +35,9 @@ def _rows(df):
     return sorted(tuple(r) for r in df.collect())
 
 
-@pytest.fixture(scope="module")
-def batches(transcripts):
-    t = transcripts
-    keys = [r["conv_id"] for r in
-            t.select("conv_id").distinct().orderBy("conv_id")
-            .limit(3).collect()]
-    return t, keys
-
-
-def _batched_store(spark, root, t):
-    """Three closed batches of under-filled rowgroups (compactable)."""
-    s = TranscriptColumnStore(spark, root, num_rowgroups=2)
-    for i in range(3):
-        s.add_range(t.where(F.col("turn_idx") % 3 == i))
-        s.close()
-    return s
-
-
-def test_planning_launches_no_job(spark, tmp_path, batches):
-    t, keys = batches
-    store = _batched_store(spark, str(tmp_path / "jobs"), t)
+def _forced_lookup(spark, store, keys):
+    """Plans three lookups (asserting no job runs), then forces one:
+    returns its executed plan and the jobs the force ran."""
     store.query_by_value("conv_id", keys[0])  # warm the snapshot
     with _job_group(spark) as jobs:
         store.query_by_value("conv_id", keys[1])
@@ -66,18 +49,40 @@ def test_planning_launches_no_job(spark, tmp_path, batches):
     with _job_group(spark) as jobs:
         got = df.collect()
     assert got
+    return df._jdf.queryExecution().executedPlan().toString(), jobs
+
+
+def test_planning_launches_no_job(spark, tmp_path, batches, batched_store):
+    """A small lookup is decoded in the driver while it is planned:
+    forcing it scans a local relation and runs no job."""
+    t, keys = batches
+    store = batched_store(spark, str(tmp_path / "jobs"), t)
+    plan, jobs = _forced_lookup(spark, store, keys)
+    assert jobs == []
+    assert "LocalTableScan" in plan and "MapInArrow" not in plan, plan
+
+
+def test_planning_launches_no_job_past_budget(spark, tmp_path, batches,
+                                             batched_store, place):
+    """A read over the driver budget (here 0) plans with no job too;
+    forced, it is one mapInArrow job with no exchange."""
+    place("executor")
+    t, keys = batches
+    store = batched_store(spark, str(tmp_path / "jobs"), t)
+    plan, jobs = _forced_lookup(spark, store, keys)
     assert len(jobs) == 1, jobs
-    assert "Exchange" not in df._jdf.queryExecution().executedPlan().toString()
+    assert "MapInArrow" in plan and "Exchange" not in plan, plan
 
 
-def test_rows_window_plans_from_snapshot(spark, tmp_path, batches):
+def test_rows_window_plans_from_snapshot(spark, tmp_path, batches,
+                                        batched_store):
     """A global page routes through the snapshot's row counts: planning
     it launches no job, and its pages equal the ones routed by a Spark
     collect over the segments frame."""
     from columnstore_spark.operators import decode_window_global
 
     t, _keys = batches
-    store = _batched_store(spark, str(tmp_path / "win"), t)
+    store = batched_store(spark, str(tmp_path / "win"), t)
     m = store.warehouse.snapshot(spark)
     sizes = [n for _rg, n in sorted(m.rowgroup_rows.items())]
     total = sum(sizes)
@@ -95,9 +100,9 @@ def test_rows_window_plans_from_snapshot(spark, tmp_path, batches):
 
 
 def test_plan_sees_one_snapshot_across_compact_and_vacuum(
-        spark, tmp_path, batches):
+        spark, tmp_path, batches, batched_store):
     t, keys = batches
-    store = _batched_store(spark, str(tmp_path / "iso"), t)
+    store = batched_store(spark, str(tmp_path / "iso"), t)
     want = _rows(store.query_by_value("conv_id", keys[0]))
     assert want
     before = set(store.warehouse.snapshot(spark).rowgroup_rows)
@@ -112,24 +117,6 @@ def test_plan_sees_one_snapshot_across_compact_and_vacuum(
     assert _rows(plan) == want
     # and a fresh plan over the new commit agrees
     assert _rows(store.query_by_value("conv_id", keys[0])) == want
-
-
-@pytest.fixture(scope="module")
-def compacted(spark, tmp_path_factory, batches):
-    """A store mixing compacted and freshly closed rowgroups, with the
-    answers of an IN lookup and a full read (checked against the
-    source rows)."""
-    t, keys = batches
-    root = str(tmp_path_factory.mktemp("filters"))
-    store = _batched_store(spark, root, t)
-    store.compact()
-    extra = t.where(F.col("turn_idx") < 5)
-    store.add_range(extra)
-    store.close()
-    rows = store.rows()
-    want = _rows(rows)
-    assert want == _rows(t.unionAll(extra).select(*rows.columns))
-    return root, (_rows(store.query_by_in("conv_id", keys)), want)
 
 
 @pytest.mark.parametrize("cap", [None, 0])
@@ -149,42 +136,47 @@ def test_segment_read_filters_agree(spark, batches, compacted, monkeypatch,
             _rows(store.rows())) == want
 
 
-def _pinned_vs_segments(spark, store, rowgroups=None, columns=None):
-    """Both reads of one snapshot decode to the same rows; returns
-    them. `store` is a facade or a bare Warehouse."""
+def _pinned_vs_segments(spark, store, place, rowgroups=None,
+                        columns=None):
+    """Both reads of one snapshot decode to the same rows, the pinned
+    read on both placements (in the driver, and as a mapInArrow stage);
+    returns them. `store` is a facade or a bare Warehouse."""
     wh = getattr(store, "warehouse", store)
     m = wh.snapshot(spark)
-    pinned = wh.pinned_read(spark, m, rowgroups)
     frame = wh.committed_segments(spark, m, rowgroups)
-    got = _rows(decode(pinned, schema=m.decode_schema, columns=columns))
-    assert got == _rows(decode(frame, schema=m.decode_schema,
-                               columns=columns))
-    return got
+    want = _rows(decode(frame, schema=m.decode_schema, columns=columns))
+    for placement in ("driver", "executor"):
+        place(placement)
+        pinned = wh.pinned_read(spark, m, rowgroups)
+        assert _rows(decode(pinned, schema=m.decode_schema,
+                            columns=columns)) == want, placement
+    return want
 
 
-def test_pinned_read_matches_segments_batched(spark, tmp_path, batches):
+def test_pinned_read_matches_segments_batched(spark, tmp_path, batches,
+                                              batched_store, place):
     t, _keys = batches
-    store = _batched_store(spark, str(tmp_path / "diff"), t)
+    store = batched_store(spark, str(tmp_path / "diff"), t)
     m = store.warehouse.snapshot(spark)
-    full = _pinned_vs_segments(spark, store)
+    full = _pinned_vs_segments(spark, store, place)
     assert len(full) == t.count()
     # the session's 8 shuffle partitions split the read over tasks
     assert len(store.warehouse.pinned_read(spark, m).tasks(8)) > 1
     ids = sorted(m.rowgroup_rows)
-    assert _pinned_vs_segments(spark, store, ids[1::2])
-    assert _pinned_vs_segments(spark, store, ids,
+    assert _pinned_vs_segments(spark, store, place, ids[1::2])
+    assert _pinned_vs_segments(spark, store, place, ids,
                                columns=["conv_id", "role"])
-    assert _pinned_vs_segments(spark, store, []) == []
+    assert _pinned_vs_segments(spark, store, place, []) == []
 
 
-def test_pinned_read_matches_segments_compacted(spark, compacted):
+def test_pinned_read_matches_segments_compacted(spark, compacted, place):
     root, (_in_rows, want) = compacted
     store = TranscriptColumnStore(spark, root, num_rowgroups=2)
-    assert _pinned_vs_segments(spark, store) == want
+    assert _pinned_vs_segments(spark, store, place) == want
 
 
 def test_pinned_read_matches_segments_past_isin_cap(
-        spark, compacted, monkeypatch):
+        spark, compacted, monkeypatch, place):
     """Past the IN-list cap the segments frame semi-joins a key frame;
     the pinned read filters its keys in the tasks either way."""
     from columnstore_spark.sources import snapshot
@@ -194,11 +186,11 @@ def test_pinned_read_matches_segments_past_isin_cap(
     monkeypatch.setattr(snapshot, "_ISIN_CAP", 1)
     ids = sorted(store.warehouse.snapshot(spark).rowgroup_rows)
     assert len(ids) > 1
-    assert _pinned_vs_segments(spark, store, ids) == want
+    assert _pinned_vs_segments(spark, store, place, ids) == want
 
 
 def test_pinned_read_matches_segments_after_add_column(
-        spark, tmp_path, batches):
+        spark, tmp_path, batches, place):
     """A column added after the first encode has its segments only in
     the later batch's file; the earlier rowgroups read it as NULL."""
     t, _keys = batches
@@ -212,12 +204,14 @@ def test_pinned_read_matches_segments_after_add_column(
     store.close()
     m = store.warehouse.snapshot(spark)
     assert m.coverage[0]["score"] < m.coverage[1]
-    got = _pinned_vs_segments(spark, store)
+    got = _pinned_vs_segments(spark, store, place)
     assert len(got) == t.count()
-    assert _pinned_vs_segments(spark, store, columns=["turn_idx", "score"])
+    assert _pinned_vs_segments(spark, store, place,
+                               columns=["turn_idx", "score"])
 
 
-def test_pinned_read_skips_torn_attempt(spark, tmp_path, transcripts):
+def test_pinned_read_skips_torn_attempt(spark, tmp_path, transcripts,
+                                        place):
     """Segment rows a crashed attempt left under the same run_id stay
     invisible to the pinned read, as to the segments frame."""
     from columnstore_spark.operators.encode import (default_rowgroup_expr,
@@ -232,5 +226,5 @@ def test_pinned_read_skips_torn_attempt(spark, tmp_path, transcripts):
     wh.backend(spark).append_segments(torn)
     wh.encode_resumable(transcripts, num_rowgroups=4, run_id="batch-7")
     names = wh.snapshot(spark).decode_schema.fieldNames()
-    assert _pinned_vs_segments(spark, wh) == _rows(
+    assert _pinned_vs_segments(spark, wh, place) == _rows(
         transcripts.select(*names))

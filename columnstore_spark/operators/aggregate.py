@@ -291,14 +291,7 @@ def quantiles(segments: DataFrame, column: str, qs: list[float],
                 .where(F.col("value").isNotNull())
                 .groupBy("value").agg(F.sum("cnt").alias("cnt")))
         return finish_quantiles(hist, qs, segments.sparkSession)
-    from .decode import (
-        decode,
-        decode_matching,
-        decode_matching_in,
-        decode_matching_null,
-        decode_matching_range,
-        schema_from_segments,
-    )
+    from .decode import decode, decode_matching_pred, schema_from_segments
     # schema from the UNPRUNED frame: a fully selective predicate
     # may empty the segment set, and the result must be an empty
     # frame of the right shape, not a schema-inference failure
@@ -329,18 +322,9 @@ def quantiles(segments: DataFrame, column: str, qs: list[float],
         need = sorted({column, *[p[0] for p in rest]})
         if driver is None:
             rows = decode(pruned, schema=schema, columns=need)
-        elif driver[1] == "eq":
-            rows = decode_matching(pruned, driver[0], driver[2],
-                                   columns=need, schema=schema)
-        elif driver[1] == "in":
-            rows = decode_matching_in(pruned, driver[0], driver[2],
-                                      columns=need, schema=schema)
-        elif driver[1] == "null":
-            rows = decode_matching_null(pruned, driver[0],
-                                        columns=need, schema=schema)
         else:
-            rows = decode_matching_range(pruned, driver[0], *driver[2],
-                                         columns=need, schema=schema)
+            rows = decode_matching_pred(pruned, driver, columns=need,
+                                        schema=schema)
         if rest:
             rows = rows.where(_exact_pred_cond(rest, any_mode=False))
     hist = (rows.where(F.col(column).isNotNull())

@@ -396,6 +396,29 @@ def decode_matching_range(segments, column: str, lo, hi,
         columns, schema, num_partitions)
 
 
+def decode_matching_pred(segments, pred,
+                         columns: list[str] | None = None,
+                         schema: T.StructType | None = None) -> DataFrame:
+    """The encoded-form gather driven by one kernel-safe normalized
+    predicate `(column, kind, payload, logical_type)`
+    (`plans/predicates._kernel_safe_pred`): the one kind -> kernel
+    dispatch behind the facade's probe planner and
+    `aggregate.quantiles`. The eq/in/null kernels are exact for such a
+    predicate; the range kernel is a superset the caller re-filters."""
+    col, kind, payload, _lt = pred
+    if kind == "eq":
+        return decode_matching(segments, col, payload, columns=columns,
+                               schema=schema)
+    if kind == "in":
+        return decode_matching_in(segments, col, payload,
+                                  columns=columns, schema=schema)
+    if kind == "range":
+        return decode_matching_range(segments, col, *payload,
+                                     columns=columns, schema=schema)
+    return decode_matching_null(segments, col, columns=columns,
+                                schema=schema)
+
+
 def _matching_stage(segments, column: str, probe_fn,
                     columns: list[str] | None,
                     schema: T.StructType | None,

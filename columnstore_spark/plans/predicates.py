@@ -18,19 +18,14 @@ Moved out of `store.py` so the operator layer (`operators/topk.py`,
 facade (store imports operators at module level — the reverse import
 would be circular).
 
-NOTE for the next predicate `kind`: TWO consumers dispatch a
-kernel-safe predicate to the encoded matching-gather and must both
-learn a new kind — the facade's one probe planner
-(`store.TranscriptColumnStore._probe` via `_decode_matching_pred`:
-picks by manifest keep-set SIZE, the most selective safe predicate,
-and always re-applies the full conjunction) and
-`operators.aggregate.quantiles` (no keep-set sizes at operator level:
-picks by kind preference eq > in > null > range via
-`_kernel_safe_pred`, and skips re-filtering an exact driver). The
-keep tests are shared (`pruning.keep_ids` over the facade's manifest
-snapshot, `prune_conjunctive` below over a segments frame); the
-gather dispatch deliberately is not — the two policies use different
-information.
+NOTE for the next predicate `kind`: the kind -> kernel gather
+dispatch is one function, `operators.decode.decode_matching_pred`.
+Its two callers differ only in how they PICK the driving predicate:
+the facade's probe planner (`store.TranscriptColumnStore._probe`)
+takes the smallest manifest keep-set and always re-applies the full
+conjunction; `operators.aggregate.quantiles` has no keep-set sizes at
+operator level, so it prefers eq > in > null > range and skips
+re-filtering an exact driver.
 """
 
 from __future__ import annotations

@@ -220,6 +220,10 @@ class ManifestSnapshot:
         if rowgroups is not None:
             tbl = tbl.filter(pc.is_in(tbl["rowgroup_id"],
                                       pa.array(list(rowgroups), pa.int64())))
+        if not tbl.num_rows:
+            # a filter that keeps no row leaves chunk-less columns,
+            # which createDataFrame rejects
+            tbl = tbl.schema.empty_table()
         return spark.createDataFrame(tbl, from_arrow_schema(tbl.schema))
 
     @cached_property

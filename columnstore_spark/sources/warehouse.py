@@ -43,6 +43,19 @@ from .snapshot import ManifestSnapshot, SegmentFile, read_footer
 from .storage import ParquetBackend, resolve_backend
 
 
+def in_rowgroups(df: DataFrame, ids, keep: bool = True) -> DataFrame:
+    """`df` rows whose `__rg` is one of `ids` (`keep=False`: is none
+    of them): a literal IN filter up to `_ISIN_CAP` ids, a broadcast
+    semi/anti-join past it."""
+    ids = sorted(ids)
+    if len(ids) <= _ISIN_CAP:
+        cond = F.col("__rg").isin(ids)
+        return df.where(cond if keep else ~cond)
+    kdf = df.sparkSession.createDataFrame([(i,) for i in ids], "__rg long")
+    return df.join(F.broadcast(kdf), on="__rg",
+                   how="left_semi" if keep else "left_anti")
+
+
 class Warehouse:
     def __init__(self, root: str, format: str = "auto"):
         self.root = root.rstrip("/")
@@ -171,18 +184,10 @@ class Warehouse:
 
     def _without_done(self, spark: SparkSession,
                       work: DataFrame) -> DataFrame:
-        """`work` minus its rows whose `__rg` rowgroup is committed:
-        the done ids come off the snapshot as a literal list (a
-        broadcast anti-join past the IN-list cap)."""
+        """`work` minus its rows whose `__rg` rowgroup is committed
+        (the done ids come off the snapshot)."""
         done = self._done_ids(spark)
-        if not done:
-            return work
-        if len(done) <= _ISIN_CAP:
-            return work.where(~F.col("__rg").isin(sorted(done)))
-        return work.join(F.broadcast(self.done_rowgroups(spark)
-                                     .withColumnRenamed("rowgroup_id",
-                                                        "__rg")),
-                         on="__rg", how="left_anti")
+        return in_rowgroups(work, done, keep=False) if done else work
 
     def _done_ids(self, spark: SparkSession) -> frozenset | None:
         snap = self.snapshot(spark)
@@ -215,10 +220,10 @@ class Warehouse:
                                         columns=delta_df.columns)
         if rowgroup_offset:
             rg_expr = rg_expr + F.lit(int(rowgroup_offset))
-        if self.snapshot(spark) is None:
+        snap = self.snapshot(spark)
+        if snap is None:
             return delta_df
-        solid = decode(self.committed_segments(spark),
-                       schema=delta_df.schema)
+        solid = decode(self.pinned_read(spark, snap), schema=delta_df.schema)
         pending = self._without_done(
             spark, delta_df.withColumn("__rg", rg_expr.cast("long")))
         return solid.unionByName(pending.drop("__rg"))
@@ -315,7 +320,8 @@ class Warehouse:
         the generation — same reclamation contract as vacuum().
 
         The small-rowgroup set comes off the driver-side manifest
-        snapshot (one row count per rowgroup).
+        snapshot (one row count per rowgroup); their rows decode
+        through the snapshot's pinned read.
         """
         from ..operators.decode import decode
 
@@ -331,31 +337,34 @@ class Warehouse:
                        if n < thresh)
         if len(small) < 2:
             return empty
-        rows = decode(self.committed_segments(spark, snap, small),
+        rows = decode(self.pinned_read(spark, snap, small),
                       schema=snap.decode_schema)
         return self.replace_rowgroups(
-            spark, spark.createDataFrame([(i,) for i in small],
-                                         "rowgroup_id long"),
-            rows, victim_rows=sum(snap.rowgroup_rows[i] for i in small),
-            rows_per_segment=rows_per_segment, mode=mode,
-            run_id=run_id, bloom_columns=bloom_columns,
-            expected_victims=len(small))
+            spark, small, rows, rows_per_segment=rows_per_segment,
+            mode=mode, run_id=run_id, bloom_columns=bloom_columns)
 
-    def replace_rowgroups(self, spark: SparkSession, victims: DataFrame,
+    def replace_rowgroups(self, spark: SparkSession, victims: list[int],
                           rows: DataFrame, victim_rows: int | None = None,
                           rows_per_segment: int = 1_000_000,
                           mode: str = chooser.MODE_SIZE,
                           run_id: str | None = None,
-                          bloom_columns: tuple[str, ...] = (),
-                          expected_victims: int | None = None) -> dict:
-        """Atomically replace the rowgroups named by `victims` (a
-        one-column `rowgroup_id` frame) with `rows` re-encoded into
-        capacity-sized groups — the shared tombstone+replace commit
-        under compact() and the facade's delete_where(). One manifest
+                          bloom_columns: tuple[str, ...] = ()) -> dict:
+        """Atomically replace the rowgroups `victims` (a list of live
+        rowgroup ids) with `rows` re-encoded into capacity-sized
+        groups — the one tombstone+replace commit under compact() and
+        the facade's delete_where(), delete_keys() and upsert() (all
+        three through `TranscriptColumnStore._rewrite`). One manifest
         append carries both the new 'done' rows and a 'retired'
         tombstone per superseded (rowgroup_id, column); a crash before
         it leaves the old rowgroups live and the new segments
         invisible.
+
+        Every victim must be live in the snapshot this commit is made
+        against; otherwise RuntimeError is raised before anything is
+        written. A victim that stopped being live after the caller's
+        scan (a commit by another store object: the single-writer
+        contract broken) would retire fewer rowgroups than were
+        rewritten, and its surviving rows would appear twice.
 
         `victim_rows` sizes the new groups without counting `rows`
         (an upper bound is fine — deletes only shrink); when omitted
@@ -363,23 +372,17 @@ class Warehouse:
         backend = self.backend(spark)
         run_id = run_id or f"rewrite-{uuid.uuid4().hex[:8]}"
         snap = self.snapshot(spark)
+        ids = sorted(set(victims))
+        stale = [i for i in ids
+                 if snap is None or i not in snap.rowgroup_rows]
+        if stale:
+            raise RuntimeError(
+                f"replace_rowgroups: victim rowgroup(s) {stale[:5]} "
+                f"({len(stale)} of {len(ids)}) are not live — the store "
+                "changed underneath the caller; nothing was committed")
         if snap is None:
             return {"run_id": run_id, "rowgroups_encoded": 0,
                     "rowgroups_retired": 0, "storage": backend.name}
-        # the victim ids come to the driver (one per rowgroup); their
-        # row counts and manifest rows are already in the snapshot
-        ids = sorted({r["rowgroup_id"] for r in
-                      victims.select("rowgroup_id").collect()}
-                     & snap.rowgroup_rows.keys())
-        n_victims = len(ids)
-        if expected_victims is not None and n_victims != expected_victims:
-            # validated BEFORE anything commits: a mismatch means the
-            # victim set changed between the caller's scan and ours —
-            # a single-writer contract violation, not a torn state
-            raise RuntimeError(
-                f"replace_rowgroups: victim set changed underneath the "
-                f"caller ({n_victims} != expected {expected_victims}); "
-                "nothing was committed")
         if victim_rows is None:
             victim_rows = sum(snap.rowgroup_rows[i] for i in ids)
         # the id high-water mark must come from the RAW manifest, not
@@ -410,7 +413,7 @@ class Warehouse:
         attempt = uuid.uuid4().hex[:12]
         out = self._commit(spark, backend, segs, run_id, attempt,
                            retire=retire)
-        out["rowgroups_retired"] = n_victims
+        out["rowgroups_retired"] = len(ids)
         return out
 
     def _commit(self, spark: SparkSession, backend, segs: DataFrame,

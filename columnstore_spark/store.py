@@ -38,14 +38,11 @@ from pyspark.sql import types as T
 from .codecs import chooser
 from .operators import (
     decode,
-    decode_matching,
     decode_matching_contains,
-    decode_matching_in,
-    decode_matching_null,
     decode_matching_range,
     decode_window,
 )
-from .operators.decode import decode_with_rowgroup
+from .operators.decode import decode_matching_pred, decode_with_rowgroup
 from .plans.predicates import (
     _dedup_probes,
     _exact_pred_cond,
@@ -56,7 +53,7 @@ from .plans.predicates import (
 )
 from .plans.pruning import _with_typed_bounds
 from .sources.snapshot import ManifestSnapshot
-from .sources.warehouse import Warehouse
+from .sources.warehouse import Warehouse, in_rowgroups
 
 _BATCH_SHIFT = 40  # rowgroup namespace per delta batch (as streaming)
 
@@ -78,22 +75,6 @@ def _inner_columns(columns: list[str] | None,
 def _norm_preds(items) -> list[tuple]:
     """(column, probe) pairs -> normalized (column, kind, payload)."""
     return [_norm_one_pred(c, p, "")[:3] for c, p in items]
-
-
-def _decode_matching_pred(segs: DataFrame, pred, columns, schema):
-    """The encoded-form gather driven by one kernel-safe normalized
-    predicate (`plans/predicates._kernel_safe_pred`)."""
-    col, kind, payload, _lt = pred
-    if kind == "eq":
-        return decode_matching(segs, col, payload, columns=columns,
-                               schema=schema)
-    if kind == "in":
-        return decode_matching_in(segs, col, payload, columns=columns,
-                                  schema=schema)
-    if kind == "range":
-        return decode_matching_range(segs, col, *payload,
-                                     columns=columns, schema=schema)
-    return decode_matching_null(segs, col, columns=columns, schema=schema)
 
 
 def _prefix_upper(prefix: str) -> str | None:
@@ -463,21 +444,22 @@ class TranscriptColumnStore:
         match `query_by_value`/`query_where`: scalar equality,
         ``(lo, hi)`` inclusive range, list/set IN, ``None`` IS NULL.
 
-        Affected rowgroups come from MANIFEST pruning (typed bounds +
-        Bloom — a conv_id point delete rewrites only the rowgroups
-        that can actually hold the key); they are decoded, matching
-        rows dropped (NULLs in the probe column never match an
-        equality/range/IN probe — SQL semantics), and the survivors
-        re-encoded through `Warehouse.replace_rowgroups`: one manifest
-        append commits the replacements and the per-rowgroup 'retired'
-        tombstones atomically. Requires a fully closed store (pending
-        delta batches hold raw rows the rewrite would not see)."""
+        Candidate rowgroups come from MANIFEST pruning (typed bounds +
+        Bloom) and are decoded through the pinned read; matching rows
+        drop (NULLs in the probe column never match an equality/range/
+        IN probe — SQL semantics). Only the candidates that hold a
+        match are rewritten: their survivors re-encode through the
+        shared rewrite path (`_rewrite` -> `Warehouse.replace_rowgroups`),
+        whose one manifest append commits the replacements and the
+        per-rowgroup 'retired' tombstones atomically, and which raises
+        RuntimeError, committing nothing, if a victim stopped being
+        live since the scan. Run id `delete-<hex>`. Requires a fully
+        closed store (pending delta batches hold raw rows the rewrite
+        would not see)."""
         import uuid as _uuid
 
         self._writable()
         self._require_closed("delete_where")
-        noop = {"rows_deleted": 0, "rowgroups_rewritten": 0,
-                "rowgroups_retired": 0}
         m = self._manifest_or_raise()
         if self._schema_log():
             # under evolution an IS NULL delete would miss the
@@ -489,47 +471,21 @@ class TranscriptColumnStore:
             raise ValueError(f"unknown column {column!r}")
         pred = _norm_one_pred(column, probe, lt)
         if pred[1] == "in" and not pred[2]:
-            return noop
+            return {"rows_deleted": 0, "rowgroups_rewritten": 0,
+                    "rowgroups_retired": 0}
         cand = self.warehouse.pinned_read(self.spark, m, m.keep_ids(*pred))
+        # schema from the MANIFEST: a fully-pruned candidate set has
+        # no segment to infer it from
+        decoded = decode_with_rowgroup(cand, schema=m.decode_schema)
         cond = _exact_pred_cond([pred], any_mode=False)
-        # schema from the MANIFEST (a fully-pruned candidate set has
-        # no segment to infer it from). The decode keeps each row's
-        # source rowgroup id so the victim set tightens to rowgroups
-        # that ACTUALLY hold matches — a bounds/bloom false-positive
-        # candidate decodes but is never rewritten or tombstoned
-        # (needless rewrites double a rowgroup's stored bytes until
-        # rebuild()).
-        decoded = decode_with_rowgroup(
-            cand, schema=m.decode_schema).persist()
-        victims = None
-        try:
-            victims = (decoded.where(cond).select(
-                F.col("__rg").alias("rowgroup_id")).distinct().persist())
-            n_del = decoded.where(cond).count()
-            if n_del == 0:
-                return noop
-            # coalesce(cond, False): an eq/range/IN probe is NULL on a
-            # NULL column value — those rows SURVIVE, `~cond` alone
-            # would silently delete them
-            survivors = (decoded
-                         .join(victims.withColumnRenamed(
-                             "rowgroup_id", "__rg"), on="__rg",
-                             how="leftsemi")
-                         .where(F.coalesce(cond, F.lit(False))
-                                == F.lit(False))
-                         .drop("__rg"))
-            out = self.warehouse.replace_rowgroups(
-                self.spark, victims, survivors,
-                rows_per_segment=self.rows_per_segment, mode=self.mode,
-                run_id=f"delete-{_uuid.uuid4().hex[:8]}",
-                bloom_columns=self.bloom_columns)
-        finally:
-            decoded.unpersist()
-            if victims is not None:
-                victims.unpersist()
-        return {"rows_deleted": n_del,
-                "rowgroups_rewritten": out["rowgroups_encoded"],
-                "rowgroups_retired": out["rowgroups_retired"]}
+        # coalesce(cond, False): an eq/range/IN probe is NULL on a
+        # NULL column value — those rows SURVIVE, `~cond` alone would
+        # silently delete them
+        n_del, _, out = self._rewrite(
+            m, decoded, decoded.where(cond),
+            decoded.where(~F.coalesce(cond, F.lit(False))),
+            run_id=f"delete-{_uuid.uuid4().hex[:8]}")
+        return {"rows_deleted": n_del, **out}
 
     def explain_prune(self, column: str, probe) -> DataFrame:
         """EXPLAIN for the manifest pruner: one metadata row per
@@ -628,19 +584,19 @@ class TranscriptColumnStore:
         complement of `semi_join`: `keys` is a DataFrame that never
         transits the driver ("erase every conversation of these
         customers" where the customer side is itself a big table).
-        Victim rowgroups come from the same manifest-bounds-broadcast
+        Candidate rowgroups come from the same manifest-bounds-broadcast
         + Bloom prune as `semi_join`; they decode and the survivors
         (left_anti vs the distinct keys — SQL IN semantics, null keys
-        never match so null rows survive) rewrite through ONE
-        tombstone+replace manifest commit."""
+        never match so null rows survive) of the candidates that hold
+        a key rewrite through the same path and ONE tombstone+replace
+        manifest commit as `delete_where` (`_rewrite`). Only rowgroup
+        ids reach the driver."""
         self._writable()
         self._require_closed("delete_keys")
-        noop = {"rows_deleted": 0, "rowgroups_rewritten": 0,
-                "rowgroups_retired": 0}
         kc = key_col or on
-        # every raising guard runs BEFORE the first persist, and the
-        # try starts immediately after it — a guard raise must not
-        # leak cached frames for the session lifetime
+        # every raising guard runs BEFORE `_rewrite` persists anything
+        # — a guard raise must not leak cached frames for the session
+        # lifetime
         m = self._manifest_or_raise()
         if self._schema_log():
             self._guard_materialized(m, [on], "delete_keys")
@@ -648,40 +604,12 @@ class TranscriptColumnStore:
         if lt is None:
             raise ValueError(f"unknown column {on!r}")
         keys = (keys.select(F.col(kc).alias(on))
-                .where(F.col(on).isNotNull()).distinct().persist())
-        decoded = victims = None
-        try:
-            from .operators.semijoin import semi_join_segments
-            segs = self.warehouse.committed_segments(self.spark, m)
-            cand = semi_join_segments(segs, m.frame(self.spark), on,
-                                      keys, lt)
-            decoded = decode_with_rowgroup(
-                cand, schema=m.decode_schema).persist()
-            matches = decoded.join(keys, on=on, how="leftsemi")
-            victims = (matches.select(F.col("__rg").alias("rowgroup_id"))
-                       .distinct().persist())
-            n_del = matches.count()
-            if n_del == 0:
-                return noop
-            survivors = (decoded
-                         .join(victims.withColumnRenamed(
-                             "rowgroup_id", "__rg"), on="__rg",
-                             how="leftsemi")
-                         .join(keys, on=on, how="left_anti")
-                         .drop("__rg"))
-            out = self.warehouse.replace_rowgroups(
-                self.spark, victims, survivors,
-                rows_per_segment=self.rows_per_segment,
-                mode=self.mode, bloom_columns=self.bloom_columns)
-        finally:
-            keys.unpersist()
-            if decoded is not None:
-                decoded.unpersist()
-            if victims is not None:
-                victims.unpersist()
-        return {"rows_deleted": n_del,
-                "rowgroups_rewritten": out["rowgroups_encoded"],
-                "rowgroups_retired": out["rowgroups_retired"]}
+                .where(F.col(on).isNotNull()).distinct())
+        decoded = self._key_candidates(m, on, keys, lt)
+        n_del, _, out = self._rewrite(
+            m, decoded, decoded.join(keys, on=on, how="leftsemi"),
+            decoded.join(keys, on=on, how="left_anti"), held=(keys,))
+        return {"rows_deleted": n_del, **out}
 
     def upsert(self, df: DataFrame, key: str = "conv_id") -> dict:
         """MERGE at key granularity, ATOMIC in one manifest commit:
@@ -690,9 +618,10 @@ class TranscriptColumnStore:
         Unlike delete-then-append, there is no window where the old
         rows are gone and the new ones not yet visible — the victim
         rowgroups' survivors UNION the incoming rows re-encode through
-        the same single tombstone+replace commit (`replace_rowgroups`),
-        so a crash at any point leaves either the old state or the
-        fully merged one. Requires a fully closed store."""
+        the deletes' rewrite path (`_rewrite`) and its single
+        tombstone+replace commit (`replace_rowgroups`), so a crash at
+        any point leaves either the old state or the fully merged one.
+        Requires a fully closed store."""
         self._writable()
         self._require_closed("upsert")
         # raising guards run BEFORE any persist (a guard raise must not
@@ -735,8 +664,6 @@ class TranscriptColumnStore:
             for f in schema.fields:
                 if f.name not in eff_names and f.name not in df.columns:
                     df = df.withColumn(f.name, F.lit(None).cast(f.dataType))
-        # incoming projection validated above; from here on persists
-        # are immediately covered by the try/finally
         proj = [f.name for f in schema.fields]
         missing = sorted(set(proj) - set(df.columns))
         if missing:
@@ -744,49 +671,74 @@ class TranscriptColumnStore:
                 f"upsert: incoming frame lacks physical column(s) "
                 f"{missing}")
         keys = (df.select(F.col(key).alias(key))
-                .where(F.col(key).isNotNull()).distinct().persist())
-        decoded = incoming = victims = None
+                .where(F.col(key).isNotNull()).distinct())
+        decoded = self._key_candidates(m, key, keys, lt)
+        # `incoming` is persisted by the rewrite: counted once and
+        # consumed again by the replace encode — an unpersisted
+        # nondeterministic source (df.limit, sampling) could otherwise
+        # write different rows than it counted
+        n_replaced, n_ins, out = self._rewrite(
+            m, decoded, decoded.join(keys, on=key, how="leftsemi"),
+            decoded.join(keys, on=key, how="left_anti"),
+            incoming=df.select(proj), held=(keys,))
+        return {"rows_replaced": n_replaced, "rows_written": n_ins, **out}
+
+    def _key_candidates(self, m: ManifestSnapshot, on: str,
+                        keys: DataFrame, lt: str) -> DataFrame:
+        """The committed rows of the rowgroups some key in `keys` can
+        inhabit (manifest bounds + Bloom, `semi_join_segments`),
+        decoded with their source rowgroup id `__rg`."""
+        from .operators.semijoin import semi_join_segments
+        segs = self.warehouse.committed_segments(self.spark, m)
+        cand = semi_join_segments(segs, m.frame(self.spark), on, keys, lt)
+        return decode_with_rowgroup(cand, schema=m.decode_schema)
+
+    def _rewrite(self, m: ManifestSnapshot, decoded: DataFrame,
+                 matched: DataFrame, rest: DataFrame,
+                 incoming: DataFrame | None = None,
+                 held: tuple[DataFrame, ...] = (),
+                 run_id: str | None = None) -> tuple[int, int, dict]:
+        """The one tombstone+replace path behind delete_where,
+        delete_keys and upsert. `decoded` holds the candidate rows of
+        snapshot `m` with their source rowgroup id `__rg`; `matched`
+        and `rest` split it into the rows the mutation removes and
+        keeps. One `groupBy("__rg").count()` collect gives the victims
+        (the candidates that ACTUALLY hold a match: a bounds/Bloom
+        false positive is never rewritten, which would double its
+        stored bytes until rebuild()) and the match count; only those
+        ids reach the driver. The victims' `rest` rows, plus
+        `incoming` (upsert), commit through `replace_rowgroups`.
+
+        `held` (frames `decoded` is built from, e.g. a key set),
+        `decoded` and `incoming` are persisted here, in that order,
+        before any job runs (`matched`/`rest` are lazy over them), and
+        released in one finally; raising guards belong in the caller.
+        Returns (rows matched, rows incoming, {rowgroups_rewritten,
+        rowgroups_retired}), all zero with no commit when nothing
+        matches and nothing comes in."""
+        frames = [f.persist() for f in (*held, decoded, incoming)
+                  if f is not None]
         try:
-            from .operators.semijoin import semi_join_segments
-            segs = self.warehouse.committed_segments(self.spark, m)
-            cand = semi_join_segments(segs, m.frame(self.spark), key,
-                                      keys, lt)
-            decoded = decode_with_rowgroup(cand, schema=schema).persist()
-            # persisted: counted once here and consumed again by the
-            # replace encode — an unpersisted nondeterministic source
-            # (df.limit, sampling) could otherwise write different rows
-            # than it counted
-            incoming = df.select(proj).persist()
-            matches = decoded.join(keys, on=key, how="leftsemi")
-            victims = (matches.select(F.col("__rg").alias("rowgroup_id"))
-                       .distinct().persist())
-            n_replaced = matches.count()
-            n_ins = incoming.count()
-            if n_ins == 0 and n_replaced == 0:
-                return {"rows_replaced": 0, "rows_written": 0,
-                        "rowgroups_rewritten": 0, "rowgroups_retired": 0}
-            survivors = (decoded
-                         .join(victims.withColumnRenamed(
-                             "rowgroup_id", "__rg"), on="__rg",
-                             how="leftsemi")
-                         .join(keys, on=key, how="left_anti")
-                         .drop("__rg"))
-            victim_rows = sum(
-                m.rowgroup_rows.get(r["rowgroup_id"], 0)
-                for r in victims.collect())
+            counts = dict(matched.groupBy("__rg").count().collect())
+            n_in = 0 if incoming is None else incoming.count()
+            if not counts and not n_in:
+                return 0, 0, {"rowgroups_rewritten": 0,
+                              "rowgroups_retired": 0}
+            ids = sorted(counts)
+            rows = in_rowgroups(rest, ids).drop("__rg")
+            if incoming is not None:
+                rows = rows.unionByName(incoming)
             out = self.warehouse.replace_rowgroups(
-                self.spark, victims, survivors.unionByName(incoming),
-                victim_rows=int(victim_rows) + n_ins,
-                rows_per_segment=self.rows_per_segment,
-                mode=self.mode, bloom_columns=self.bloom_columns)
+                self.spark, ids, rows,
+                victim_rows=sum(m.rowgroup_rows[i] for i in ids) + n_in,
+                rows_per_segment=self.rows_per_segment, mode=self.mode,
+                run_id=run_id, bloom_columns=self.bloom_columns)
         finally:
-            keys.unpersist()
-            for frame in (decoded, incoming, victims):
-                if frame is not None:
-                    frame.unpersist()
-        return {"rows_replaced": n_replaced, "rows_written": n_ins,
-                "rowgroups_rewritten": out["rowgroups_encoded"],
-                "rowgroups_retired": out["rowgroups_retired"]}
+            for f in frames:
+                f.unpersist()
+        return (sum(counts.values()), n_in,
+                {"rowgroups_rewritten": out["rowgroups_encoded"],
+                 "rowgroups_retired": out["rowgroups_retired"]})
 
     def _require_closed(self, op: str) -> None:
         if self._pending_batches():
@@ -1702,7 +1654,7 @@ class TranscriptColumnStore:
         if best is None:
             out = decode(segs, schema=m.decode_schema, columns=inner)
         else:
-            out = _decode_matching_pred(segs, best, inner, m.decode_schema)
+            out = decode_matching_pred(segs, best, inner, m.decode_schema)
         cond = _exact_pred_cond(norm, any_mode)
         return self._finish_query(out.where(cond), cond, columns,
                                   include_pending)

@@ -1,3 +1,4 @@
+import contextlib
 import importlib
 
 import pytest
@@ -88,3 +89,21 @@ def place(monkeypatch):
     return lambda placement: monkeypatch.setattr(
         decode_mod, "_DRIVER_READ_BYTES", PLACEMENTS[placement])
 
+
+def _injected_crash(df):
+    raise RuntimeError("injected crash")
+
+
+@pytest.fixture
+def crash_at_commit(monkeypatch):
+    """`with crash_at_commit(store): ...` — every manifest append of
+    `store`'s backend (the commit point of each write) raises
+    RuntimeError("injected crash") inside the block, after the
+    segments were written; the backend is restored on leaving it."""
+    @contextlib.contextmanager
+    def crash(store):
+        with monkeypatch.context() as mp:
+            mp.setattr(store.warehouse.backend(store.spark),
+                       "append_manifest", _injected_crash)
+            yield
+    return crash

@@ -242,10 +242,8 @@ def test_tombstone_only_commit_never_reuses_rewrite_ids(spark, tmp_path, t):
     wh = store.warehouse
     big = sorted(i for i in _live_rowgroups(store) if i >= 1 << 62)
     assert big, "compact() should allocate in the rewrite namespace"
-    victims = spark.createDataFrame([(int(i),) for i in big],
-                                    "rowgroup_id bigint")
     # tombstone-only commit: every victim row deleted, no survivors
-    out = wh.replace_rowgroups(spark, victims, t.limit(0))
+    out = wh.replace_rowgroups(spark, big, t.limit(0))
     assert out["rowgroups_retired"] == len(big)
 
     # re-ingest and rewrite again — must allocate ABOVE the retired ids

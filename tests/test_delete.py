@@ -117,17 +117,14 @@ def test_delete_requires_closed_store(spark, tmp_path, t):
         s.delete_where("role", "tool")
 
 
-def test_delete_crash_before_commit_changes_nothing(spark, tmp_path, t):
+def test_delete_crash_before_commit_changes_nothing(spark, tmp_path, t,
+                                                   crash_at_commit):
     cols = t.columns
     s = _store(spark, tmp_path, t)
     before = _sorted(s.rows(), cols)
-    backend = s.warehouse.backend(spark)
-    orig = backend.append_manifest
-    backend.append_manifest = lambda df: (_ for _ in ()).throw(
-        RuntimeError("injected crash"))
-    with pytest.raises(RuntimeError, match="injected crash"):
+    with crash_at_commit(s), \
+            pytest.raises(RuntimeError, match="injected crash"):
         s.delete_where("role", "tool")
-    backend.append_manifest = orig
     assert _sorted(s.rows(), cols) == before
     out = s.delete_where("role", "tool")
     assert out["rows_deleted"] == t.where(F.col("role") == "tool").count()
@@ -173,7 +170,7 @@ def test_upsert_replaces_and_inserts_atomically(spark, tmp_path, t):
             == new.count())
 
 
-def test_upsert_crash_atomic(spark, tmp_path, t):
+def test_upsert_crash_atomic(spark, tmp_path, t, crash_at_commit):
     """Unlike delete-then-append, a crash mid-upsert must leave the
     OLD rows fully intact — no window where they are gone."""
     cols = t.columns
@@ -182,13 +179,9 @@ def test_upsert_crash_atomic(spark, tmp_path, t):
     victim = t.select("conv_id").first()["conv_id"]
     repl = (t.where(F.col("conv_id") == victim)
             .withColumn("text", F.lit("replaced")))
-    backend = s.warehouse.backend(spark)
-    orig = backend.append_manifest
-    backend.append_manifest = lambda df: (_ for _ in ()).throw(
-        RuntimeError("injected crash"))
-    with pytest.raises(RuntimeError, match="injected crash"):
+    with crash_at_commit(s), \
+            pytest.raises(RuntimeError, match="injected crash"):
         s.upsert(repl, key="conv_id")
-    backend.append_manifest = orig
     assert _sorted(s.rows(), cols) == before
     s.upsert(repl, key="conv_id")
     expect = t.where(F.col("conv_id") != victim).unionByName(repl)

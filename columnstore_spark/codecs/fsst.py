@@ -22,6 +22,18 @@ ASCII-dominant text (transcripts) pays nothing for step 1; high-byte-heavy
 text inflates and the codec chooser's trial estimate routes it to
 plain/dict instead.
 
+Random access (`gather`, the FSST paper's point): a row range [s, e) of the
+stored values is the byte span [off[s], off[e]) of the full blob
+(`off` = prefix sum of the per-value lengths). Subtracting the high
+bytes stored before each end (a binary search of the high positions)
+gives the same span in the low stream. A prefix sum of each code's
+expanded length over the code stream (`_expand_table` lens) locates the
+codes that cover that low span, also by binary search. Only those codes
+are expanded; the partial codes at either end are trimmed, and the high
+bytes whose positions fall inside the span are re-inserted. The prefix
+sum also gives the stream's total expanded length, so a gather checks
+it against the stored n_low just as a full decode does.
+
 Body grammar (after shared segment framing):
     varint n_merges;  2*n_merges bytes of (left, right) code pairs
     varint n_high;    delta-varint high positions; n_high literal bytes
@@ -153,11 +165,34 @@ def _expand_table(merges: list[tuple[int, int]]) -> tuple[np.ndarray, np.ndarray
     return lens, tab
 
 
-def _reverse_merges(enc: bytes, merges: list[tuple[int, int]]) -> bytes:
-    """Expand codes back to their full symbols in one vectorized
+def _expand(codes: np.ndarray, lens: np.ndarray,
+            tab: np.ndarray) -> np.ndarray:
+    """Expand `codes` (uint8) to their full symbols in one vectorized
     gather-scatter: output offsets from a cumsum of per-code expanded
     lengths, then one scatter pass per symbol-byte position (passes =
     longest expanded symbol, typically ~8 — not one C pass per rule).
+    -> uint8 array of the concatenated symbols."""
+    out_lens = lens[codes]
+    pos = np.empty(codes.size + 1, dtype=np.int64)
+    pos[0] = 0
+    np.cumsum(out_lens, out=pos[1:])
+    out = np.empty(pos[-1], dtype=np.uint8)
+    starts = pos[:-1]
+    out[starts] = tab[codes, 0]  # every code writes byte 0
+    # shrink the survivor set as symbols run out of bytes: total
+    # scatter work is sum(expanded lengths) = output size, not
+    # passes x input size
+    idx = np.flatnonzero(out_lens > 1)
+    j = 1
+    while idx.size:
+        out[starts[idx] + j] = tab[codes[idx], j]
+        j += 1
+        idx = idx[out_lens[idx] > j]
+    return out
+
+
+def _reverse_merges(enc: bytes, merges: list[tuple[int, int]]) -> bytes:
+    """Expand a whole code stream back to the low stream.
 
     Substitution is context-free, so this decodes any legal code stream
     regardless of how the encoder chose among overlapping matches.
@@ -165,24 +200,7 @@ def _reverse_merges(enc: bytes, merges: list[tuple[int, int]]) -> bytes:
     if not merges or not enc:
         return enc
     lens, tab = _expand_table(merges)
-    arr = np.frombuffer(enc, dtype=np.uint8)
-    out_lens = lens[arr]
-    pos = np.empty(arr.size + 1, dtype=np.int64)
-    pos[0] = 0
-    np.cumsum(out_lens, out=pos[1:])
-    out = np.empty(pos[-1], dtype=np.uint8)
-    starts = pos[:-1]
-    out[starts] = tab[arr, 0]  # every code writes byte 0
-    # shrink the survivor set as symbols run out of bytes: total
-    # scatter work is sum(expanded lengths) = output size, not
-    # passes x input size
-    idx = np.flatnonzero(out_lens > 1)
-    j = 1
-    while idx.size:
-        out[starts[idx] + j] = tab[arr[idx], j]
-        j += 1
-        idx = idx[out_lens[idx] > j]
-    return out.tobytes()
+    return _expand(np.frombuffer(enc, dtype=np.uint8), lens, tab).tobytes()
 
 
 def _split_high(blob: bytes) -> tuple[bytes, np.ndarray, bytes]:
@@ -234,7 +252,10 @@ def encode(vals: "V.VarChunk", logical: str,
     return b"".join(out)
 
 
-def decode(body: memoryview, n: int, logical: str) -> "V.VarChunk":
+def _parse(body: memoryview, n: int):
+    """Body -> (merges, high positions, high bytes, n_low, code stream,
+    per-value lengths): the one reader of the body grammar, shared by
+    `decode` and `gather`."""
     n_merges, pos = bitpack.read_varint(body)
     merge_bytes = bytes(body[pos:pos + 2 * n_merges])
     merges = [(merge_bytes[2 * i], merge_bytes[2 * i + 1]) for i in range(n_merges)]
@@ -253,13 +274,75 @@ def decode(body: memoryview, n: int, logical: str) -> "V.VarChunk":
     enc = bytes(body[pos:pos + n_enc])
     pos += n_enc
     lengths, _ = bitpack.varint_decode_array(body[pos:], n)
-    lengths = lengths.astype(np.int64)
+    return merges, high_pos, high, n_low, enc, lengths.astype(np.int64)
 
+
+def _check_low(got: int, n_low: int) -> None:
+    """Integrity: the code stream must expand to the stored low-stream
+    length (a truncated or corrupt stream does not)."""
+    if got != n_low:
+        raise ValueError(f"fsst decode: low stream {got} != {n_low}")
+
+
+def decode(body: memoryview, n: int, logical: str) -> "V.VarChunk":
+    merges, high_pos, high, n_low, enc, lengths = _parse(body, n)
     low = _reverse_merges(enc, merges)
-    if len(low) != n_low:
-        raise ValueError(f"fsst decode: low stream {len(low)} != {n_low}")
+    _check_low(len(low), n_low)
     blob = _merge_high(low, high_pos, high)
     return V.VarChunk(lengths=lengths, blob=blob)
+
+
+def _firsts(counts: np.ndarray) -> np.ndarray:
+    """Where each of pieces of `counts` elements starts once they are
+    concatenated (the exclusive prefix sum)."""
+    out = np.zeros(counts.size, dtype=np.int64)
+    np.cumsum(counts[:-1], out=out[1:])
+    return out
+
+
+def _spans(starts: np.ndarray, counts: np.ndarray) -> np.ndarray:
+    """Concatenated ``arange(s, s + c)`` over the pairs, vectorized."""
+    return (np.arange(int(counts.sum()), dtype=np.int64)
+            + np.repeat(starts - _firsts(counts), counts))
+
+
+def gather(body: memoryview, n: int,
+           ranges: list[tuple[int, int]]) -> "V.VarChunk":
+    """Values [start, start+len) of each `ranges` entry (indices into the
+    body's `n` stored values), concatenated — random access without
+    expanding the rest of the code stream (see the module docstring).
+    Bit-identical to slicing `decode`'s output, and it keeps decode's
+    integrity check: a code stream whose total expanded length is not
+    the stored `n_low` raises ValueError."""
+    merges, high_pos, high, n_low, enc, lengths = _parse(body, n)
+    lens, tab = _expand_table(merges)
+    codes = np.frombuffer(enc, dtype=np.uint8)
+    # pos[c]: low-stream offset where code c's expansion starts
+    pos = np.empty(codes.size + 1, dtype=np.int64)
+    pos[0] = 0
+    np.cumsum(lens[codes], out=pos[1:])
+    _check_low(int(pos[-1]), n_low)
+    s = np.array([r[0] for r in ranges], dtype=np.int64)
+    e = s + np.array([r[1] for r in ranges], dtype=np.int64)
+    off = np.zeros(n + 1, dtype=np.int64)
+    np.cumsum(lengths, out=off[1:])
+    b0, b1 = off[s], off[e]  # byte spans in the full blob
+    h0 = np.searchsorted(high_pos, b0)  # high bytes before each span
+    h1 = np.searchsorted(high_pos, b1)
+    l0, l1 = b0 - h0, b1 - h1  # the same spans in the low stream
+    # codes c0..c1-1 cover [l0, l1): expand them, then trim the partial
+    # codes at either end
+    c0 = np.searchsorted(pos, l0, side="right") - 1
+    c1 = np.maximum(np.searchsorted(pos, l1, side="left"), c0)
+    expanded = _expand(codes[_spans(c0, c1 - c0)], lens, tab)
+    piece = _firsts(pos[c1] - pos[c0])  # each span's expansion
+    low = expanded[_spans(piece + l0 - pos[c0], l1 - l0)]
+    # re-insert the high bytes inside each span at their output offsets
+    hidx = _spans(h0, h1 - h0)
+    out_pos = high_pos[hidx] + np.repeat(_firsts(b1 - b0) - b0, h1 - h0)
+    hi = np.frombuffer(high, dtype=np.uint8)[hidx].tobytes()
+    return V.VarChunk(lengths=lengths[_spans(s, e - s)],
+                      blob=_merge_high(low.tobytes(), out_pos, hi))
 
 
 def estimate(vals: "V.VarChunk",

@@ -17,6 +17,8 @@ Fast paths operate on the compressed body without expansion:
   the reference's key->bitmap trick `DictionaryEncoding.cs:174-203`),
   then scan run ranges; windows clip runs without expanding
   (early-exit + clip, `DictionaryEncoding.cs:243-258`).
+- fsst: windows and gathers expand only the codes that cover the
+  requested rows' bytes (`fsst.gather`), nulls or not.
 Everything else decodes vectorized and scans the equality mask. In the
 distributed engine these kernels sit BEHIND manifest pruning
 (plans/pruning.py): segments whose min/max/distinct stats exclude the
@@ -29,7 +31,7 @@ import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
 
-from . import constant, dictrle
+from . import constant, dictrle, fsst
 from . import values as V
 from .segment import ARROW_IPC_CODEC_ID, decode_segment, read_frame, to_arrow
 
@@ -538,10 +540,13 @@ def gather_ranges(payload: bytes | memoryview, logical: str,
     segment — the reference's QueryByValue composition: ranges found on
     one column are materialized from the others
     (`ColumnSegment.QueryByRange` per range, `ColumnSegment.cs:95-157`).
+    Bit-identical to the concatenated slices of `decode_segment`.
 
-    dict_rle null-free segments clip runs per range without expanding
-    (the window fast path); everything else decodes the segment ONCE
-    and gathers slices — never once per range."""
+    Two codecs gather without expanding the segment: dict_rle null-free
+    segments clip runs per range (the window fast path), and FSST
+    segments, with or without nulls, expand only the codes that cover
+    the ranges' bytes (`fsst.gather`). Everything else decodes the
+    segment ONCE and gathers slices — never once per range."""
     if not ranges:
         return _empty(payload, logical)
     codec, n, validity, body = _parse_frame(payload)
@@ -555,11 +560,30 @@ def gather_ranges(payload: bytes | memoryview, logical: str,
                  for p in (_dict_window(runs, logical, s, ln, n)
                            for s, ln in ranges)]
         return parts[0] if len(parts) == 1 else pa.concat_arrays(parts)
+    if codec == fsst.CODEC_ID:
+        return _fsst_gather(body, n, validity, logical, ranges)
     arr = decode_segment(payload, logical)
     if len(ranges) == 1:
         s, ln = ranges[0]
         return arr.slice(s, ln)
     return pa.concat_arrays([arr.slice(s, ln) for s, ln in ranges])
+
+
+def _fsst_gather(body: memoryview, n: int, validity: np.ndarray | None,
+                 logical: str, ranges: list[tuple[int, int]]) -> pa.Array:
+    """Row ranges (within its `n` rows) of an FSST segment. The body
+    stores only the non-null values: a row range maps to the value
+    range between its two validity prefix counts, and the ranges'
+    validity bits are reattached around the gathered values."""
+    if validity is None:
+        return V.var_chunk_to_arrow(fsst.gather(body, n, ranges), logical)
+    before = np.zeros(n + 1, dtype=np.int64)
+    np.cumsum(validity, out=before[1:])
+    vals = fsst.gather(body, int(before[-1]),
+                       [(int(before[s]), int(before[s + ln] - before[s]))
+                        for s, ln in ranges])
+    sel = np.concatenate([validity[s:s + ln] for s, ln in ranges])
+    return to_arrow(vals, sel, logical, int(sel.size))
 
 
 def query_window(payload: bytes | memoryview, logical: str,
@@ -574,6 +598,8 @@ def query_window(payload: bytes | memoryview, logical: str,
     if validity is None and codec == dictrle.CODEC_ID:
         return _dict_window(_dict_runs(body, logical), logical,
                             start, length, n)
+    if codec == fsst.CODEC_ID:
+        return _fsst_gather(body, n, validity, logical, [(start, length)])
 
     return decode_segment(payload, logical).slice(start, length)
 

@@ -4,7 +4,8 @@ Both stages run as ``mapInArrow`` over rowgroup-sorted input, so each
 rowgroup arrives as a contiguous block of record batches: either a
 partition hash-partitioned and sorted by rowgroup id, or the sorted
 table a task reads itself from a snapshot's pinned segment files
-(`PinnedRead`). Streaming the group boundary detection (instead of
+(`PinnedRead`; in the driver, from the warehouse's `FilePool` of whole
+pinned files). Streaming the group boundary detection (instead of
 ``groupBy().applyInPandas``) never materializes per-row Python
 objects: strings stay inside Arrow buffers end-to-end
 (BASELINE.json input_hint: "no per-row Python").
@@ -13,7 +14,9 @@ objects: strings stay inside Arrow buffers end-to-end
 from __future__ import annotations
 
 import bisect
+import collections
 import dataclasses
+import os
 from collections.abc import Iterator
 
 import pyarrow as pa
@@ -107,10 +110,12 @@ class PinnedRead:
     kept, projected segments. `read_schema` is the Arrow schema the
     files are read with (the `READ_COLS` they hold, merged); keys
     compare on attempt_id only when it has one. `schema` is the
-    snapshot's decode schema. Built by `ManifestSnapshot.pinned`;
+    snapshot's decode schema. `pool` is the warehouse's driver-side
+    `FilePool` (None: none). Built by `ManifestSnapshot.pinned`;
     consumed by `decode._rowgroup_stage`, which reads it with
-    `read_task` — in the driver when `raw_bytes` is small, else in
-    tasks that each read a contiguous slice of the ids."""
+    `read_task` — in the driver when `raw_bytes` is small, through
+    `pool`, else in tasks that each read a contiguous slice of the ids
+    from their files."""
     spark: SparkSession
     files: tuple
     keys: dict
@@ -118,6 +123,8 @@ class PinnedRead:
     schema: T.StructType
     sizes: dict
     columns: frozenset | None = None
+    pool: FilePool | None = dataclasses.field(default=None, repr=False,
+                                              compare=False)
 
     @property
     def ids(self) -> list[int]:
@@ -167,18 +174,19 @@ class PinnedRead:
 
 
 def read_task(paths: list[str], schema: pa.Schema, ids: list[int],
-              keys: set) -> pa.Table:
+              keys: set, pool: FilePool | None = None) -> pa.Table:
     """One `PinnedRead` work item: the segment rows of
     `paths`, read with `schema` (a file without one of its columns
     reads it as NULL), whose rowgroup is in `ids` (a pushed parquet
     filter) and whose (rowgroup_id, column, run_id, attempt_id) is a
     live key, sorted by (rowgroup_id, col_idx). A NULL or absent
-    attempt_id compares as '' (rows from before attempt_id existed)."""
+    attempt_id compares as '' (rows from before attempt_id existed).
+    With a driver-side `pool` the files come from it (each read whole,
+    once) and the rowgroup filter runs in memory."""
     import pyarrow.compute as pc
-    import pyarrow.dataset as ds
 
-    t = ds.dataset(paths, schema=schema, format="parquet").to_table(
-        filter=ds.field("rowgroup_id").isin(ids))
+    t = (_read(paths, schema, ids) if pool is None
+         else pool.read(paths, schema, ids))
     att = (pc.fill_null(t["attempt_id"], "").to_pylist()
            if "attempt_id" in schema.names else [""] * t.num_rows)
     mask = [k in keys for k in zip(t["rowgroup_id"].to_pylist(),
@@ -187,3 +195,91 @@ def read_task(paths: list[str], schema: pa.Schema, ids: list[int],
     return (t.filter(pa.array(mask, pa.bool_()))
             .sort_by([("rowgroup_id", "ascending"),
                       ("col_idx", "ascending")]))
+
+
+def _read(paths: list[str], schema: pa.Schema,
+          ids: list[int] | None = None) -> pa.Table:
+    """The rows of the parquet files `paths` read with `schema`, only
+    those whose rowgroup is in `ids` (None: every row)."""
+    import pyarrow.dataset as ds
+
+    data = ds.dataset(paths, schema=schema, format="parquet")
+    if ids is None:
+        return data.to_table()
+    return data.to_table(filter=ds.field("rowgroup_id").isin(ids))
+
+
+# Bound of one `FilePool`, in bytes of pooled Arrow tables. The pool
+# holds whole segment files; their payloads are already encoded, so a
+# file's table is about its size on disk. It serves only the reads the
+# driver decodes, each at most `decode._DRIVER_READ_BYTES` (4 MiB
+# decoded), and pays off when lookups come back to the same files.
+# 64 MiB holds the files of sixteen such reads, and the whole `serve`
+# store (~2.6 MB of pinned files) many times over, while staying small
+# next to what the driver process already holds (a `serve` run peaks
+# near 1.5 GB summed PSS). A file larger than the bound is read as
+# before, rowgroup filter pushed down, and never pooled.
+_POOL_BYTES = 64 << 20
+
+
+class FilePool:
+    """Driver-side cache of whole pinned segment files, keyed by path.
+
+    Segment files are immutable and uniquely named, so a pooled table
+    stays valid while the file is pinned: `pin(paths)` (called when
+    the warehouse builds a snapshot) drops every other entry, and a
+    file that is not pinned is read but not pooled. Entries are
+    evicted least recently used past `_POOL_BYTES`. The pool never
+    leaves the driver: executor tasks read their files themselves, and
+    pickling a pool raises TypeError."""
+
+    def __init__(self) -> None:
+        self._tables: collections.OrderedDict = collections.OrderedDict()
+        self._pinned: frozenset = frozenset()
+        self.nbytes = 0
+
+    def __reduce__(self):
+        raise TypeError("a FilePool is driver-only; tasks read their "
+                        "segment files themselves")
+
+    def pin(self, paths) -> None:
+        """The files the current snapshot pins: forget all others."""
+        self._pinned = frozenset(paths)
+        for p in [p for p in self._tables if p not in self._pinned]:
+            self._drop(p)
+
+    def read(self, paths: list[str], schema: pa.Schema,
+             ids: list[int]) -> pa.Table:
+        """`_read(paths, schema, ids)`, each pinned file within the
+        bound read whole at most once; any other file is read as
+        `_read` reads it."""
+        import pyarrow.compute as pc
+
+        parts = []
+        for p in paths:
+            if p not in self._pinned or os.path.getsize(p) > _POOL_BYTES:
+                parts.append(_read([p], schema, ids))
+                continue
+            t = self._table(p, schema)
+            parts.append(t.filter(pc.is_in(
+                t["rowgroup_id"], pa.array(ids, t["rowgroup_id"].type))))
+        return pa.concat_tables(parts) if parts else schema.empty_table()
+
+    def _table(self, path: str, schema: pa.Schema) -> pa.Table:
+        t = self._tables.get(path)
+        if t is not None and t.schema.equals(schema):
+            self._tables.move_to_end(path)
+            return t
+        t = _read([path], schema)
+        if t.nbytes <= _POOL_BYTES:
+            self._drop(path)
+            self._tables[path] = t
+            self.nbytes += t.nbytes
+            while self.nbytes > _POOL_BYTES:
+                self._drop(next(iter(self._tables)))
+        return t
+
+    def _drop(self, path: str) -> None:
+        t = self._tables.pop(path, None)
+        if t is not None:
+            self.nbytes -= t.nbytes

@@ -14,7 +14,10 @@ the pinned files, live-key rows only, and decoded by one per-task body
 placed by the read's decoded size. A small read (a point or IN
 lookup) runs that body in the driver while the frame is built and
 returns a local frame: no Python worker starts, and its `collect()`
-runs no job. A read over `_DRIVER_READ_BYTES` runs it as one shuffle-free
+runs no job. The driver body reads its files through the warehouse's
+`FilePool` (each pinned file read from disk at most once), and its
+gathers decompress only the returned rows (dict_rle run clipping, FSST
+random access). A read over `_DRIVER_READ_BYTES` runs it as one shuffle-free
 stage, `spark.range(n).mapInArrow`, where task i reads its contiguous
 slice of the kept rowgroup ids — no JVM parquet scan, no exchange. A
 segments `DataFrame` (operator-level callers, `aggregate`, the Iceberg
@@ -126,12 +129,14 @@ def _rowgroup_stage(segments, schema: T.StructType,
     (`run_tasks`); where that body runs depends on the read's
     `raw_bytes`. Up to `_DRIVER_READ_BYTES` it runs in the driver over
     one work item, EAGERLY — the segments are read and decoded when
-    this frame is built, not when it is forced — and the result comes
-    back as `spark.createDataFrame(table, schema)`, a local relation
-    that forcing runs with no job. A larger read runs as
+    this frame is built, not when it is forced — reading its files
+    through the read's `pool`, and the result comes back as
+    `spark.createDataFrame(table, schema)`, a local relation that
+    forcing runs with no job. A larger read runs as
     `spark.range(0, n, 1, n).mapInArrow(...)` with n = min(kept
     rowgroups, `num_partitions`): the work plan travels in the
-    closure, task `id` decodes work item `id`, and nothing shuffles.
+    closure, task `id` decodes work item `id` from files it reads
+    itself (the pool is not in the closure), and nothing shuffles.
     A segments DataFrame is hash-partitioned by rowgroup into
     `num_partitions` and sorted within partitions.
     `num_partitions` defaults to spark.sql.shuffle.partitions."""
@@ -177,19 +182,21 @@ def _rowgroup_stage(segments, schema: T.StructType,
     if not tasks:
         return spark.createDataFrame([], schema)
 
-    def run_tasks(ids) -> Iterator[pa.RecordBatch]:
+    def run_tasks(ids, pool=None) -> Iterator[pa.RecordBatch]:
         for i in ids:
             yield from emit(iter_groups(
-                read_task(*tasks[i]).to_batches(), "rowgroup_id"))
+                read_task(*tasks[i], pool).to_batches(), "rowgroup_id"))
 
     if in_driver:
         return spark.createDataFrame(pa.Table.from_batches(
-            list(run_tasks(range(len(tasks)))), out_pa_schema), schema)
+            list(run_tasks(range(len(tasks)), segments.pool)),
+            out_pa_schema), schema)
 
     def run_partition(batches: Iterator[pa.RecordBatch]
                       ) -> Iterator[pa.RecordBatch]:
         # drain the (one-row) input before reading: the task's id
-        # selects its work item
+        # selects its work item; the task reads its own files (the
+        # driver's pool stays out of this closure)
         return run_tasks([i for b in batches
                           for i in b.column(0).to_pylist()])
 

@@ -40,8 +40,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.pandas.types import from_arrow_schema
 
-from ..operators.arrow_io import (READ_COLS, PinnedRead, arrow_schema_for,
-                                  overlaps)
+from ..operators.arrow_io import (READ_COLS, FilePool, PinnedRead,
+                                  arrow_schema_for, overlaps)
 from ..plans.pruning import _ISIN_CAP, keep_ids, manifest_rows
 
 _SPARK_ROW_METADATA = b"org.apache.spark.sql.parquet.row.metadata"
@@ -171,16 +171,25 @@ class ManifestSnapshot:
         return frozenset(self.raw["run_id"].to_pylist())
 
     @cached_property
+    def _typed(self) -> pa.Table:
+        """The rows that type the store's columns: the live ones, or,
+        once every row was deleted, the history — so an empty store
+        keeps its columns, and probes on them answer empty instead of
+        failing to resolve."""
+        return self.live if self.live.num_rows else self.raw
+
+    @cached_property
     def logical_types(self) -> dict[str, str]:
         out: dict[str, str] = {}
-        for r in self.rows:
-            out.setdefault(r["column"], r["logical_type"])
+        for col, lt in zip(self._typed["column"].to_pylist(),
+                           self._typed["logical_type"].to_pylist()):
+            out.setdefault(col, lt)
         return out
 
     @cached_property
     def decode_schema(self) -> T.StructType:
         from ..operators.decode import schema_from_manifest
-        return schema_from_manifest(self.live)
+        return schema_from_manifest(self._typed)
 
     @cached_property
     def rowgroup_rows(self) -> dict[int, int]:
@@ -293,12 +302,13 @@ class ManifestSnapshot:
                                F.coalesce("attempt_id", F.lit("")))
         return _semi_join(spark, segs, keys, list(_KEY_TYPES))
 
-    def pinned(self, spark: SparkSession, rowgroups=None) -> PinnedRead:
+    def pinned(self, spark: SparkSession, rowgroups=None,
+               pool: FilePool | None = None) -> PinnedRead:
         """The committed segments of `rowgroups` (None = every live
         rowgroup) as a read the decode stage runs itself: the same
         pinned files, file pruning and live-key filter as `segments`,
-        applied by pyarrow in the driver or in the stage's tasks.
-        Parquet backend only."""
+        applied by pyarrow in the driver (through `pool`, when given)
+        or in the stage's tasks. Parquet backend only."""
         keys = dict(self._keys)
         if rowgroups is not None:
             keys = {rg: keys[rg] for rg in set(rowgroups) & keys.keys()}
@@ -310,7 +320,7 @@ class ManifestSnapshot:
             spark, tuple((f.path, f.rowgroups, self._attempt(f))
                          for f in files),
             keys, arrow_schema_for(T.StructType(read)), self.decode_schema,
-            self._sizes)
+            self._sizes, pool=pool)
 
     def _attempt(self, f: SegmentFile) -> tuple[str, str] | None:
         """A file's commit attempt as the manifest keys it (a manifest

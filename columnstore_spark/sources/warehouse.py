@@ -37,6 +37,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..codecs import chooser
+from ..operators.arrow_io import FilePool
 from ..operators.encode import default_rowgroup_expr, encode, encode_files
 from ..plans.pruning import _ISIN_CAP
 from .snapshot import ManifestSnapshot, SegmentFile, read_footer
@@ -57,6 +58,13 @@ def in_rowgroups(df: DataFrame, ids, keep: bool = True) -> DataFrame:
 
 
 class Warehouse:
+    """The segments and manifest under `root`. Per committed state it
+    keeps, in the driver, the manifest snapshot (`snapshot`), the
+    footers of the segment files the snapshot pins and a `FilePool` of
+    those files' contents, which the small reads the decode stage runs
+    in the driver take their files from (`pinned_read`). A new
+    snapshot drops the footers and pooled files it no longer pins."""
+
     def __init__(self, root: str, format: str = "auto"):
         self.root = root.rstrip("/")
         self._format = format
@@ -65,10 +73,12 @@ class Warehouse:
         # kept as attributes so plan tests can scan them directly)
         self.segments_path = f"{self.root}/segments"
         self.manifest_path = f"{self.root}/manifest"
-        # (token, snapshot) of the last committed state read, and the
-        # footers of the (immutable) segment files seen so far
+        # (token, snapshot) of the last committed state read, the
+        # footers of the (immutable) segment files it pins and the
+        # pool of their contents
         self._snap: tuple | None = None
         self._footers: dict[str, SegmentFile] = {}
+        self._pool = FilePool()
 
     def backend(self, spark: SparkSession):
         """Resolve the storage backend once per warehouse (iceberg when
@@ -114,11 +124,13 @@ class Warehouse:
         raw = backend.read_manifest_arrow([f for f, _size, _mtime in
                                            (tok[0] if tok else ())])
         snap = None
+        paths = ()
         if raw is not None:
             paths = tok[1]
             self._footers = {p: self._footers.get(p) or read_footer(p)
                              for p in paths}
             snap = ManifestSnapshot(raw, [self._footers[p] for p in paths])
+        self._pool.pin(paths)
         self._snap = (tok, snap)
         return snap
 
@@ -170,10 +182,12 @@ class Warehouse:
         input: a `PinnedRead` they read with pyarrow, in the driver
         when small, else in their tasks — no JVM scan, no shuffle — or,
         on the Iceberg backend (no pinned file list), the
-        `committed_segments` DataFrame."""
+        `committed_segments` DataFrame. A driver read takes its files
+        from this warehouse's pool, so a file is read from disk at most
+        once while the current snapshot pins it."""
         if snapshot.files is None:
             return self.committed_segments(spark, snapshot, rowgroups)
-        return snapshot.pinned(spark, rowgroups)
+        return snapshot.pinned(spark, rowgroups, pool=self._pool)
 
     def done_rowgroups(self, spark: SparkSession) -> DataFrame | None:
         ids = self._done_ids(spark)

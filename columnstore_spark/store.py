@@ -1623,9 +1623,7 @@ class TranscriptColumnStore:
         fallback = self._needs_fallback(m, *cols, *(columns or []))
         lts = {} if fallback else self._logical_types(m, cols)
         for c in cols:
-            # (a store whose every row was deleted has no live
-            # rowgroup left to type any column by)
-            if not fallback and c not in lts and m.rowgroup_rows:
+            if not fallback and c not in lts:
                 raise ValueError(f"unknown column {c!r}")
         norm = [(c, k, p, lts.get(c) or "") for c, k, p in preds]
         if any_mode:

@@ -168,3 +168,39 @@ def test_delete_every_row(spark, tmp_path, t):
     assert s.rows().count() == 0
     assert s.warehouse.live_manifest(spark).count() == 0
     assert s.stats().count() == 0
+
+
+def test_probes_after_every_row_deleted(spark, tmp_path, t):
+    """A store whose every row was deleted keeps its schema: probes and
+    explains answer with empty frames of the store schema (projected
+    when asked), pending rows still answer, and a column the store
+    never had still raises ValueError."""
+    s = _store(spark, tmp_path, t)
+    want = s.schema()
+    s.delete_where("turn_idx", (-1e9, 1e9))
+    assert s.schema() == want
+    for out in (s.query_by_value("role", "tool"),
+                s.query_where({"role": "tool", "turn_idx": (0, 5)}),
+                s.query_by_in("conv_id", ["a", "b"]),
+                s.query_by_null("tool"),
+                s.query_any({"role": "tool", "tool": None}),
+                s.rows()):
+        assert out.schema == want and out.count() == 0
+    proj = s.query_where({"role": "tool"}, columns=["turn_idx", "text"])
+    assert proj.columns == ["turn_idx", "text"] and proj.count() == 0
+    for ex in (s.explain_where({"role": "tool", "turn_idx": (0, 5)}),
+               s.explain_any({"role": "tool", "turn_idx": 3}),
+               s.explain_prune("turn_idx", (0, 5))):
+        assert ex.count() == 0
+    assert "keep_role" in s.explain_where({"role": "tool"}).columns
+    for bad in (lambda: s.query_by_value("nope", 1),
+                lambda: s.query_where({"role": "tool", "nope": 1}),
+                lambda: s.query_by_value("role", "tool", columns=["nope"]),
+                lambda: s.explain_where({"nope": 1}),
+                lambda: s.explain_prune("nope", 1)):
+        with pytest.raises(ValueError, match="nope"):
+            bad()
+    key = t.first()["conv_id"]
+    s.add_range(t.where(F.col("conv_id") == key))
+    pending = s.query_by_value("conv_id", key, include_pending=True)
+    assert pending.count() == t.where(F.col("conv_id") == key).count()

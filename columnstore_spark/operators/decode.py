@@ -35,7 +35,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..codecs.segment import decode_segment
-from .arrow_io import PinnedRead, arrow_schema_for, iter_groups, read_task
+from .arrow_io import (PinnedRead, arrow_schema_for, iter_groups, local_frame,
+                       read_task)
 
 _LOGICAL_TO_SPARK = {
     "int8": T.ByteType(), "int16": T.ShortType(), "int32": T.IntegerType(),
@@ -112,6 +113,18 @@ def schema_from_manifest(manifest: pa.Table) -> T.StructType:
     return T.StructType(fields)
 
 
+def decoded_in_driver(segments, columns=None) -> bool:
+    """Whether the decode stage reads `segments`, projected to
+    `columns` (None: all), in the driver: the placement test of
+    `_rowgroup_stage`. True for a `PinnedRead` whose kept, projected
+    segments decode to at most `_DRIVER_READ_BYTES`."""
+    if not isinstance(segments, PinnedRead):
+        return False
+    if columns is not None:
+        segments = segments.project(columns)
+    return segments.raw_bytes <= _DRIVER_READ_BYTES
+
+
 def _rowgroup_stage(segments, schema: T.StructType,
                     num_partitions: int | None, group_fn,
                     pass_rowgroup: bool = False) -> DataFrame:
@@ -131,10 +144,10 @@ def _rowgroup_stage(segments, schema: T.StructType,
     one work item, EAGERLY — the segments are read and decoded when
     this frame is built, not when it is forced — reading its files
     through the read's `pool`, and the result comes back as
-    `spark.createDataFrame(table, schema)`, a local relation that
-    forcing runs with no job. A larger read runs as
-    `spark.range(0, n, 1, n).mapInArrow(...)` with n = min(kept
-    rowgroups, `num_partitions`): the work plan travels in the
+    `arrow_io.local_frame`, a local relation that forcing runs with no
+    Python worker; so does a read left with no work item. A larger
+    read runs as `spark.range(0, n, 1, n).mapInArrow(...)` with
+    n = min(kept rowgroups, `num_partitions`): the work plan travels in the
     closure, task `id` decodes work item `id` from files it reads
     itself (the pool is not in the closure), and nothing shuffles.
     A segments DataFrame is hash-partitioned by rowgroup into
@@ -177,10 +190,10 @@ def _rowgroup_stage(segments, schema: T.StructType,
             lambda batches: emit(iter_groups(batches, "rowgroup_id")),
             schema)
 
-    in_driver = segments.raw_bytes <= _DRIVER_READ_BYTES
+    in_driver = decoded_in_driver(segments)
     tasks = segments.tasks(1 if in_driver else num_partitions)
     if not tasks:
-        return spark.createDataFrame([], schema)
+        return local_frame(spark, schema)
 
     def run_tasks(ids, pool=None) -> Iterator[pa.RecordBatch]:
         for i in ids:
@@ -188,9 +201,8 @@ def _rowgroup_stage(segments, schema: T.StructType,
                 read_task(*tasks[i], pool).to_batches(), "rowgroup_id"))
 
     if in_driver:
-        return spark.createDataFrame(pa.Table.from_batches(
-            list(run_tasks(range(len(tasks)), segments.pool)),
-            out_pa_schema), schema)
+        return local_frame(spark, schema, list(
+            run_tasks(range(len(tasks)), segments.pool)))
 
     def run_partition(batches: Iterator[pa.RecordBatch]
                       ) -> Iterator[pa.RecordBatch]:

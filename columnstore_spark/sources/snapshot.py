@@ -18,15 +18,22 @@ which the decode stage reads with pyarrow itself — in the driver, or
 in its tasks (no JVM scan, no shuffle); `segments` gives the same rows
 as a DataFrame.
 
+A snapshot's answers are as fixed as its commit, so it keeps the
+probe queries' answers decoded in the driver (`answers`, an
+`AnswerMemo`): the facade serves a repeated probe from there
+(`TranscriptColumnStore._probe`).
+
 The parquet backend memoizes one snapshot per committed state
 (`Warehouse.snapshot`); the Iceberg backend builds one per call from
 the table read (no test covers that path: the suite runs without an
-Iceberg runtime jar).
+Iceberg runtime jar), so nothing its memo holds is ever asked again.
 """
 
 from __future__ import annotations
 
+import collections
 import json
+import threading
 from collections import defaultdict
 from functools import cached_property
 from typing import NamedTuple
@@ -41,12 +48,32 @@ from pyspark.sql import types as T
 from pyspark.sql.pandas.types import from_arrow_schema
 
 from ..operators.arrow_io import (READ_COLS, FilePool, PinnedRead,
-                                  arrow_schema_for, overlaps)
+                                  arrow_schema_for, local_frame, overlaps)
 from ..plans.pruning import _ISIN_CAP, keep_ids, manifest_rows
 
 _SPARK_ROW_METADATA = b"org.apache.spark.sql.parquet.row.metadata"
 _KEY_TYPES = {"rowgroup_id": "long", "column": "string",
               "run_id": "string", "attempt_id": "string"}
+
+# Bound of one snapshot's `AnswerMemo`, in the bytes charged for its
+# entries: each answer is charged the manifest raw_bytes of the pinned
+# read it was decoded from, which bounds the rows its local relation
+# holds (a gather keeps only the matching ones). A memoized answer is
+# one the driver decoded, so no entry is charged more than
+# `decode._DRIVER_READ_BYTES` (4 MiB). The `serve` stream of 60 Zipf
+# point lookups holds 29-35 distinct probes; on seeds 1 and 2 their
+# answers were charged 21 and 26 MiB (0.7-0.8 MiB a present key).
+# 64 MiB keeps such a stream with room to spare, or sixteen reads at
+# the driver budget, next to the 2 GiB JVM heap the benchmark gives
+# the driver; it is also the bound of the file pool
+# (`arrow_io._POOL_BYTES`). The memo lives only as long as its commit,
+# so the bound caps what one commit's repeats can hold.
+_MEMO_BYTES = 64 << 20
+# Least charge of one entry: an answer that read nothing (an absent
+# key, every rowgroup pruned) still holds its plan in the JVM, and a
+# stream of distinct absent keys must not grow the memo without bound.
+# The floor caps the memo at 1,024 entries.
+_MEMO_MIN_BYTES = 64 << 10
 
 
 class SegmentFile(NamedTuple):
@@ -133,10 +160,54 @@ def _live(raw: pa.Table) -> pa.Table:
     return t.filter(pc.equal(t["status"], "done"))
 
 
+class AnswerMemo:
+    """Probe answers of one commit, least recently used first: key ->
+    the `DataFrame` a probe returned, charged the bytes given to `put`
+    (at least `_MEMO_MIN_BYTES`). Entries are evicted past
+    `_MEMO_BYTES`; one charged more is not kept."""
+
+    def __init__(self) -> None:
+        self._frames: collections.OrderedDict = collections.OrderedDict()
+        self._lock = threading.Lock()
+        self.nbytes = 0
+
+    def __len__(self) -> int:
+        return len(self._frames)
+
+    def get(self, key) -> DataFrame | None:
+        with self._lock:
+            hit = self._frames.get(key)
+            if hit is None:
+                return None
+            self._frames.move_to_end(key)
+            return hit[0]
+
+    def put(self, key, frame: DataFrame, nbytes: int) -> None:
+        charge = max(nbytes, _MEMO_MIN_BYTES)
+        if charge > _MEMO_BYTES:
+            return
+        with self._lock:
+            old = self._frames.pop(key, None)
+            if old is not None:
+                self.nbytes -= old[1]
+            self._frames[key] = (frame, charge)
+            self.nbytes += charge
+            while self.nbytes > _MEMO_BYTES:
+                _key, (_frame, c) = self._frames.popitem(last=False)
+                self.nbytes -= c
+
+
 class ManifestSnapshot:
     """One commit's manifest in the driver. `raw` is the append-only
     history; `files` the pinned segment files (None on Iceberg, whose
-    table read pins its own snapshot)."""
+    table read pins its own snapshot).
+
+    `answers` memoizes the probe answers decoded in the driver from
+    this commit. It lives exactly as long as the snapshot: the
+    warehouse builds a new snapshot, with an empty memo, once any
+    store object or process commits. A memoized answer is the very
+    `DataFrame` the first probe returned, so repeating the probe
+    returns that same object."""
 
     def __init__(self, raw: pa.Table, files: list[SegmentFile] | None):
         if "attempt_id" in raw.column_names:
@@ -157,6 +228,7 @@ class ManifestSnapshot:
         self.live = _live(self.raw)
         self.files = files
         self._segment_schema: T.StructType | None = None
+        self.answers = AnswerMemo()
 
     # -- metadata views -----------------------------------------------------
 
@@ -288,7 +360,7 @@ class ManifestSnapshot:
                      if f.n_rows and overlaps(ids, f.rowgroups)
                      and self._attempt(f) in live]
             if not paths:
-                return spark.createDataFrame([], schema)
+                return local_frame(spark, schema)
             segs = spark.read.schema(schema).parquet(*paths)
         if not keys:
             return segs.where(F.lit(False))

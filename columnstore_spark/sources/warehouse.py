@@ -63,7 +63,13 @@ class Warehouse:
     footers of the segment files the snapshot pins and a `FilePool` of
     those files' contents, which the small reads the decode stage runs
     in the driver take their files from (`pinned_read`). A new
-    snapshot drops the footers and pooled files it no longer pins."""
+    snapshot drops the footers and pooled files it no longer pins.
+
+    The snapshot also carries the memo of probe answers decoded from
+    its commit (`ManifestSnapshot.answers`). A commit by any store
+    object or process changes `token`, so the next `snapshot` call
+    builds a new snapshot and the old answers go with the old one;
+    until then a repeated probe returns the same frame object."""
 
     def __init__(self, root: str, format: str = "auto"):
         self.root = root.rstrip("/")

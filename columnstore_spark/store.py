@@ -27,9 +27,11 @@ same root see the same store.
 
 from __future__ import annotations
 
+import datetime as dt
 import json
 import os
 import shutil
+from decimal import Decimal
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -42,7 +44,9 @@ from .operators import (
     decode_matching_range,
     decode_window,
 )
-from .operators.decode import decode_matching_pred, decode_with_rowgroup
+from .operators.arrow_io import local_frame
+from .operators.decode import (decode_matching_pred, decode_with_rowgroup,
+                               decoded_in_driver)
 from .plans.predicates import (
     _dedup_probes,
     _exact_pred_cond,
@@ -75,6 +79,32 @@ def _inner_columns(columns: list[str] | None,
 def _norm_preds(items) -> list[tuple]:
     """(column, probe) pairs -> normalized (column, kind, payload)."""
     return [_norm_one_pred(c, p, "")[:3] for c, p in items]
+
+
+# probe value types whose `repr` names the value exactly; a probe
+# holding any other type is not memoized
+_MEMO_TYPES = frozenset({type(None), bool, int, float, str, bytes, Decimal,
+                         dt.date, dt.datetime})
+
+
+def _memo_key(preds, any_mode: bool, columns) -> tuple | None:
+    """Key of a probe's answer in the snapshot's memo, or None when a
+    probe value is of a type not in `_MEMO_TYPES`. Type-exact: every
+    value is keyed by its type and `repr`, so probes Python hashes
+    equal (1, 1.0, True, Decimal('1'); 0.0 and -0.0) never share an
+    entry — Spark may answer them differently (`turn_idx = true` fails
+    to resolve where `turn_idx = 1` matches)."""
+    def exact(v):
+        if type(v) in (list, tuple):
+            parts = tuple(exact(x) for x in v)
+            return None if None in parts else (type(v), parts)
+        return (type(v), repr(v)) if type(v) in _MEMO_TYPES else None
+
+    payloads = [exact(p) for _c, _k, p in preds]
+    if None in payloads:
+        return None
+    return (any_mode, None if columns is None else tuple(columns),
+            tuple((c, k, p) for (c, k, _p), p in zip(preds, payloads)))
 
 
 def _prefix_upper(prefix: str) -> str | None:
@@ -1580,13 +1610,14 @@ class TranscriptColumnStore:
         IN-list): an empty frame with the result schema — under
         pending evolution the EFFECTIVE one (drops away, adds present,
         unknown names raise), so it unions with any non-empty result.
-        Nothing is read: the frame is built from the schema alone."""
+        Nothing is read: the frame is a local relation built from the
+        schema alone."""
         if self._schema_log():
             self._needs_fallback(m, *probe_cols, *(columns or []))
             # the types `solid_rows` decodes to: physical columns keep
             # their stored type, unphysical adds take the logged one
             stored = {f.name: f for f in m.decode_schema.fields}
-            out = self.spark.createDataFrame([], T.StructType(
+            out = local_frame(self.spark, T.StructType(
                 [stored.get(f.name, f) for f in self.schema().fields]))
         else:
             out = decode(self.warehouse.pinned_read(self.spark, m, []),
@@ -1616,8 +1647,20 @@ class TranscriptColumnStore:
         within the stage's driver budget (a point or IN lookup) is
         read and decoded in the driver while this plan is built —
         eagerly, from this plan's commit — so the returned frame is a
-        local relation whose `collect()` runs no Spark job; a larger
-        one runs as one mapInArrow stage when forced."""
+        local relation whose `collect()` starts no Python worker; a
+        larger one runs as one mapInArrow stage when forced.
+
+        An answer decoded in the driver is memoized on the snapshot
+        (`ManifestSnapshot.answers`), keyed type-exactly by `preds`,
+        `any_mode` and `columns`: the same probe on the same commit
+        returns the SAME frame object, found once the keep-set and the
+        read's placement are known — no segment read, no
+        createDataFrame, no re-filter, and its plan is already
+        optimized. The memo dies with its commit (any store object's
+        commit, or another process's, makes a new snapshot). It is
+        neither read nor filled with `include_pending`, under a
+        pending schema-log entry, or for a read placed as a stage
+        (which includes every Iceberg read)."""
         m = self._manifest_or_raise()
         cols = [c for c, _k, _p in preds]
         fallback = self._needs_fallback(m, *cols, *(columns or []))
@@ -1643,6 +1686,13 @@ class TranscriptColumnStore:
             ids = set.intersection(*known) if known else None
         segs = self.warehouse.pinned_read(self.spark, m, ids)
         inner = _inner_columns(columns, *cols)
+        key = None
+        if (not include_pending and not self._schema_log()
+                and decoded_in_driver(segs, inner)):
+            key = _memo_key(preds, any_mode, columns)
+            hit = None if key is None else m.answers.get(key)
+            if hit is not None:
+                return hit
         # the most selective kernel-safe predicate drives the gather
         order = sorted(range(len(norm)), key=lambda i: (
             float("inf") if keep[i] is None else len(keep[i])))
@@ -1654,8 +1704,12 @@ class TranscriptColumnStore:
         else:
             out = decode_matching_pred(segs, best, inner, m.decode_schema)
         cond = _exact_pred_cond(norm, any_mode)
-        return self._finish_query(out.where(cond), cond, columns,
-                                  include_pending)
+        out = self._finish_query(out.where(cond), cond, columns,
+                                 include_pending)
+        if key is not None:
+            read = segs if inner is None else segs.project(inner)
+            m.answers.put(key, out, read.raw_bytes)
+        return out
 
     def query_by_value(self, column: str, value,
                        columns: list[str] | None = None,

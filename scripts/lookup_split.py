@@ -19,7 +19,13 @@ in one process on one store:
   other            the rest of the lookup's wall time
 
 It prints the mean ms per lookup of each step and its share of the
-lookup, then the median plan (the `query_by_value` call) and total.
+lookup. Then, since a repeated probe on an unchanged commit is served
+from the snapshot's answer memo, it splits the lookups into first-time
+(a present key not looked up before in the run, warm-up included),
+repeated (a present key looked up before) and absent ones, and prints
+the median plan (the `query_by_value` call) and total of each, the
+memo hit ratio, and how many `read_task` and `createDataFrame` calls
+the hits made (a hit makes none).
 
 Usage: python scripts/lookup_split.py [--seed 1] [--lookups 60]
 """
@@ -34,6 +40,7 @@ import os
 import statistics
 import sys
 import time
+from typing import NamedTuple
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(
     os.path.abspath(__file__))))
@@ -47,10 +54,12 @@ ABSENT_EVERY = 10  # every tenth lookup is for an absent key
 
 
 class Split:
-    """Wall time per step label, summed over the timed lookups."""
+    """Wall time and call count per step label, summed over the timed
+    lookups."""
 
     def __init__(self) -> None:
         self.ms: dict[str, float] = collections.defaultdict(float)
+        self.calls: collections.Counter = collections.Counter()
         self.on = False
 
     def wrap(self, owner, name: str, label) -> None:
@@ -67,6 +76,7 @@ class Split:
                 if self.on:
                     lbl = label(*a, **k) if callable(label) else label
                     self.ms[lbl] += (time.perf_counter() - t0) * 1e3
+                    self.calls[lbl] += 1
 
         setattr(owner, name, timed)
 
@@ -105,11 +115,42 @@ def lookup_keys(store, seed: int, n: int) -> list[str]:
     return out
 
 
-def run(store, keys: list[str], split: Split) -> tuple[list, list]:
-    """(plan ms, total ms) per timed lookup; the first WARM untimed."""
-    plans, totals = [], []
+class Lookup(NamedTuple):
+    kind: str       # first / repeated / absent
+    plan_ms: float
+    total_ms: float
+    hit: bool       # served from the snapshot's answer memo
+    reads: int      # read_task calls
+    frames: int     # createDataFrame calls
+
+
+def watch_memo(hits: list) -> None:
+    """Append each answer-memo lookup's outcome (hit or not) to
+    `hits`."""
+    from columnstore_spark.sources.snapshot import AnswerMemo
+
+    real = AnswerMemo.get
+
+    @functools.wraps(real)
+    def get(self, key):
+        out = real(self, key)
+        hits.append(out is not None)
+        return out
+
+    AnswerMemo.get = get
+
+
+def run(store, keys: list[str], split: Split) -> list[Lookup]:
+    """One `Lookup` per timed lookup; the first WARM run untimed."""
+    present = {r[0] for r in store.rows(["conv_id"]).distinct().collect()}
+    seen: set = set()
+    hits: list[bool] = []
+    watch_memo(hits)
+    out = []
     for i, k in enumerate(keys):
         split.on = i >= WARM
+        before = dict(split.calls)
+        del hits[:]
         t0 = time.perf_counter()
         df = store.query_by_value("conv_id", k)
         t1 = time.perf_counter()
@@ -117,22 +158,40 @@ def run(store, keys: list[str], split: Split) -> tuple[list, list]:
         t2 = time.perf_counter()
         if split.on:
             split.ms["toArrow"] += (t2 - t1) * 1e3
-            plans.append((t1 - t0) * 1e3)
-            totals.append((t2 - t0) * 1e3)
+            kind = ("absent" if k not in present
+                    else "repeated" if k in seen else "first")
+            out.append(Lookup(
+                kind, (t1 - t0) * 1e3, (t2 - t0) * 1e3, any(hits),
+                split.calls["read"] - before.get("read", 0),
+                split.calls["createDataFrame"]
+                - before.get("createDataFrame", 0)))
+        seen.add(k)
     split.on = False
-    return plans, totals
+    return out
 
 
-def report(split: Split, plans: list, totals: list) -> None:
-    n = len(totals)
-    total = sum(totals)
+def report(split: Split, lookups: list[Lookup], memo) -> None:
+    n = len(lookups)
+    total = sum(lk.total_ms for lk in lookups)
     steps = dict(split.ms)
     steps["other"] = total - sum(steps.values())
     print(f"per-step wall time of {n} point lookups (mean ms per lookup)")
     for name, ms in sorted(steps.items(), key=lambda kv: -kv[1]):
         print(f"  {name:20s} {ms / n:8.2f}  {100 * ms / total:5.1f}%")
-    print(f"\nplan (query_by_value)  p50 {statistics.median(plans):7.1f} ms")
-    print(f"lookup (plan+toArrow)  p50 {statistics.median(totals):7.1f} ms")
+    print(f"\n{'lookups':10s} {'n':>4s} {'plan p50':>9s} {'total p50':>10s}"
+          "  (ms)")
+    for kind in ("first", "repeated", "absent", "all"):
+        ls = [lk for lk in lookups if kind in (lk.kind, "all")]
+        if ls:
+            print(f"{kind:10s} {len(ls):4d} "
+                  f"{statistics.median(lk.plan_ms for lk in ls):9.1f} "
+                  f"{statistics.median(lk.total_ms for lk in ls):10.1f}")
+    hit = [lk for lk in lookups if lk.hit]
+    print(f"\nanswer memo hits {len(hit)} of {n} ({len(hit) / n:.2f}); "
+          f"in them read_task {sum(lk.reads for lk in hit)} calls, "
+          f"createDataFrame {sum(lk.frames for lk in hit)} calls")
+    print(f"answer memo at the end: {len(memo)} answers, "
+          f"{memo.nbytes / 2**20:.1f} MiB charged")
 
 
 def main() -> None:
@@ -148,7 +207,8 @@ def main() -> None:
         split = Split()
         instrument(spark, split)
         keys = lookup_keys(store, args.seed, WARM + args.lookups)
-        report(split, *run(store, keys, split))
+        report(split, run(store, keys, split),
+               store.warehouse.snapshot(spark).answers)
     finally:
         runtime.stop_spark(spark)
         work.remove()

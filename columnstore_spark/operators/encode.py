@@ -23,6 +23,7 @@ so a zipf-head conversation cannot create a straggler partition.
 
 from __future__ import annotations
 
+import itertools
 import time
 from collections.abc import Iterator
 
@@ -169,6 +170,20 @@ def _encode_rowgroup(rowgroup_id: int, tbl: pa.Table,
         schema=out_pa_schema)
 
 
+def _order_cols(df: DataFrame, order) -> list:
+    """Check every column of `df` is encodable and return the sort keys
+    within a rowgroup. `order` entries may be Column expressions
+    (F.desc(...), arbitrary sort expressions) — the per-column
+    custom-comparer analogue of the reference's
+    `[ColumnStoreProperty(typeof(ReverseComparer<>))]`
+    (`ColumnStorePropertyAttribute.cs:15-23`, demo
+    `Outcompute.TestApp/Program.cs:124,131-137`); string entries are
+    plain column names and are dropped when absent from the frame."""
+    for f in df.schema.fields:
+        pa_type_for(f.dataType)
+    return [c for c in order if isinstance(c, Column) or c in df.columns]
+
+
 def encode(df: DataFrame, rowgroup_expr: Column | None = None,
            num_rowgroups: int | None = None,
            rows_per_segment: int = 1_000_000,
@@ -216,16 +231,7 @@ def encode(df: DataFrame, rowgroup_expr: Column | None = None,
                                               rows_per_segment,
                                               columns=df.columns)
 
-    for f in df.schema.fields:
-        pa_type_for(f.dataType)
-    # `order` entries may be Column expressions (F.desc(...), arbitrary
-    # sort expressions) — the per-column custom-comparer analogue of the
-    # reference's `[ColumnStoreProperty(typeof(ReverseComparer<>))]`
-    # (`ColumnStorePropertyAttribute.cs:15-23`, demo
-    # `Outcompute.TestApp/Program.cs:124,131-137`); string entries are
-    # plain column names and are dropped when absent from the frame
-    order_cols = [c for c in order
-                  if isinstance(c, Column) or c in df.columns]
+    order_cols = _order_cols(df, order)
     col_order = list(df.columns)
     if num_partitions is None:
         num_partitions = int(df.sparkSession.conf.get(
@@ -249,6 +255,36 @@ def encode(df: DataFrame, rowgroup_expr: Column | None = None,
     # while keeping the bit-identical verify order restorable
     work = work.sortWithinPartitions(ROWGROUP_COL, *order_cols)
     return work.mapInArrow(encode_partition, SEGMENT_SCHEMA)
+
+
+def encode_in_driver(df: DataFrame, rowgroup_expr: Column,
+                     order: tuple[str | Column, ...] = ("conv_id",
+                                                       "turn_idx"),
+                     mode: str = chooser.MODE_SIZE,
+                     bloom_columns: tuple[str, ...] = (),
+                     max_rowgroups: int | None = None) -> pa.Table:
+    """`encode` run in the driver, for a write small enough that one
+    Python stage would cost more than the encode: one JVM-only job
+    collects the rows, sorted as the stage sorts them, and the driver
+    encodes them with the stage's kernel (`_encode_rowgroup`). The
+    segments are byte-identical to `encode`'s whenever `order` orders
+    the rows of a rowgroup totally (ties reach the kernel in input
+    order, which the stage's shuffle and this collect may differ on).
+    Returns the segment rows as an Arrow table of SEGMENT_SCHEMA, of
+    only the first `max_rowgroups` rowgroup ids when given (ascending);
+    no row for an empty frame."""
+    order_cols = _order_cols(df, order)
+    col_order = list(df.columns)
+    out_pa_schema = arrow_schema_for(SEGMENT_SCHEMA)
+    rows = (df.withColumn(ROWGROUP_COL, rowgroup_expr.cast("long"))
+            .coalesce(1).sortWithinPartitions(ROWGROUP_COL, *order_cols)
+            .toArrow())
+    groups = itertools.islice(iter_groups(rows.to_batches(), ROWGROUP_COL),
+                              max_rowgroups)
+    return pa.Table.from_batches(
+        [_encode_rowgroup(rg, tbl, col_order, mode, False, out_pa_schema,
+                          frozenset(bloom_columns)) for rg, tbl in groups],
+        out_pa_schema)
 
 
 def _ingest_type(t: pa.DataType) -> pa.DataType:

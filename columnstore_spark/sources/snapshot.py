@@ -291,6 +291,16 @@ class ManifestSnapshot:
         """Keep-set of one normalized predicate; None = unprunable."""
         return keep_ids(self.rows, column, kind, payload, logical_type)
 
+    def live_rows(self, rowgroups) -> pa.Table:
+        """The live manifest rows of `rowgroups`."""
+        return _of_rowgroups(self.live, rowgroups)
+
+    def rowgroup_bytes(self, rowgroups) -> int:
+        """Manifest raw_bytes of the live segments of `rowgroups`: the
+        decoded size of those rowgroups."""
+        ids = set(rowgroups)
+        return sum(n for (rg, _col), n in self._sizes.items() if rg in ids)
+
     # -- Spark views --------------------------------------------------------
 
     def frame(self, spark: SparkSession, raw: bool = False,
@@ -299,8 +309,7 @@ class ManifestSnapshot:
         snapshot — no file read — optionally only `rowgroups`' rows."""
         tbl = self.raw if raw else self.live
         if rowgroups is not None:
-            tbl = tbl.filter(pc.is_in(tbl["rowgroup_id"],
-                                      pa.array(list(rowgroups), pa.int64())))
+            tbl = _of_rowgroups(tbl, rowgroups)
         if not tbl.num_rows:
             # a filter that keeps no row leaves chunk-less columns,
             # which createDataFrame rejects
@@ -400,6 +409,11 @@ class ManifestSnapshot:
         if f.attempt is None or self.has_attempt:
             return f.attempt
         return (f.attempt[0], "")
+
+
+def _of_rowgroups(tbl: pa.Table, rowgroups) -> pa.Table:
+    return tbl.filter(pc.is_in(tbl["rowgroup_id"],
+                               pa.array(list(rowgroups), pa.int64())))
 
 
 def _key_rows(tbl: pa.Table):

@@ -20,7 +20,10 @@ both backends share one consistency argument).
 
 from __future__ import annotations
 
+import contextlib
 import hashlib
+import os
+import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -48,30 +51,6 @@ class ParquetBackend:
         self.segments_path = f"{self.root}/segments"
         self.manifest_path = f"{self.root}/manifest"
 
-    # mergeSchema: a warehouse written across engine versions may mix
-    # files with and without later additive nullable columns (e.g. the
-    # bloom words); without it Spark picks one file's schema
-    # nondeterministically. Footer-merge cost is trivial at warehouse
-    # file counts (one file per commit attempt).
-    def read_segments(self, spark: SparkSession) -> DataFrame:
-        return spark.read.option("mergeSchema", "true").parquet(
-            self.segments_path)
-
-    def read_manifest(self, spark: SparkSession) -> DataFrame | None:
-        from pyspark.errors import AnalysisException
-        try:
-            return spark.read.option("mergeSchema", "true").parquet(
-                self.manifest_path)
-        except AnalysisException as e:
-            # only "no manifest yet" maps to None; a corrupt or
-            # unreadable manifest must SURFACE — silently treating it
-            # as empty would re-encode every rowgroup under a new
-            # run_id and serve raw deltas as if nothing was committed
-            if ("PATH_NOT_FOUND" in str(e)
-                    or "Path does not exist" in str(e)):
-                return None
-            raise
-
     def manifest_files(self) -> list[str] | None:
         """The manifest's data files (what Spark's file index would
         list: hidden `.`/`_` names skipped), or None before the first
@@ -94,40 +73,79 @@ class ParquetBackend:
         return pa.concat_tables(tables, promote_options="permissive")
 
     def append_segments(self, df: DataFrame) -> None:
+        """Spark-placed segments: one part file per task, appended."""
         df.write.mode("append").parquet(self.segments_path)
 
-    def append_manifest(self, df: DataFrame) -> None:
-        """Atomic manifest append: the manifest IS the commit point of
-        every write protocol, and a plain multi-file Spark append can
-        tear mid-job-commit (a crash leaves a SUBSET of part files
-        visible) — for a replace_rowgroups commit that could expose
-        retire tombstones without their replacement rows (rows vanish)
-        or the reverse (rows double-counted). Manifest rows are
-        metadata-only (payload dropped), so one file per commit is the
-        right shape at any scale: stage a single part file under a
-        hidden dir (invisible to Spark's file index), then os.rename
-        it into the manifest dir — rename is atomic on a filesystem,
-        mirroring the Iceberg backend's snapshot commit."""
-        import glob
-        import os
-        import shutil
-        import uuid
+    def append_segment_table(self, table) -> None:
+        """Driver-placed segments: one file, written with pyarrow to a
+        hidden staging name and renamed into the segments dir."""
+        _write_staged(table, self.segments_path, "part")
 
-        tag = uuid.uuid4().hex
-        tmp = f"{self.manifest_path}/.staging-{tag}"
-        df.coalesce(1).write.mode("overwrite").parquet(tmp)
-        # glob.escape: a warehouse root containing glob metachars
-        # ([, ], *, ?) must not turn the staging path into a pattern
-        parts = glob.glob(f"{glob.escape(tmp)}/part-*.parquet")
-        if len(parts) != 1:  # pragma: no cover - coalesce(1) guarantees
-            raise RuntimeError(
-                f"manifest staging wrote {len(parts)} files, expected 1")
-        os.rename(parts[0], f"{self.manifest_path}/commit-{tag}.parquet")
-        shutil.rmtree(tmp, ignore_errors=True)
+    def append_manifest(self, table) -> None:
+        """The commit point of every parquet write: this attempt's
+        manifest rows (a pyarrow Table; payload-free, so one file per
+        commit at any scale), written with pyarrow to a hidden staging
+        file in the manifest dir and `os.rename`d to `commit-<tag>` —
+        atomic on a filesystem, so a crash leaves either no new
+        manifest rows or all of them (never retire tombstones without
+        their replacement rows, or the reverse). It mirrors the
+        Iceberg backend's snapshot commit. A crash before the rename
+        leaves only the staging file, which no reader lists and
+        `Warehouse.vacuum_orphan_segments` removes."""
+        _write_staged(table, self.manifest_path, "commit")
+
+    def remove_staging(self) -> list[str]:
+        """Delete the staging debris of writes that crashed before their
+        rename: hidden `.staging-*` files (and the staging dirs of the
+        Spark manifest writes of older versions) in the segments and
+        manifest dirs. Single-writer contract: a write in flight owns
+        its staging file until it renames it."""
+        import shutil
+        removed = []
+        for d in (self.segments_path, self.manifest_path):
+            try:
+                names = os.listdir(d)
+            except FileNotFoundError:
+                continue
+            for n in sorted(names):
+                if not n.startswith(STAGING_PREFIX):
+                    continue
+                p = os.path.join(d, n)
+                if os.path.isdir(p):
+                    shutil.rmtree(p, ignore_errors=True)
+                else:
+                    with contextlib.suppress(FileNotFoundError):
+                        os.remove(p)
+                removed.append(p)
+        return removed
+
+
+# hidden: Spark's file index and `data_files` skip names starting "."
+STAGING_PREFIX = ".staging-"
+# the columns whose parquet statistics a reader uses: `read_footer`'s
+# rowgroup range and commit attempt, and the key filters Spark pushes
+# into a segments scan. No other column gets statistics (a manifest or
+# segment file is then no larger than Spark writes it).
+_STAT_COLS = ("rowgroup_id", "column", "run_id", "attempt_id")
+
+
+def _write_staged(table, directory: str, kind: str) -> None:
+    """Write the pyarrow `table` as `<directory>/<kind>-<tag>.parquet`:
+    first to a hidden staging name in `directory`, then `os.rename`
+    into place, so a reader lists the whole file or nothing."""
+    import pyarrow.parquet as pq
+
+    tag = uuid.uuid4().hex
+    os.makedirs(directory, exist_ok=True)
+    tmp = os.path.join(directory, f"{STAGING_PREFIX}{tag}.parquet")
+    final = os.path.join(directory, f"{kind}-{tag}.parquet")
+    pq.write_table(table, tmp, compression="snappy", store_schema=False,
+                   write_statistics=[c for c in _STAT_COLS
+                                     if c in table.column_names])
+    os.rename(tmp, final)
 
 
 def data_files(path: str) -> list[str] | None:
-    import os
     try:
         names = os.listdir(path)
     except FileNotFoundError:

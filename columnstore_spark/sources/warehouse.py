@@ -7,16 +7,45 @@ backend), parquet directories otherwise — same table shapes either way:
     segments   SEGMENT_SCHEMA columns + run_id              (the data)
     manifest   same minus payload + status, committed_at    (lineage)
 
-Commit protocol: segments parquet is written first, the manifest rows
-(status='done') are appended only after that write succeeds — the
-manifest IS the commit record. Readers keep only the segment rows whose
-(rowgroup_id, column, run_id, attempt_id) the manifest commits (via the
-driver-side snapshot, `snapshot.py`), so torn segment writes are
-invisible. `attempt_id` is unique per encode_resumable INVOCATION:
-callers may (and do — streaming batch replay, the facade's close
-retry) reuse a logical `run_id` after a crash, and without the attempt
-key the retry's segments would share their join key with the torn
-first attempt's rows, surfacing duplicates.
+Commit protocol: an attempt's segments are written first; the manifest
+rows (status='done', one per segment, payload dropped) are appended only
+after that write succeeds — the manifest IS the commit record. Readers
+keep only the segment rows whose (rowgroup_id, column, run_id,
+attempt_id) the manifest commits (via the driver-side snapshot,
+`snapshot.py`), so torn segment writes are invisible. `attempt_id` is
+unique per encode_resumable INVOCATION: callers may (and do — streaming
+batch replay, the facade's close retry) reuse a logical `run_id` after a
+crash, and without the attempt key the retry's segments would share
+their join key with the torn first attempt's rows, surfacing
+duplicates.
+
+On the parquet backend the driver commits every write: it builds the
+attempt's manifest rows as an Arrow table and
+`ParquetBackend.append_manifest` writes them with pyarrow to a hidden
+staging file and renames it into the manifest dir — one file, one
+atomic rename, no Spark job. Where the segments are encoded depends on
+the write's size, known from metadata before any job runs:
+
+- a small write (a close of a delta batch, or a rowgroup rewrite, of at
+  most `operators.decode._DRIVER_WRITE_BYTES` input bytes) is encoded in
+  the driver: one JVM-only job collects its rows sorted as the encode
+  stage sorts them, the stage's kernel encodes them
+  (`operators.encode.encode_in_driver`, byte-identical segments), and
+  one segment file is written with pyarrow to a hidden staging name and
+  renamed into `segments/`. The manifest rows come from that table;
+- a larger write, or one of unknown size (upsert's incoming frame, a
+  rebuild, a streaming batch), runs the Spark encode stage and appends
+  its part files; the manifest rows are the non-payload columns of this
+  attempt's new files (those not listed before the append), read with
+  pyarrow.
+
+The Iceberg backend keeps a DataFrame commit: the manifest rows are read
+back from the segments table and appended with `writeTo`.
+
+Either way a crash leaves the last committed state readable: the debris
+of a crashed attempt (segment files it renamed or appended, staging
+files it never renamed) is invisible and `vacuum_orphan_segments`
+removes it.
 
 The manifest doubles as the engine's work queue, the distributed analogue
 of the reference's closed-group queue `DeltaStore.TryTakeClosed`
@@ -28,20 +57,50 @@ the missing partitions, producing byte-identical final segments
 
 from __future__ import annotations
 
+import dataclasses
+import functools
 import os
 import time
 import uuid
 
+import pyarrow as pa
 import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..codecs import chooser
-from ..operators.arrow_io import FilePool
-from ..operators.encode import default_rowgroup_expr, encode, encode_files
+from ..operators.arrow_io import FilePool, arrow_schema_for
+from ..operators.encode import (SEGMENT_SCHEMA, default_rowgroup_expr, encode,
+                                encode_files, encode_in_driver)
 from ..plans.pruning import _ISIN_CAP
 from .snapshot import ManifestSnapshot, SegmentFile, read_footer
 from .storage import ParquetBackend, resolve_backend
+
+_KEY_FIELDS = [T.StructField("run_id", T.StringType(), False),
+               T.StructField("attempt_id", T.StringType(), False)]
+
+
+# built on first use: converting a Spark schema imports pandas, which
+# importing this module must not pay for
+@functools.cache
+def _segment_rows() -> pa.Schema:
+    """A segment file's rows: the encoded segments and their commit
+    attempt."""
+    return arrow_schema_for(T.StructType(SEGMENT_SCHEMA.fields
+                                         + _KEY_FIELDS))
+
+
+@functools.cache
+def _manifest_schema() -> pa.Schema:
+    """A manifest commit's rows, every field nullable (tombstones carry
+    the live rows of stores written before a column existed)."""
+    return arrow_schema_for(T.StructType([
+        T.StructField(f.name, f.dataType, True)
+        for f in [*SEGMENT_SCHEMA.fields, *_KEY_FIELDS,
+                  T.StructField("status", T.StringType()),
+                  T.StructField("committed_at", T.StringType())]
+        if f.name != "payload"]))
 
 
 def in_rowgroups(df: DataFrame, ids, keep: bool = True) -> DataFrame:
@@ -182,7 +241,7 @@ class Warehouse:
         return snap.segments(spark, self.backend(spark), rowgroups)
 
     def pinned_read(self, spark: SparkSession, snapshot: ManifestSnapshot,
-                    rowgroups=None):
+                    rowgroups=None, rewrite: bool = False):
         """The committed segments of `snapshot` restricted to
         `rowgroups` (None = every live one) as the decode operators'
         input: a `PinnedRead` they read with pyarrow, in the driver
@@ -190,10 +249,17 @@ class Warehouse:
         on the Iceberg backend (no pinned file list), the
         `committed_segments` DataFrame. A driver read takes its files
         from this warehouse's pool, so a file is read from disk at most
-        once while the current snapshot pins it."""
+        once while the current snapshot pins it.
+
+        `rewrite`: the rows are the victims of a rowgroup rewrite, so
+        they are decoded in the driver whenever the rewrite is encoded
+        there (`_in_driver`), whatever the read budget says."""
         if snapshot.files is None:
             return self.committed_segments(spark, snapshot, rowgroups)
-        return snapshot.pinned(spark, rowgroups, pool=self._pool)
+        read = snapshot.pinned(spark, rowgroups, pool=self._pool)
+        if rewrite and self._in_driver(spark, read.raw_bytes):
+            read = dataclasses.replace(read, in_driver=True)
+        return read
 
     def done_rowgroups(self, spark: SparkSession) -> DataFrame | None:
         ids = self._done_ids(spark)
@@ -258,9 +324,19 @@ class Warehouse:
                          rowgroup_offset: int = 0,
                          bloom_columns: tuple[str, ...] = (),
                          rowgroup_expr=None,
-                         order: tuple | None = None) -> dict:
+                         order: tuple | None = None,
+                         input_bytes: int | None = None) -> dict:
         """Encode `df` into the warehouse, skipping rowgroups already
-        committed by earlier runs.
+        committed by earlier runs — the delta->solid step, committed
+        from the driver (see the module docstring).
+
+        `input_bytes` is `df`'s size as metadata gives it before any
+        job (the facade's close: the delta batch's parquet footers);
+        None when unknown. A write of at most `_DRIVER_WRITE_BYTES` is
+        encoded in the driver (`_in_driver`): one collect job, the
+        encode kernel in the driver, one segment file, then the
+        commit. An empty collect commits nothing. Any other write runs
+        the Spark encode stage after an `isEmpty` check.
 
         `fail_after_rowgroups` is the FIXTURES.md F5 failure-injection
         hook: only the first k pending rowgroups are committed, simulating
@@ -286,30 +362,42 @@ class Warehouse:
         if rowgroup_offset:
             rg_expr = rg_expr + F.lit(int(rowgroup_offset))
         work = self._without_done(spark, df.withColumn("__rg", rg_expr))
+        backend = self.backend(spark)
+        okw = {} if order is None else {"order": order}
+        # unique per INVOCATION: a crashed attempt's torn segment rows
+        # must never share a manifest join key with this retry's rows,
+        # even when the caller replays the same logical run_id
+        attempt = uuid.uuid4().hex[:12]
+
+        if self._in_driver(spark, input_bytes):
+            # an empty collect commits nothing (`_commit`)
+            segs = encode_in_driver(work.drop("__rg"), rg_expr, mode=mode,
+                                    bloom_columns=bloom_columns,
+                                    max_rowgroups=fail_after_rowgroups,
+                                    **okw)
+            return self._commit(spark, backend, segs, run_id, attempt)
 
         if fail_after_rowgroups is not None:
             keep = [r["__rg"] for r in
                     work.select("__rg").distinct()
                         .orderBy("__rg").limit(fail_after_rowgroups).collect()]
             work = work.where(F.col("__rg").isin(keep))
-
-        backend = self.backend(spark)
-        # cheap short-circuit (take(1), not a full distinct+count scan —
-        # the returned rowgroup count comes from the metadata-only
-        # manifest read-back after the commit instead)
+        # cheap short-circuit (take(1), not a full distinct+count scan)
         if work.isEmpty():
             return {"run_id": run_id, "rowgroups_encoded": 0,
                     "storage": backend.name}
-
-        # unique per INVOCATION: a crashed attempt's torn segment rows
-        # must never share a manifest join key with this retry's rows,
-        # even when the caller replays the same logical run_id
-        attempt = uuid.uuid4().hex[:12]
-        okw = {} if order is None else {"order": order}
         segs = encode(work.drop("__rg"), rowgroup_expr=rg_expr,
                       rows_per_segment=rows_per_segment, mode=mode,
                       bloom_columns=bloom_columns, **okw)
         return self._commit(spark, backend, segs, run_id, attempt)
+
+    def _in_driver(self, spark: SparkSession, nbytes: int | None) -> bool:
+        """Whether a write of `nbytes` input bytes (None: unknown) is
+        encoded in the driver: the parquet backend only (Iceberg keeps
+        its DataFrame commit), at most `_DRIVER_WRITE_BYTES`."""
+        from ..operators.decode import _DRIVER_WRITE_BYTES
+        return (isinstance(self.backend(spark), ParquetBackend)
+                and nbytes is not None and nbytes <= _DRIVER_WRITE_BYTES)
 
     def compact(self, spark: SparkSession, min_fill: float = 0.5,
                 rows_per_segment: int = 1_000_000,
@@ -330,7 +418,7 @@ class Warehouse:
         are decoded, re-encoded into new capacity-sized rowgroups
         (ids above every existing id), and committed in ONE manifest
         append that also carries a 'retired' tombstone per superseded
-        (rowgroup_id, column) — `_commit(retire=...)`. Atomic by the
+        (rowgroup_id, column) — `replace_rowgroups`. Atomic by the
         same standard as ingest: a crash before the append leaves the
         old rowgroups live and the new segments invisible. Readers
         apply tombstones via `live_manifest`; resume keeps treating
@@ -341,7 +429,8 @@ class Warehouse:
 
         The small-rowgroup set comes off the driver-side manifest
         snapshot (one row count per rowgroup); their rows decode
-        through the snapshot's pinned read.
+        through the snapshot's pinned read — in the driver when the
+        rewrite is encoded there.
         """
         from ..operators.decode import decode
 
@@ -357,7 +446,7 @@ class Warehouse:
                        if n < thresh)
         if len(small) < 2:
             return empty
-        rows = decode(self.pinned_read(spark, snap, small),
+        rows = decode(self.pinned_read(spark, snap, small, rewrite=True),
                       schema=snap.decode_schema)
         return self.replace_rowgroups(
             spark, small, rows, rows_per_segment=rows_per_segment,
@@ -368,16 +457,26 @@ class Warehouse:
                           rows_per_segment: int = 1_000_000,
                           mode: str = chooser.MODE_SIZE,
                           run_id: str | None = None,
-                          bloom_columns: tuple[str, ...] = ()) -> dict:
+                          bloom_columns: tuple[str, ...] = (),
+                          incoming: bool = False) -> dict:
         """Atomically replace the rowgroups `victims` (a list of live
         rowgroup ids) with `rows` re-encoded into capacity-sized
         groups — the one tombstone+replace commit under compact() and
         the facade's delete_where(), delete_keys() and upsert() (all
         three through `TranscriptColumnStore._rewrite`). One manifest
         append carries both the new 'done' rows and a 'retired'
-        tombstone per superseded (rowgroup_id, column); a crash before
-        it leaves the old rowgroups live and the new segments
-        invisible.
+        tombstone per superseded (rowgroup_id, column), built from the
+        snapshot's live rows; a crash before it leaves the old
+        rowgroups live and the new segments invisible.
+
+        Placement: the write's size is its victims' manifest
+        `raw_bytes`, so one of at most `_DRIVER_WRITE_BYTES` is encoded
+        in the driver (`encode_in_driver`, one collect job) and
+        committed from there; the callers decode such victims in the
+        driver too (`pinned_read(rewrite=True)`). `incoming=True` says
+        `rows` also hold rows from outside the store (upsert's incoming
+        frame), whose size no metadata gives: the write then runs as
+        the Spark encode stage.
 
         Every victim must be live in the snapshot this commit is made
         against; otherwise RuntimeError is raised before anything is
@@ -423,38 +522,87 @@ class Warehouse:
         rg_expr = (default_rowgroup_expr(n_new, rows_per_segment,
                                          columns=rows.columns)
                    + F.lit(offset))
-        segs = encode(rows, rowgroup_expr=rg_expr,
-                      rows_per_segment=rows_per_segment, mode=mode,
-                      bloom_columns=bloom_columns)
+        if self._in_driver(spark, None if incoming
+                           else snap.rowgroup_bytes(ids)):
+            segs = encode_in_driver(rows, rg_expr, mode=mode,
+                                    bloom_columns=bloom_columns)
+        else:
+            segs = encode(rows, rowgroup_expr=rg_expr,
+                          rows_per_segment=rows_per_segment, mode=mode,
+                          bloom_columns=bloom_columns)
         # tombstones: the live manifest rows being superseded, taken
         # from the snapshot — nothing here evaluates after the commit
         # starts mutating state
-        retire = snap.frame(spark, rowgroups=ids)
         attempt = uuid.uuid4().hex[:12]
         out = self._commit(spark, backend, segs, run_id, attempt,
-                           retire=retire)
+                           retire=snap.live_rows(ids))
         out["rowgroups_retired"] = len(ids)
         return out
 
-    def _commit(self, spark: SparkSession, backend, segs: DataFrame,
-                run_id: str, attempt: str,
-                retire: DataFrame | None = None) -> dict:
-        """Write segments, then the manifest — the manifest append IS
-        the commit point (on Iceberg, additionally an atomic snapshot
-        commit); the manifest rows are a metadata-only read-back of
-        what THIS attempt wrote.
+    def _commit(self, spark: SparkSession, backend, segs, run_id: str,
+                attempt: str, retire: pa.Table | None = None) -> dict:
+        """Write this attempt's segments, then commit them: the
+        manifest append is the commit point. `segs` is the segments of
+        a driver-placed encode (an Arrow table, written as one segment
+        file) or of the Spark encode stage (a DataFrame, appended as
+        part files).
 
-        `retire` (compaction): manifest-shaped rows whose
-        (rowgroup_id, column)s this run supersedes. They are unioned
-        into the SAME manifest append as the 'done' rows, so
-        retirement commits atomically with the replacement segments —
-        a crash before the append leaves the old rowgroups live and
-        the new segments invisible (torn), never a state where rows
-        are double-counted or missing."""
+        Parquet: the manifest rows are built in the driver as an Arrow
+        table — from `segs` itself, or from the non-payload columns of
+        the attempt's new part files — and committed by
+        `ParquetBackend.append_manifest` (a pyarrow write and an
+        atomic rename); no Spark job reads anything back.
+        `rowgroups_encoded` counts their distinct 'done' rowgroup ids.
+        An attempt with no manifest row commits nothing.
+
+        `retire` (a rewrite): the snapshot's live manifest rows whose
+        (rowgroup_id, column)s this run supersedes. They become
+        'retired' tombstones in the SAME manifest append as the 'done'
+        rows, so retirement commits atomically with the replacement
+        segments — a crash before the append leaves the old rowgroups
+        live and the new segments invisible (torn), never a state
+        where rows are double-counted or missing."""
+        committed_at = time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime())
+        if not isinstance(backend, ParquetBackend):
+            return self._commit_frame(spark, backend, segs, run_id, attempt,
+                                      committed_at, retire)
+        if isinstance(segs, pa.Table):
+            n = segs.num_rows
+            segs = (segs.append_column("run_id", pa.array([run_id] * n))
+                    .append_column("attempt_id", pa.array([attempt] * n))
+                    .cast(_segment_rows()))
+            if n:
+                backend.append_segment_table(segs)
+            done = segs.drop_columns(["payload"])
+        else:
+            listed = set(backend.segment_files())
+            backend.append_segments(
+                segs.withColumn("run_id", F.lit(run_id))
+                    .withColumn("attempt_id", F.lit(attempt)))
+            done = _attempt_rows([p for p in backend.segment_files()
+                                  if p not in listed], run_id, attempt)
+        rows = [_manifest_rows(done, "done", committed_at)]
+        if retire is not None:
+            rows.append(_manifest_rows(retire, "retired", committed_at,
+                                       run_id, attempt))
+        manifest = pa.concat_tables(rows)
+        if manifest.num_rows:
+            backend.append_manifest(manifest)
+        return {"run_id": run_id,
+                "rowgroups_encoded": pc.count_distinct(
+                    done["rowgroup_id"]).as_py(),
+                "storage": backend.name}
+
+    def _commit_frame(self, spark: SparkSession, backend, segs: DataFrame,
+                      run_id: str, attempt: str, committed_at: str,
+                      retire: pa.Table | None) -> dict:
+        """`_commit` on the Iceberg backend: the segments appended, the
+        manifest rows read back from the segments table (an append
+        there is an atomic snapshot commit) and appended with
+        `writeTo`. No test covers it (no Iceberg runtime jar here)."""
         segs = (segs.withColumn("run_id", F.lit(run_id))
                     .withColumn("attempt_id", F.lit(attempt)))
         backend.append_segments(segs)
-        committed_at = time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime())
 
         # a legacy table (created before attempt_id existed) may have
         # dropped the column on append (Iceberg DSv2 schema fit); the
@@ -472,27 +620,14 @@ class Warehouse:
                     .withColumn("status", F.lit("done"))
                     .withColumn("committed_at", F.lit(committed_at)))
         if retire is not None:
-            tomb = (retire.withColumn("status", F.lit("retired"))
-                    .withColumn("committed_at", F.lit(committed_at))
-                    .withColumn("run_id", F.lit(run_id)))
-            if "attempt_id" in manifest.columns:
-                tomb = tomb.withColumn("attempt_id", F.lit(attempt))
-            # legacy-store shim, generalized: `retire` rows come from a
-            # manifest that may predate ANY additive nullable column
-            # (bloom words, sum_repr, typed bounds...) the fresh 'done'
-            # side carries — null-fill them so the union never throws
-            # on an upgraded store's first compact()/delete
-            for f in manifest.schema.fields:
-                if f.name not in tomb.columns:
-                    tomb = tomb.withColumn(
-                        f.name, F.lit(None).cast(f.dataType))
+            tomb = spark.createDataFrame(_manifest_rows(
+                retire, "retired", committed_at, run_id, attempt))
             manifest = manifest.unionByName(
                 tomb.select(*manifest.columns))
         backend.append_manifest(manifest)
         m_back = backend.read_manifest(spark)
-        # count only 'done' rows: a compaction/delete commit's retire
-        # tombstones share this run/attempt and must not inflate the
-        # reported encoded-rowgroup count
+        # count only 'done' rows: a rewrite's retire tombstones share
+        # this run/attempt and must not inflate the reported count
         pending = (m_back.where(_attempt_cond(m_back))
                    .where(F.col("status") == "done")
                    .select("rowgroup_id").distinct().count())
@@ -522,81 +657,94 @@ class Warehouse:
                             presorted=presorted,
                             bloom_columns=bloom_columns)
         # no driver-side emptiness probe: it would encode a whole file
-        # just to peek; an all-done run commits zero segment rows and
-        # zero manifest rows, which reads back as rowgroups_encoded=0
+        # just to peek; an all-done run writes zero segment rows and
+        # commits no manifest row (rowgroups_encoded=0)
         return self._commit(spark, backend, segs, run_id, attempt)
 
     def vacuum_orphan_segments(self, spark: SparkSession) -> list[str]:
-        """Delete segment part files whose every (run_id, attempt_id)
-        never reached the manifest — the debris of attempts that
-        crashed between `append_segments` and the manifest commit. The
-        commit protocol keeps them invisible to every read (segments
-        serve only via the manifest join), but the files are still
-        listed, footer-read, and join-filtered on each scan; at
-        warehouse scale that is wasted IO forever. Parquet backend
-        only (Iceberg debris belongs to expire_snapshots / orphan-file
-        removal on the catalog side).
+        """Delete the debris of write attempts that crashed before their
+        manifest commit, returning the removed paths:
+
+        - segment files none of whose (run_id, attempt_id)s reached the
+          manifest (appended or renamed into `segments/` by the
+          attempt), and zero-row part files (Spark appends write them;
+          they serve no read);
+        - hidden staging files (and staging dirs) in `segments/` and
+          `manifest/` that a crash left before their rename
+          (`ParquetBackend.remove_staging`).
+
+        The commit protocol keeps this debris invisible to every read,
+        but the segment files are still listed and footer-read, and at
+        warehouse scale that is wasted IO forever. Which attempt wrote
+        a file comes from its parquet footer (`read_footer`); no Spark
+        job runs, and a file whose footer names no single attempt is
+        kept. Parquet backend only (Iceberg
+        debris belongs to expire_snapshots / orphan-file removal on the
+        catalog side).
 
         Single-writer contract (same as the generation GC): must not
-        run concurrently with an in-flight encode, whose freshly
-        appended segments would look orphaned until its commit."""
-        import os
-        from urllib.parse import unquote, urlparse
-
-        from .storage import ParquetBackend
-
+        run concurrently with an in-flight write, whose fresh segment
+        and staging files would look orphaned until its commit."""
         backend = self.backend(spark)
         if not isinstance(backend, ParquetBackend):
             return []
-        try:
-            listing = os.listdir(self.segments_path)
-        except FileNotFoundError:
-            return []  # no segments table yet
-        candidates = {
-            os.path.abspath(os.path.join(self.segments_path, n))
-            for n in listing
-            if not n.startswith(("_", "."))
-            and os.path.isfile(os.path.join(self.segments_path, n))}
-        if not candidates:
-            return []
-        # the LIVE file set: files holding at least one row whose
-        # (run_id, attempt_id) the manifest committed. Everything else
-        # — torn attempts AND the zero-row part files Spark appends
-        # write (which carry no rows and thus serve no read) — is
-        # garbage. One column-pruned scan of (run_id, attempt_id).
-        live_files: set = set()
-        m = self.manifest(spark)
-        if m is not None:
-            segs = backend.read_segments(spark)
-            att = (F.coalesce("attempt_id", F.lit(""))
-                   if "attempt_id" in segs.columns else F.lit(""))
-            per_file = (segs.withColumn("__file", F.input_file_name())
-                        .select("__file", "run_id",
-                                att.alias("attempt_id")).distinct())
-            matt = (F.coalesce("attempt_id", F.lit(""))
-                    if "attempt_id" in m.columns else F.lit(""))
-            committed = (m.select("run_id", matt.alias("attempt_id"))
-                         .distinct())
-            live_files = {
-                os.path.abspath(unquote(urlparse(r["__file"]).path))
-                for r in
-                (per_file.join(committed,
-                               on=["run_id", "attempt_id"],
-                               how="leftsemi")
-                 .select("__file").distinct().collect())}
-        # safety invariant: a healthy store's live files are a subset
-        # of the directory listing. Zero overlap means either nothing
-        # is live (an all-debris store — deleting everything would
-        # leave an empty dir that breaks read_segments) or a path
-        # normalization mismatch (deleting "orphans" would destroy
-        # live data). Either way: touch nothing.
-        if not (live_files & candidates):
-            return []
-        removed = []
-        for path in sorted(candidates - live_files):
+        removed = backend.remove_staging()
+        snap = self.snapshot(spark)
+        candidates = backend.segment_files()
+        if snap is None or not candidates:
+            return removed
+        committed = set(zip(snap.raw["run_id"].to_pylist(),
+                            snap.raw["attempt_id"].to_pylist()))
+        live = set()
+        for path in candidates:
+            f = self._footers.get(path) or read_footer(path)
+            # a file whose footer names no single attempt is kept
+            if f.n_rows and (f.attempt is None
+                             or snap._attempt(f) in committed):
+                live.add(path)
+        # safety invariant: nothing live means an all-debris store —
+        # deleting everything would leave an empty dir that breaks
+        # reads. Touch nothing.
+        if not live:
+            return removed
+        for path in sorted(set(candidates) - live):
             try:
                 os.remove(path)
                 removed.append(path)
             except FileNotFoundError:
                 pass
         return removed
+
+
+def _attempt_rows(paths: list[str], run_id: str, attempt: str) -> pa.Table:
+    """The non-payload columns of the rows of segment files `paths`
+    that commit attempt (`run_id`, `attempt`) wrote, read with
+    pyarrow."""
+    import pyarrow.dataset as ds
+
+    cols = [f.name for f in _segment_rows() if f.name != "payload"]
+    if not paths:
+        return _segment_rows().empty_table().select(cols)
+    data = ds.dataset(paths, format="parquet")
+    return data.to_table(columns=cols, filter=(
+        (ds.field("run_id") == run_id)
+        & (ds.field("attempt_id") == attempt)))
+
+
+def _manifest_rows(rows: pa.Table, status: str, committed_at: str,
+                   run_id: str | None = None,
+                   attempt: str | None = None) -> pa.Table:
+    """`rows` (segment or manifest rows) as manifest rows of `status`,
+    committed at `committed_at` — by (`run_id`, `attempt`) when given,
+    else by the rows' own — in `_manifest_schema()`. A column `rows`
+    lack (a live row of a store written before it existed) is NULL."""
+    schema = _manifest_schema()
+    n = rows.num_rows
+    const = {"status": status, "committed_at": committed_at}
+    if run_id is not None:
+        const.update(run_id=run_id, attempt_id=attempt)
+    cols = [pa.array([const[f.name]] * n, f.type) if f.name in const
+            else rows[f.name].cast(f.type) if f.name in rows.column_names
+            else pa.nulls(n, f.type)
+            for f in schema]
+    return pa.Table.from_arrays(cols, schema=schema)

@@ -45,8 +45,8 @@ from .operators import (
     decode_window,
 )
 from .operators.arrow_io import local_frame
-from .operators.decode import (decode_matching_pred, decode_with_rowgroup,
-                               decoded_in_driver)
+from .operators.decode import (_check_known, decode_matching_pred,
+                               decode_with_rowgroup, decoded_in_driver)
 from .plans.predicates import (
     _dedup_probes,
     _exact_pred_cond,
@@ -254,16 +254,27 @@ class TranscriptColumnStore:
         except FileNotFoundError:
             return set()
 
-    def _batch_rows(self, name: str) -> int:
-        """Row count of one delta batch from parquet FOOTERS (driver-
-        side metadata read, no Spark job)."""
+    def _batch_footers(self, name: str) -> list:
+        """Parquet footers of one delta batch's files (a driver-side
+        metadata read, no Spark job)."""
         import glob as _glob
 
         import pyarrow.parquet as pq
 
         d = _glob.escape(f"{self._delta_root()}/{name}")
-        return sum(pq.read_metadata(p).num_rows
-                   for p in _glob.glob(f"{d}/*.parquet"))
+        return [pq.read_metadata(p) for p in _glob.glob(f"{d}/*.parquet")]
+
+    def _batch_rows(self, name: str) -> int:
+        """Row count of one delta batch, from its footers."""
+        return sum(md.num_rows for md in self._batch_footers(name))
+
+    def _batch_bytes(self, name: str) -> int:
+        """Uncompressed size of one delta batch, from its footers (the
+        total_byte_size of every parquet row group): the size that
+        places its close (`Warehouse.encode_resumable`)."""
+        return sum(md.row_group(i).total_byte_size
+                   for md in self._batch_footers(name)
+                   for i in range(md.num_row_groups))
 
     def _retire_batches(self, names: list[str]) -> None:
         """Merge `names` into retired_batches.txt (atomic rewrite —
@@ -356,7 +367,10 @@ class TranscriptColumnStore:
     def close(self) -> int:
         """Compact every pending delta batch to solid segments
         (`Close` + the intended `TryCompact`); returns the number of
-        batches compacted. Idempotent and crash-resumable (manifest)."""
+        batches compacted. Idempotent and crash-resumable (manifest).
+        A batch whose footers put it within the warehouse's driver
+        write budget is encoded and committed from the driver (one
+        Spark job); a larger one runs the encode stage."""
         self._writable()
         compacted = 0
         for name in self._pending_batches():
@@ -376,7 +390,8 @@ class TranscriptColumnStore:
                 run_id=name,
                 rowgroup_offset=batch_idx << _BATCH_SHIFT,
                 bloom_columns=self.bloom_columns,
-                rowgroup_expr=rg_expr, order=order)
+                rowgroup_expr=rg_expr, order=order,
+                input_bytes=self._batch_bytes(name))
             compacted += 1
         return compacted
 
@@ -475,7 +490,8 @@ class TranscriptColumnStore:
         ``(lo, hi)`` inclusive range, list/set IN, ``None`` IS NULL.
 
         Candidate rowgroups come from MANIFEST pruning (typed bounds +
-        Bloom) and are decoded through the pinned read; matching rows
+        Bloom) and are decoded through the pinned read (in the driver
+        when their size places the rewrite there); matching rows
         drop (NULLs in the probe column never match an equality/range/
         IN probe — SQL semantics). Only the candidates that hold a
         match are rewritten: their survivors re-encode through the
@@ -503,7 +519,8 @@ class TranscriptColumnStore:
         if pred[1] == "in" and not pred[2]:
             return {"rows_deleted": 0, "rowgroups_rewritten": 0,
                     "rowgroups_retired": 0}
-        cand = self.warehouse.pinned_read(self.spark, m, m.keep_ids(*pred))
+        cand = self.warehouse.pinned_read(self.spark, m, m.keep_ids(*pred),
+                                          rewrite=True)
         # schema from the MANIFEST: a fully-pruned candidate set has
         # no segment to infer it from
         decoded = decode_with_rowgroup(cand, schema=m.decode_schema)
@@ -762,7 +779,8 @@ class TranscriptColumnStore:
                 self.spark, ids, rows,
                 victim_rows=sum(m.rowgroup_rows[i] for i in ids) + n_in,
                 rows_per_segment=self.rows_per_segment, mode=self.mode,
-                run_id=run_id, bloom_columns=self.bloom_columns)
+                run_id=run_id, bloom_columns=self.bloom_columns,
+                incoming=incoming is not None)
         finally:
             for f in frames:
                 f.unpersist()
@@ -1612,18 +1630,32 @@ class TranscriptColumnStore:
         unknown names raise), so it unions with any non-empty result.
         Nothing is read: the frame is a local relation built from the
         schema alone."""
-        if self._schema_log():
-            self._needs_fallback(m, *probe_cols, *(columns or []))
-            # the types `solid_rows` decodes to: physical columns keep
-            # their stored type, unphysical adds take the logged one
-            stored = {f.name: f for f in m.decode_schema.fields}
-            out = local_frame(self.spark, T.StructType(
-                [stored.get(f.name, f) for f in self.schema().fields]))
-        else:
-            out = decode(self.warehouse.pinned_read(self.spark, m, []),
-                         schema=m.decode_schema,
-                         columns=_inner_columns(columns, *probe_cols))
+        if not self._schema_log():
+            return self._empty_answer(m, columns)
+        self._needs_fallback(m, *probe_cols, *(columns or []))
+        # the types `solid_rows` decodes to: physical columns keep
+        # their stored type, unphysical adds take the logged one
+        stored = {f.name: f for f in m.decode_schema.fields}
+        out = local_frame(self.spark, T.StructType(
+            [stored.get(f.name, f) for f in self.schema().fields]))
         return out if columns is None else out.select(*columns)
+
+    def _empty_answer(self, m: ManifestSnapshot, columns) -> DataFrame:
+        """The empty answer of snapshot `m` projected to `columns`
+        (None: every column), with no pending schema-log entry: one
+        local relation per projection, memoized in `m.answers`, so
+        every probe known to match nothing (an empty IN list, a
+        keep-set every rowgroup was pruned from — an absent key) is
+        served without building a frame or a filter."""
+        key = ("empty", None if columns is None else tuple(columns))
+        out = m.answers.get(key)
+        if out is None:
+            out = local_frame(self.spark, m.decode_schema)
+            if columns is not None:
+                _check_known(columns, m.decode_schema)
+                out = out.select(*columns)
+            m.answers.put(key, out, 0)
+        return out
 
     def _probe(self, preds, columns: list[str] | None,
                include_pending: bool, any_mode: bool = False) -> DataFrame:
@@ -1660,7 +1692,10 @@ class TranscriptColumnStore:
         commit, or another process's, makes a new snapshot). It is
         neither read nor filled with `include_pending`, under a
         pending schema-log entry, or for a read placed as a stage
-        (which includes every Iceberg read)."""
+        (which includes every Iceberg read). An answer known to be
+        empty before any read (an empty keep-set: every absent key)
+        is the snapshot's one empty frame of its projection
+        (`_empty_answer`)."""
         m = self._manifest_or_raise()
         cols = [c for c, _k, _p in preds]
         fallback = self._needs_fallback(m, *cols, *(columns or []))
@@ -1684,6 +1719,9 @@ class TranscriptColumnStore:
         else:
             known = [set(s) for s in keep if s is not None]
             ids = set.intersection(*known) if known else None
+        if ids is not None and not ids and not include_pending \
+                and not self._schema_log():
+            return self._empty_answer(m, columns)
         segs = self.warehouse.pinned_read(self.spark, m, ids)
         inner = _inner_columns(columns, *cols)
         key = None

@@ -24,8 +24,10 @@ from the snapshot's answer memo, it splits the lookups into first-time
 (a present key not looked up before in the run, warm-up included),
 repeated (a present key looked up before) and absent ones, and prints
 the median plan (the `query_by_value` call) and total of each, the
-memo hit ratio, and how many `read_task` and `createDataFrame` calls
-the hits made (a hit makes none).
+memo hit ratio, how many `read_task` and `createDataFrame` calls the
+hits made (a hit makes none), and how many `createDataFrame` and exact
+filter calls the absent lookups made (an absent key is served the
+snapshot's one empty frame, built at most once per commit).
 
 Usage: python scripts/lookup_split.py [--seed 1] [--lookups 60]
 """
@@ -122,6 +124,7 @@ class Lookup(NamedTuple):
     hit: bool       # served from the snapshot's answer memo
     reads: int      # read_task calls
     frames: int     # createDataFrame calls
+    filters: int    # exact filter calls
 
 
 def watch_memo(hits: list) -> None:
@@ -164,7 +167,9 @@ def run(store, keys: list[str], split: Split) -> list[Lookup]:
                 kind, (t1 - t0) * 1e3, (t2 - t0) * 1e3, any(hits),
                 split.calls["read"] - before.get("read", 0),
                 split.calls["createDataFrame"]
-                - before.get("createDataFrame", 0)))
+                - before.get("createDataFrame", 0),
+                split.calls["exact filter"]
+                - before.get("exact filter", 0)))
         seen.add(k)
     split.on = False
     return out
@@ -190,6 +195,10 @@ def report(split: Split, lookups: list[Lookup], memo) -> None:
     print(f"\nanswer memo hits {len(hit)} of {n} ({len(hit) / n:.2f}); "
           f"in them read_task {sum(lk.reads for lk in hit)} calls, "
           f"createDataFrame {sum(lk.frames for lk in hit)} calls")
+    absent = [lk for lk in lookups if lk.kind == "absent"]
+    print(f"absent lookups {len(absent)}: createDataFrame "
+          f"{sum(lk.frames for lk in absent)} calls, exact filter "
+          f"{sum(lk.filters for lk in absent)} calls")
     print(f"answer memo at the end: {len(memo)} answers, "
           f"{memo.nbytes / 2**20:.1f} MiB charged")
 

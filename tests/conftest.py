@@ -90,6 +90,20 @@ def place(monkeypatch):
         decode_mod, "_DRIVER_READ_BYTES", PLACEMENTS[placement])
 
 
+# the warehouse's budget for encoding a write in the driver: above any
+# test store's size, or zero (every write runs the Spark encode stage)
+WRITE_PLACEMENTS = {"driver": 1 << 40, "spark": 0}
+
+
+@pytest.fixture
+def write_place(monkeypatch):
+    """`write_place(placement)`: encode every write sized from then on
+    in the driver or as the Spark encode stage."""
+    decode_mod = importlib.import_module("columnstore_spark.operators.decode")
+    return lambda placement: monkeypatch.setattr(
+        decode_mod, "_DRIVER_WRITE_BYTES", WRITE_PLACEMENTS[placement])
+
+
 def _injected_crash(df):
     raise RuntimeError("injected crash")
 

@@ -404,3 +404,36 @@ def test_empty_answer_schema_matches_data(spark, wide_store, place):
     miss = wide_store.query_by_value("conv_id", "absent")
     assert miss.schema == hit.schema
     assert _rows(hit.unionByName(miss)) == _rows(hit)
+
+
+def test_empty_answers_share_one_frame(spark, wide_store, monkeypatch):
+    """Every probe known to match nothing on one commit — absent keys,
+    empty IN lists — gets the snapshot's one empty frame of its
+    projection: equal to a fresh store object's empty answer, and a
+    repeat builds no frame and no filter."""
+    first = wide_store.query_by_value("conv_id", "absent")
+    proj = wide_store.query_by_value("conv_id", "absent",
+                                     columns=["ts", "turn_idx"])
+    for call in (lambda s: s.query_by_value("conv_id", "absent"),
+                 lambda s: s.query_by_value("conv_id", "absent",
+                                            columns=["ts", "turn_idx"])):
+        got, want = call(wide_store), call(_fresh(wide_store))
+        assert got.schema == want.schema and _rows(got) == _rows(want) == []
+    assert proj.columns == ["ts", "turn_idx"]
+
+    def boom(*_a, **_k):
+        raise AssertionError("an empty answer built a frame or a filter")
+
+    frame = type(spark.range(1))
+    with monkeypatch.context() as mp:
+        for owner, name in ((type(spark), "createDataFrame"),
+                            (frame, "where"), (frame, "filter"),
+                            (frame, "select")):
+            mp.setattr(owner, name, boom)
+        assert wide_store.query_by_value("conv_id", "other-absent") is first
+        assert wide_store.query_by_in("conv_id", ["x", "y"]) is first
+        assert wide_store.query_by_in("conv_id", []) is first
+        assert wide_store.query_by_value(
+            "conv_id", "absent", columns=["ts", "turn_idx"]) is proj
+    with pytest.raises(ValueError, match="unknown column"):
+        wide_store.query_by_value("conv_id", "absent", columns=["nope"])

@@ -12,6 +12,7 @@ from __future__ import annotations
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from columnstore_spark.store import TranscriptColumnStore
@@ -173,3 +174,64 @@ def test_vacuum_reclaims_orphan_segments(spark, tmp_path):
     again = store.vacuum()["segment_files"]
     assert len(glob.glob(seg_glob)) == n_after_retry - len(again)
     assert store.rows().count() == t.count()
+
+
+def _hidden_staging(root):
+    from columnstore_spark.sources.storage import STAGING_PREFIX
+    return sorted(os.path.join(d, n) for d, dirs, names in os.walk(root)
+                  for n in names + dirs if n.startswith(STAGING_PREFIX))
+
+
+def _data_files(path):
+    """Every non-hidden file directly under `path` -> its bytes."""
+    out = {}
+    for n in sorted(os.listdir(path)):
+        if not n.startswith((".", "_")):
+            with open(os.path.join(path, n), "rb") as f:
+                out[n] = f.read()
+    return out
+
+
+@pytest.mark.parametrize("target", ["segments", "manifest"])
+def test_vacuum_reclaims_commit_staging(spark, transcripts, tmp_path,
+                                        monkeypatch, target):
+    """A write that fails after writing a staging file (its rename into
+    `target` raises) leaves that hidden file behind, next to the staging
+    dir a crashed Spark manifest write of an older version left: vacuum
+    removes both, and the rows and the manifest bytes stay as they
+    were."""
+    t = transcripts
+    s = TranscriptColumnStore(spark, str(tmp_path / "s"), num_rowgroups=2)
+    s.add_range(t.where(F.col("turn_idx") % 2 == 0))
+    s.close()
+    wh = s.warehouse
+    old_dir = f"{wh.manifest_path}/.staging-0123abcd"
+    os.makedirs(old_dir)
+    with open(f"{old_dir}/part-00000.snappy.parquet", "wb") as f:
+        f.write(b"torn")
+    rows = sorted(tuple(r) for r in s.solid_rows().collect())
+    manifest = _data_files(wh.manifest_path)
+
+    real = os.rename
+
+    def failing(src, dst):
+        if os.path.dirname(dst) == getattr(wh, f"{target}_path"):
+            raise OSError("injected crash after the staging write")
+        return real(src, dst)
+
+    s.add_range(t.where(F.col("turn_idx") % 2 == 1))
+    with monkeypatch.context() as mp:
+        mp.setattr(os, "rename", failing)
+        with pytest.raises(OSError, match="injected crash"):
+            s.close()
+    staged = _hidden_staging(s.root)
+    assert len(staged) == 2 and old_dir in staged, staged
+    assert sorted(tuple(r) for r in s.solid_rows().collect()) == rows
+
+    removed = s.vacuum()["segment_files"]
+    assert set(staged) <= set(removed)
+    assert _hidden_staging(s.root) == []
+    assert _data_files(wh.manifest_path) == manifest
+    assert sorted(tuple(r) for r in s.solid_rows().collect()) == rows
+    s.close()
+    assert s.rows().count() == t.count()

@@ -128,10 +128,9 @@ class PinnedRead:
     snapshot's decode schema. `pool` is the warehouse's driver-side
     `FilePool` (None: none). Built by `ManifestSnapshot.pinned`;
     consumed by `decode._rowgroup_stage`, which reads it with
-    `read_task` — in the driver when `raw_bytes` is small or
-    `in_driver` is set (a rewrite the warehouse encodes in the
-    driver), through `pool`, else in tasks that each read a contiguous
-    slice of the ids from their files."""
+    `read_task` — in the driver when `raw_bytes` is small, through
+    `pool`, else in tasks that each read a contiguous slice of the ids
+    from their files."""
     spark: SparkSession
     files: tuple
     keys: dict
@@ -141,7 +140,6 @@ class PinnedRead:
     columns: frozenset | None = None
     pool: FilePool | None = dataclasses.field(default=None, repr=False,
                                               compare=False)
-    in_driver: bool = False
 
     @property
     def ids(self) -> list[int]:

@@ -77,23 +77,24 @@ _OUT_BATCH_ROWS = 1 << 16
 # where lookup that prunes most rowgroups; a full export does not, and
 # keeps its executor parallelism on a cluster.
 _DRIVER_READ_BYTES = 4 << 20
-# A write whose input is known from metadata to hold at most this many
-# bytes (a close: the delta batch's parquet footers, total_byte_size; a
-# rowgroup rewrite: its victims' manifest raw_bytes) is encoded in the
-# driver (`Warehouse.encode_resumable`, `Warehouse.replace_rowgroups`),
-# and a rewrite placed there decodes its victims there too, whatever
-# `_DRIVER_READ_BYTES` says. `scripts/ingest_split.py` (local[1] on one
-# CPU of a shared 4-vCPU VM, seed 1) closed batches of 1-16 MiB (footer
-# bytes) both ways: the driver took ~296 ms + 70 ms/MiB, the Spark
-# encode stage ~858 ms + 70 ms/MiB (1.4 against 2.0 s at 16 MiB). Both
-# run the same kernel on one core, so on one CPU the driver wins at any
-# size by the Python stage's fixed cost. What bounds it is what the
-# driver gives up: the collect holds the batch as Arrow in the JVM and
-# in Python, and a stage on a cluster spreads the 70 ms/MiB over its
-# cores — with two, the lines would cross near 16 MiB (562 ms of fixed
-# cost over 35 ms/MiB). 16 MiB covers the `serve` closes (0.31 MiB
-# each) and its compact (3.5 MiB of victims) and stays a small part of
-# a 2 GiB driver heap.
+# A write whose input decodes to at most this many bytes, known before
+# any job (a close: its delta batch decoded with pyarrow,
+# `TranscriptColumnStore._batch_bytes`; a rowgroup rewrite: its
+# victims' manifest raw_bytes), is encoded in the driver
+# (`Warehouse.encode_resumable`, `Warehouse.replace_rowgroups`).
+# `scripts/ingest_split.py` (local[1] on one CPU of a shared 4-vCPU VM,
+# seed 1, two runs) closed batches of 1-16 MiB both ways: the driver
+# took 229-363 ms + 64-92 ms/MiB, the Spark encode stage 533-1,141 ms +
+# 73-82 ms/MiB, and the driver was faster at every size in both runs.
+# So time sets no bound on one CPU; what the driver holds does. The
+# collect gathers the decoded rows as Arrow batches in the driver JVM
+# (about the decoded size; not measured), then hands them to Python,
+# which slices and encodes them: at 16 MiB the driver's Python process
+# peaked 70 MiB above its start (208 -> 278 MiB). The bound is the
+# largest size measured; past it the driver's memory is untested. No
+# benchmark write reaches the Spark side by size: the `serve` closes
+# decode to 1.9 MiB each and its compact's victims to 3.5 MiB, and
+# upsert, which has no size, always runs the stage.
 _DRIVER_WRITE_BYTES = 16 << 20
 
 
@@ -135,12 +136,9 @@ def decoded_in_driver(segments, columns=None) -> bool:
     """Whether the decode stage reads `segments`, projected to
     `columns` (None: all), in the driver: the placement test of
     `_rowgroup_stage`. True for a `PinnedRead` whose kept, projected
-    segments decode to at most `_DRIVER_READ_BYTES`, or that a
-    driver-placed write pinned there (`PinnedRead.in_driver`)."""
+    segments decode to at most `_DRIVER_READ_BYTES`."""
     if not isinstance(segments, PinnedRead):
         return False
-    if segments.in_driver:
-        return True
     if columns is not None:
         segments = segments.project(columns)
     return segments.raw_bytes <= _DRIVER_READ_BYTES

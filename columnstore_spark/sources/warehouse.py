@@ -24,15 +24,16 @@ attempt's manifest rows as an Arrow table and
 `ParquetBackend.append_manifest` writes them with pyarrow to a hidden
 staging file and renames it into the manifest dir — one file, one
 atomic rename, no Spark job. Where the segments are encoded depends on
-the write's size, known from metadata before any job runs:
+the write's decoded size, when the caller knows it before any job runs
+(a close: its delta batch decoded with pyarrow in the driver; a
+rowgroup rewrite: its victims' manifest raw_bytes):
 
-- a small write (a close of a delta batch, or a rowgroup rewrite, of at
-  most `operators.decode._DRIVER_WRITE_BYTES` input bytes) is encoded in
-  the driver: one JVM-only job collects its rows sorted as the encode
-  stage sorts them, the stage's kernel encodes them
-  (`operators.encode.encode_in_driver`, byte-identical segments), and
-  one segment file is written with pyarrow to a hidden staging name and
-  renamed into `segments/`. The manifest rows come from that table;
+- a small write (at most `operators.decode._DRIVER_WRITE_BYTES` decoded
+  bytes) is encoded in the driver: one JVM-only job collects its rows
+  sorted as the encode stage sorts them, the stage's kernel encodes
+  them (`operators.encode.encode_in_driver`, byte-identical segments),
+  and one segment file is written with pyarrow to a hidden staging name
+  and renamed into `segments/`. The manifest rows come from that table;
 - a larger write, or one of unknown size (upsert's incoming frame, a
   rebuild, a streaming batch), runs the Spark encode stage and appends
   its part files; the manifest rows are the non-payload columns of this
@@ -57,7 +58,6 @@ the missing partitions, producing byte-identical final segments
 
 from __future__ import annotations
 
-import dataclasses
 import functools
 import os
 import time
@@ -241,7 +241,7 @@ class Warehouse:
         return snap.segments(spark, self.backend(spark), rowgroups)
 
     def pinned_read(self, spark: SparkSession, snapshot: ManifestSnapshot,
-                    rowgroups=None, rewrite: bool = False):
+                    rowgroups=None):
         """The committed segments of `snapshot` restricted to
         `rowgroups` (None = every live one) as the decode operators'
         input: a `PinnedRead` they read with pyarrow, in the driver
@@ -249,17 +249,10 @@ class Warehouse:
         on the Iceberg backend (no pinned file list), the
         `committed_segments` DataFrame. A driver read takes its files
         from this warehouse's pool, so a file is read from disk at most
-        once while the current snapshot pins it.
-
-        `rewrite`: the rows are the victims of a rowgroup rewrite, so
-        they are decoded in the driver whenever the rewrite is encoded
-        there (`_in_driver`), whatever the read budget says."""
+        once while the current snapshot pins it."""
         if snapshot.files is None:
             return self.committed_segments(spark, snapshot, rowgroups)
-        read = snapshot.pinned(spark, rowgroups, pool=self._pool)
-        if rewrite and self._in_driver(spark, read.raw_bytes):
-            read = dataclasses.replace(read, in_driver=True)
-        return read
+        return snapshot.pinned(spark, rowgroups, pool=self._pool)
 
     def done_rowgroups(self, spark: SparkSession) -> DataFrame | None:
         ids = self._done_ids(spark)
@@ -330,8 +323,8 @@ class Warehouse:
         committed by earlier runs — the delta->solid step, committed
         from the driver (see the module docstring).
 
-        `input_bytes` is `df`'s size as metadata gives it before any
-        job (the facade's close: the delta batch's parquet footers);
+        `input_bytes` is `df`'s decoded size, known before any job
+        (the facade's close: `TranscriptColumnStore._batch_bytes`);
         None when unknown. A write of at most `_DRIVER_WRITE_BYTES` is
         encoded in the driver (`_in_driver`): one collect job, the
         encode kernel in the driver, one segment file, then the
@@ -429,8 +422,8 @@ class Warehouse:
 
         The small-rowgroup set comes off the driver-side manifest
         snapshot (one row count per rowgroup); their rows decode
-        through the snapshot's pinned read — in the driver when the
-        rewrite is encoded there.
+        through the snapshot's pinned read; their manifest raw_bytes
+        place the rewrite's encode (`replace_rowgroups`).
         """
         from ..operators.decode import decode
 
@@ -446,11 +439,12 @@ class Warehouse:
                        if n < thresh)
         if len(small) < 2:
             return empty
-        rows = decode(self.pinned_read(spark, snap, small, rewrite=True),
+        rows = decode(self.pinned_read(spark, snap, small),
                       schema=snap.decode_schema)
         return self.replace_rowgroups(
             spark, small, rows, rows_per_segment=rows_per_segment,
-            mode=mode, run_id=run_id, bloom_columns=bloom_columns)
+            mode=mode, run_id=run_id, bloom_columns=bloom_columns,
+            input_bytes=snap.rowgroup_bytes(small))
 
     def replace_rowgroups(self, spark: SparkSession, victims: list[int],
                           rows: DataFrame, victim_rows: int | None = None,
@@ -458,7 +452,7 @@ class Warehouse:
                           mode: str = chooser.MODE_SIZE,
                           run_id: str | None = None,
                           bloom_columns: tuple[str, ...] = (),
-                          incoming: bool = False) -> dict:
+                          input_bytes: int | None = None) -> dict:
         """Atomically replace the rowgroups `victims` (a list of live
         rowgroup ids) with `rows` re-encoded into capacity-sized
         groups — the one tombstone+replace commit under compact() and
@@ -469,14 +463,14 @@ class Warehouse:
         snapshot's live rows; a crash before it leaves the old
         rowgroups live and the new segments invisible.
 
-        Placement: the write's size is its victims' manifest
-        `raw_bytes`, so one of at most `_DRIVER_WRITE_BYTES` is encoded
-        in the driver (`encode_in_driver`, one collect job) and
-        committed from there; the callers decode such victims in the
-        driver too (`pinned_read(rewrite=True)`). `incoming=True` says
-        `rows` also hold rows from outside the store (upsert's incoming
-        frame), whose size no metadata gives: the write then runs as
-        the Spark encode stage.
+        `input_bytes` places the encode as in `encode_resumable`: the
+        decoded size of `rows` when known before any job (compact,
+        delete_where, delete_keys: the victims' manifest raw_bytes,
+        `ManifestSnapshot.rowgroup_bytes`), None when not (upsert's
+        incoming frame has no metadata size). A write of at most
+        `_DRIVER_WRITE_BYTES` is encoded in the driver
+        (`encode_in_driver`, one collect job) and committed from
+        there; any other runs the Spark encode stage.
 
         Every victim must be live in the snapshot this commit is made
         against; otherwise RuntimeError is raised before anything is
@@ -522,8 +516,7 @@ class Warehouse:
         rg_expr = (default_rowgroup_expr(n_new, rows_per_segment,
                                          columns=rows.columns)
                    + F.lit(offset))
-        if self._in_driver(spark, None if incoming
-                           else snap.rowgroup_bytes(ids)):
+        if self._in_driver(spark, input_bytes):
             segs = encode_in_driver(rows, rg_expr, mode=mode,
                                     bloom_columns=bloom_columns)
         else:

@@ -254,27 +254,39 @@ class TranscriptColumnStore:
         except FileNotFoundError:
             return set()
 
-    def _batch_footers(self, name: str) -> list:
-        """Parquet footers of one delta batch's files (a driver-side
-        metadata read, no Spark job)."""
+    def _batch_rows(self, name: str) -> int:
+        """Row count of one delta batch from parquet FOOTERS (driver-
+        side metadata read, no Spark job)."""
         import glob as _glob
 
         import pyarrow.parquet as pq
 
         d = _glob.escape(f"{self._delta_root()}/{name}")
-        return [pq.read_metadata(p) for p in _glob.glob(f"{d}/*.parquet")]
+        return sum(pq.read_metadata(p).num_rows
+                   for p in _glob.glob(f"{d}/*.parquet"))
 
-    def _batch_rows(self, name: str) -> int:
-        """Row count of one delta batch, from its footers."""
-        return sum(md.num_rows for md in self._batch_footers(name))
+    def _batch_bytes(self, name: str, limit: int | None = None) -> int:
+        """Decoded (Arrow) size of one delta batch: the size that
+        places its close (`Warehouse.encode_resumable`), the measure a
+        rewrite's manifest raw_bytes gives. A footer's sizes will not
+        do: they are after dictionary and RLE encoding, which fold a
+        batch of repeated texts into far fewer bytes than its rows
+        decode to. So the batch's files are decoded with pyarrow in
+        the driver, 8,192 rows at a time (no Spark job), stopping
+        once the sum passes `limit` (None: the whole batch)."""
+        import glob as _glob
 
-    def _batch_bytes(self, name: str) -> int:
-        """Uncompressed size of one delta batch, from its footers (the
-        total_byte_size of every parquet row group): the size that
-        places its close (`Warehouse.encode_resumable`)."""
-        return sum(md.row_group(i).total_byte_size
-                   for md in self._batch_footers(name)
-                   for i in range(md.num_row_groups))
+        import pyarrow.parquet as pq
+
+        d = _glob.escape(f"{self._delta_root()}/{name}")
+        total = 0
+        for p in _glob.glob(f"{d}/*.parquet"):
+            with pq.ParquetFile(p) as f:
+                for b in f.iter_batches(batch_size=1 << 13):
+                    total += b.nbytes
+                    if limit is not None and total > limit:
+                        return total
+        return total
 
     def _retire_batches(self, names: list[str]) -> None:
         """Merge `names` into retired_batches.txt (atomic rewrite —
@@ -368,9 +380,11 @@ class TranscriptColumnStore:
         """Compact every pending delta batch to solid segments
         (`Close` + the intended `TryCompact`); returns the number of
         batches compacted. Idempotent and crash-resumable (manifest).
-        A batch whose footers put it within the warehouse's driver
-        write budget is encoded and committed from the driver (one
+        A batch that decodes to at most the driver write budget
+        (`_batch_bytes`) is encoded and committed from the driver (one
         Spark job); a larger one runs the encode stage."""
+        from .operators.decode import _DRIVER_WRITE_BYTES
+
         self._writable()
         compacted = 0
         for name in self._pending_batches():
@@ -391,7 +405,8 @@ class TranscriptColumnStore:
                 rowgroup_offset=batch_idx << _BATCH_SHIFT,
                 bloom_columns=self.bloom_columns,
                 rowgroup_expr=rg_expr, order=order,
-                input_bytes=self._batch_bytes(name))
+                input_bytes=self._batch_bytes(name,
+                                              limit=_DRIVER_WRITE_BYTES))
             compacted += 1
         return compacted
 
@@ -490,8 +505,7 @@ class TranscriptColumnStore:
         ``(lo, hi)`` inclusive range, list/set IN, ``None`` IS NULL.
 
         Candidate rowgroups come from MANIFEST pruning (typed bounds +
-        Bloom) and are decoded through the pinned read (in the driver
-        when their size places the rewrite there); matching rows
+        Bloom) and are decoded through the pinned read; matching rows
         drop (NULLs in the probe column never match an equality/range/
         IN probe — SQL semantics). Only the candidates that hold a
         match are rewritten: their survivors re-encode through the
@@ -519,8 +533,7 @@ class TranscriptColumnStore:
         if pred[1] == "in" and not pred[2]:
             return {"rows_deleted": 0, "rowgroups_rewritten": 0,
                     "rowgroups_retired": 0}
-        cand = self.warehouse.pinned_read(self.spark, m, m.keep_ids(*pred),
-                                          rewrite=True)
+        cand = self.warehouse.pinned_read(self.spark, m, m.keep_ids(*pred))
         # schema from the MANIFEST: a fully-pruned candidate set has
         # no segment to infer it from
         decoded = decode_with_rowgroup(cand, schema=m.decode_schema)
@@ -754,7 +767,8 @@ class TranscriptColumnStore:
         false positive is never rewritten, which would double its
         stored bytes until rebuild()) and the match count; only those
         ids reach the driver. The victims' `rest` rows, plus
-        `incoming` (upsert), commit through `replace_rowgroups`.
+        `incoming` (upsert), commit through `replace_rowgroups`, sized
+        by the victims' manifest raw_bytes (with `incoming`: unsized).
 
         `held` (frames `decoded` is built from, e.g. a key set),
         `decoded` and `incoming` are persisted here, in that order,
@@ -780,7 +794,8 @@ class TranscriptColumnStore:
                 victim_rows=sum(m.rowgroup_rows[i] for i in ids) + n_in,
                 rows_per_segment=self.rows_per_segment, mode=self.mode,
                 run_id=run_id, bloom_columns=self.bloom_columns,
-                incoming=incoming is not None)
+                input_bytes=None if incoming is not None
+                else m.rowgroup_bytes(ids))
         finally:
             for f in frames:
                 f.unpersist()

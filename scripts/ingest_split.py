@@ -13,13 +13,17 @@ with the time of the write path's steps inside them:
                   encode stage and its part files (`append_segments`)
   manifest commit the pyarrow manifest file and its rename
 
-Part 2 closes one delta batch of about 1, 2, 4, 8 and 16 MiB (its
-parquet footers' total_byte_size; the transcripts repeated under new
-conversation ids) into a fresh store, once encoded in the driver and
-once as the Spark encode stage, and prints the median close time of
-each, with a least-squares line per placement and the size where they
-cross. `_DRIVER_WRITE_BYTES` in `columnstore_spark/operators/decode.py`
-cites this table.
+Part 2 closes one delta batch of about 1, 2, 4, 8 and 16 MiB (decoded
+Arrow bytes, `TranscriptColumnStore._batch_bytes`: the size that places
+a close; the transcripts repeated under new conversation ids) into a
+fresh store, once encoded in the driver and once as the Spark encode
+stage, and prints the median close time of each, with a least-squares
+line per placement and the size where they cross. It also prints the
+peak resident size of this Python process (the driver's Python side,
+ru_maxrss) after the driver-placed closes of each size, and before the
+first: sizes run in ascending order, so each is that size's peak.
+`_DRIVER_WRITE_BYTES` in `columnstore_spark/operators/decode.py` cites
+this table.
 
 Usage: python scripts/ingest_split.py [--seed 1] [--reps 3]
 """
@@ -132,7 +136,8 @@ def split_stream(spark, t, work) -> None:
         ops.append((f"close {i}", store.close, pending_bytes))
     ops.append(("compact", store.compact, compact_bytes))
 
-    print("ingest stream (ms; jobs; MiB: the size that places the write)")
+    print("ingest stream (ms; jobs; MiB: the decoded size that places "
+          "the write)")
     print(f"  {'step':12s} {'MiB':>5s} {'wall':>8s} {'jobs':>5s}"
           + "".join(f" {c:>16s}" for c in inner))
     total_ms = total_jobs = 0
@@ -166,7 +171,12 @@ def _batch_of(t, spark, n: int):
 
 
 def placement_table(spark, t, work, reps: int) -> None:
+    import resource
+
     from columnstore_spark.store import TranscriptColumnStore
+
+    def rss_mib() -> float:
+        return resource.getrusage(resource.RUSAGE_SELF).ru_maxrss / 1024
 
     decode_mod = importlib.import_module(
         "columnstore_spark.operators.decode")
@@ -181,10 +191,12 @@ def placement_table(spark, t, work, reps: int) -> None:
     rows_per_mib = t.count() / (probe._batch_bytes("batch_000000") / 2**20)
 
     rows = []
+    start = rss_mib()
     for mib in SIZES_MIB:
         batch = _batch_of(t, spark, int(mib * rows_per_mib)).persist()
         batch.count()
         ms = {}
+        peak = 0.0
         for place, budget in (("driver", 1 << 40), ("spark", 0)):
             decode_mod._DRIVER_WRITE_BYTES = budget
             times = []
@@ -196,13 +208,16 @@ def placement_table(spark, t, work, reps: int) -> None:
                 s.close()
                 times.append((time.perf_counter() - t0) * 1e3)
             ms[place] = statistics.median(times)
+            if place == "driver":
+                peak = rss_mib()
         batch.unpersist()
-        rows.append((size, ms["driver"], ms["spark"]))
+        rows.append((size, ms["driver"], ms["spark"], peak))
 
-    print(f"\nclose of one delta batch (median of {reps}, ms)")
-    print("  batch MiB    driver     spark")
-    for size, d, s in rows:
-        print(f"  {size:9.2f}  {d:8.0f}  {s:8.0f}")
+    print(f"\nclose of one delta batch (median of {reps}, ms; the "
+          f"driver's Python peak RSS, MiB, from {start:.0f})")
+    print("  batch MiB    driver     spark  driver peak")
+    for size, d, s, p in rows:
+        print(f"  {size:9.2f}  {d:8.0f}  {s:8.0f}  {p:11.1f}")
     fits = {}
     for i, place in ((1, "driver"), (2, "spark")):
         xs, ys = [r[0] for r in rows], [r[i] for r in rows]

@@ -8,6 +8,8 @@ byte-identical segment payloads and equal manifest rows (ignoring the
 per-attempt run_id, attempt_id, committed_at and encode_ms)."""
 
 import datetime as dt
+import glob
+import importlib
 from decimal import Decimal
 
 import pyarrow.parquet as pq
@@ -50,8 +52,10 @@ def _both(write_place, tmp_path, build):
 
 
 def test_batched_store_and_rewrites(spark, tmp_path, batches, batched_store,
-                                    write_place):
-    """Three closes, then compact, delete_where and delete_keys."""
+                                    write_place, place):
+    """Three closes, then compact, delete_where and delete_keys. The
+    Spark-placed side also decodes each rewrite's victims as a
+    mapInArrow stage, so victims decoded either way re-encode alike."""
     t, keys = batches
 
     def build(root):
@@ -66,8 +70,9 @@ def test_batched_store_and_rewrites(spark, tmp_path, batches, batched_store,
         yield spark, s.warehouse
 
     steps = {}
-    for placement in ("driver", "spark"):
+    for placement, read in (("driver", "driver"), ("spark", "executor")):
         write_place(placement)
+        place(read)
         steps[placement] = [_state(sp, wh)
                             for sp, wh in build(str(tmp_path / placement))]
     assert steps["driver"] == steps["spark"]
@@ -222,17 +227,51 @@ def test_mixed_files_read_the_same(spark, tmp_path, batches, write_place):
         stores["spark"], keys[0])
 
 
+def _close_jobs(spark, store, group: str) -> int:
+    """The Spark jobs `store.close()` runs."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, "close")
+    try:
+        store.close()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
 @pytest.mark.parametrize("placement", ["driver", "spark"])
 def test_close_jobs(spark, tmp_path, transcripts, write_place, placement):
     """A driver-placed close runs one Spark job (the collect)."""
     write_place(placement)
     s = TranscriptColumnStore(spark, str(tmp_path / "s"), num_rowgroups=2)
     s.add_range(transcripts)
-    sc = spark.sparkContext
-    sc.setJobGroup("close-jobs", "close")
-    try:
-        s.close()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    jobs = len(sc.statusTracker().getJobIdsForGroup("close-jobs"))
+    jobs = _close_jobs(spark, s, f"close-jobs-{placement}")
     assert (jobs == 1) == (placement == "driver"), jobs
+
+
+def test_close_sized_by_decoded_bytes(spark, tmp_path, monkeypatch):
+    """A close is placed by what its batch decodes to, not by its
+    parquet footers: a batch of one repeated text, which dictionaries
+    fold into a few KiB, sizes as its rows' bytes, so a budget between
+    the two sends its close to the Spark stage. Sizing stops reading
+    once past its limit."""
+    decode_mod = importlib.import_module("columnstore_spark.operators.decode")
+    n, text = 20_000, "x" * 200
+    df = spark.range(n).select(
+        F.concat(F.lit("c"), (F.col("id") % 50).cast("string"))
+        .alias("conv_id"),
+        F.col("id").cast("int").alias("turn_idx"),
+        F.lit(text).alias("text"))
+    s = TranscriptColumnStore(spark, str(tmp_path / "s"), num_rowgroups=2)
+    s.add_range(df)
+    batch = s._pending_batches()[0]
+    footers = [pq.read_metadata(p) for p in
+               glob.glob(f"{s._delta_root()}/{batch}/*.parquet")]
+    footer_bytes = sum(md.row_group(i).total_byte_size for md in footers
+                       for i in range(md.num_row_groups))
+    decoded = s._batch_bytes(batch)
+    assert decoded >= n * len(text) > 20 * footer_bytes
+    assert 0 < s._batch_bytes(batch, limit=0) < decoded
+    monkeypatch.setattr(decode_mod, "_DRIVER_WRITE_BYTES",
+                        (footer_bytes + decoded) // 2)
+    assert _close_jobs(spark, s, "close-decoded") > 1
+    assert s.solid_rows().count() == n
